@@ -34,7 +34,6 @@ __all__ = [
     "s2_cell_id",
     "s2_cell_from_fij",
     "s2_cell_id_at",
-    "s2_face_ij_cols",
     "s2_face_ij_attach",
     "quad_key",
     "s2_v2_id",
@@ -88,7 +87,7 @@ def s2_cell_id(lat: pd.Series, lon: pd.Series) -> pd.Series:
 @F.pandas_udf(LongType())
 def s2_cell_from_fij(face: pd.Series, i: pd.Series, j: pd.Series) -> pd.Series:
     """(face, i, j) leaf coords -> v1 leaf cell id (Hilbert interleave only;
-    pairs with s2_face_ij_cols so the trig stays JVM-side)."""
+    pairs with s2_face_ij_attach so the trig stays JVM-side)."""
     ids = _v1.from_face_ij(
         face.to_numpy(dtype=np.int64, na_value=0),
         i.to_numpy(dtype=np.int64, na_value=0),
@@ -276,91 +275,23 @@ def _expr_cache_key(*parts):
     return (id(SparkContext._gateway), *parts)
 
 
-_FIJ_COLS_CACHE: dict = {}
-_QUAD_KEY_CACHE: dict = {}
-
-
-def s2_face_ij_cols(lat, lon):
-    """(face, i, j) leaf coordinates as PURE Catalyst expressions — the full
-    S2 transform (trig -> face argmax -> per-face u,v -> quadratic ST ->
-    truncate-clamp, s2coords.h:321-403) with no Python. Only the Hilbert
-    interleave needs the kernel; joins keyed on (face,i,j) quads skip it
-    entirely so the pandas UDF runs only on join survivors.
-
-    Returns (face, i, j) Columns. Bit-for-bit the kernel's values (verified
-    by the s2_quad_counts oracle query + tests).
-
-    The returned Columns are immutable name-resolved expression trees, so
-    for string column names they are memoized: building this tree costs
-    a few hundred py4j round trips (~0.2 s of pure driver latency per
-    query construction, measured via cProfile — guide §7.3 territory).
-    """
-    if isinstance(lat, str) and isinstance(lon, str):
-        key = _expr_cache_key("fij", lat, lon)
-        hit = _FIJ_COLS_CACHE.get(key)
-        if hit is not None:
-            return hit
-    else:
-        key = None
-    la, lo = _col(lat), _col(lon)
-    phi = F.radians(la)
-    theta = F.radians(lo)
-    x = F.cos(theta) * F.cos(phi)
-    y = F.sin(theta) * F.cos(phi)
-    z = F.sin(phi)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    axis = F.when(
-        (ax > ay) & (ax > az), F.lit(0)
-    ).when(ay > az, F.lit(1)).otherwise(F.lit(2))
-    comp = F.when(axis == 0, x).when(axis == 1, y).otherwise(z)
-    face = F.when(comp < 0, axis + 3).otherwise(axis)
-    u = (
-        F.when(face == 0, y / x)
-        .when(face == 1, -x / y)
-        .when(face == 2, -x / z)
-        .when(face == 3, z / x)
-        .when(face == 4, z / y)
-        .otherwise(-y / z)
-    )
-    v = (
-        F.when(face == 0, z / x)
-        .when(face == 1, z / y)
-        .when(face == 2, -y / z)
-        .when(face == 3, y / x)
-        .when(face == 4, -x / y)
-        .otherwise(-x / z)
-    )
-
-    def st(c):
-        return F.when(c >= 0, 0.5 * F.sqrt(1.0 + 3.0 * c)).otherwise(
-            1.0 - 0.5 * F.sqrt(1.0 - 3.0 * c)
-        )
-
-    def ij(c):
-        return F.least(
-            F.greatest(F.floor(F.lit(float(1 << 30)) * st(c)).cast("long"), F.lit(0)),
-            F.lit((1 << 30) - 1),
-        )
-
-    out = (face.cast("int"), ij(u), ij(v))
-    if key is not None:
-        _FIJ_COLS_CACHE[key] = out
-    return out
-
-
 def s2_face_ij_attach(df, lat, lon, face: str = "f", i: str = "i",
                       j: str = "j"):
-    """Attach (face, i, j) columns via STAGED projections instead of one
-    monolithic expression tree.
+    """Attach (face, i, j) leaf-coordinate columns as PURE Catalyst
+    expressions — the full S2 transform (trig -> face argmax -> per-face
+    u,v -> quadratic ST -> truncate-clamp, s2coords.h:321-403) with no
+    Python; bit-for-bit the kernel's values (verified by the
+    s2_quad_counts oracle query + tests). Only the Hilbert interleave
+    needs the kernel: joins keyed on (face,i,j) quads (quad_key) skip it.
 
-    Same arithmetic as :func:`s2_face_ij_cols` (bit-identical values —
-    the operations are unchanged, only named), but the x/y/z/face/u/v
-    subtrees become intermediate columns referenced by name: the
+    The transform is built as STAGED projections: the x/y/z/face/u/v
+    subtrees become intermediate columns referenced by name, so the
     analyzer sees four small projections instead of one ~10^3-node tree
-    (measured ~0.2 s of driver analysis latency per withColumns on the
-    giant form), and CollapseProject keeps non-cheap trig that is
+    (~0.2 s of driver analysis latency per query construction on the
+    monolithic form), and CollapseProject keeps non-cheap trig that is
     referenced more than once un-inlined, so codegen computes each
-    subtree once."""
+    subtree once. A null or NaN lat/lon yields the valid-looking
+    (2, 0, 0), so callers drop such rows first."""
     la, lo = _col(lat), _col(lon)
     phi = F.radians(la)
     theta = F.radians(lo)
@@ -427,6 +358,9 @@ def s2_face_ij_attach(df, lat, lon, face: str = "f", i: str = "i",
         "__s2x", "__s2y", "__s2z", "__s2face", "__s2u", "__s2v",
         "__s2si", "__s2sj",
     )
+
+
+_QUAD_KEY_CACHE: dict = {}
 
 
 def quad_key(face, i, j, level: int) -> Column:

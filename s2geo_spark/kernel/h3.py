@@ -178,20 +178,6 @@ def _ijk_center_xyz(face, i, j, k, res):
     return p / np.linalg.norm(p, axis=-1, keepdims=True)
 
 
-def _hex2d_to_geo(face, x, y, res):
-    """Inverse of _geo_to_hex2d. `res` may be scalar or per-row array."""
-    gx, gy = _grid_to_gnomonic(x, y, res)
-    p = (
-        FACE_CENTERS[face]
-        + gx[..., None] * FACE_U[face]
-        + gy[..., None] * FACE_V[face]
-    )
-    p /= np.linalg.norm(p, axis=-1, keepdims=True)
-    lat = np.degrees(np.arcsin(np.clip(p[..., 2], -1, 1)))
-    lon = np.degrees(np.arctan2(p[..., 1], p[..., 0]))
-    return lat, lon
-
-
 # ---------------------------------------------------------------------------
 # hex2d <-> IJK (cube coordinates), the spec's rounding algorithm
 # ---------------------------------------------------------------------------
@@ -640,12 +626,6 @@ def _pack_from_ijk_checked(face, res, i, j, k):
     root = _digit_from_unit(*_ijk_normalize(ci, cj, ck))
     valid &= root != 7
     return _pack(face, res, digits, np.where(root == 7, 0, root)), valid
-
-
-def _pack_from_ijk(face, res, i, j, k):
-    """(face, res, ijk) -> index via digit extraction (shared with encode)."""
-    ids, _valid = _pack_from_ijk_checked(face, res, i, j, k)
-    return ids
 
 
 def polyfill(

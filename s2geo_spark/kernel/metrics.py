@@ -70,9 +70,3 @@ def level_for_min_value(deriv: float, value, dim: int = 1):
     ok_finer = metric_value(deriv, lvl + 1, dim) >= value
     lvl = np.where(ok_finer, lvl + 1, lvl)
     return np.clip(lvl, 0, MAX_LEVEL)
-
-
-def level_for_meters(meters, deriv: float = MIN_WIDTH_DERIV):
-    """Convenience: level whose min-width is at least the given distance."""
-    radians = np.asarray(meters, dtype=np.float64) / EARTH_RADIUS_METERS
-    return level_for_min_value(deriv, radians)

@@ -223,12 +223,6 @@ def siti_to_st(si):
     return (1.0 / MAX_SI_TI) * np.asarray(si, dtype=np.float64)
 
 
-def st_to_siti(s):
-    """s -> si via round-half-even (MathUtil::Round<int64>,
-    src/s2/s2coords.h:356-359). numpy.rint rounds half to even, matching."""
-    return np.rint(np.asarray(s, dtype=np.float64) * MAX_SI_TI).astype(np.int64)
-
-
 def face_siti_to_xyz(face, si, ti):
     """(face, si, ti) -> xyz center (not normalized).
 

@@ -31,15 +31,6 @@ from s2geo_spark.operators import spatial
 _SIGN = -(1 << 63)
 
 
-def _rng(df: DataFrame, cell="cell"):
-    return df.withColumns(
-        {
-            "rmin": sf.s2_sortkey(sf.s2_range_min(cell)),
-            "rmax": sf.s2_sortkey(sf.s2_range_max(cell)),
-        }
-    )
-
-
 def cells_contain_points(cellsets: DataFrame, points: DataFrame,
                          set_id: str = "set_id", point_id: str = "point_id") -> DataFrame:
     """(set_id, point_id) pairs where the set's union covers the point's
@@ -55,34 +46,6 @@ def cells_contain_points(cellsets: DataFrame, points: DataFrame,
         .select(set_id, point_id)
         .distinct()
     )
-
-
-def _ancestor_terms(df: DataFrame, set_id: str, min_level: int, max_level: int):
-    """Each cell's ancestors at levels [min_level .. its own level]."""
-    lv = sf.s2_level_expr("cell")
-    anc = F.filter(
-        F.array(*[
-            F.when(F.lit(L) <= lv, sf.s2_parent("cell", L)).otherwise(F.lit(None))
-            for L in range(min_level, max_level + 1)
-        ]),
-        lambda c: c.isNotNull(),
-    )
-    return df.select(set_id, F.explode(anc).alias("term"))
-
-
-def _ancestor_terms_at(df: DataFrame, set_id: str, levels: list):
-    """Each cell's ancestors at exactly the listed levels (<= own level)."""
-    if not levels:
-        return df.select(set_id, F.col("cell").alias("term")).limit(0)
-    lv = sf.s2_level_expr("cell")
-    anc = F.filter(
-        F.array(*[
-            F.when(F.lit(L) <= lv, sf.s2_parent("cell", L)).otherwise(F.lit(None))
-            for L in sorted(levels)
-        ]),
-        lambda c: c.isNotNull(),
-    )
-    return df.select(set_id, F.explode(anc).alias("term"))
 
 
 def _tagged_terms(df: DataFrame, id_col: str, anc_levels: list) -> DataFrame:

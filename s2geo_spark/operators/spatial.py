@@ -4,16 +4,19 @@ The scalable plan (SURVEY.md §3.3, reference S2RegionTermIndexer,
 src/s2/s2region_term_indexer.cc:121-289):
 
   polygon side  — covering cells at levels [min_level .. max_level]
-                  ("index terms"), split interior vs boundary
-  point side    — ancestors of the leaf cell at every level in that range
-                  ("query terms": pure int64 column math, no UDF)
-  candidates    — ONE hash equi-join on the cell id (broadcast when the
+                  ("index terms"), each packed as a (face, level, i, j)
+                  quad key (cell_quads), split interior vs boundary
+  point side    — (face, i, j) leaf coordinates from pure Catalyst trig
+                  (functions.s2_face_ij_attach), exploded to the quad key
+                  at every level the index uses ("query terms": no UDF)
+  candidates    — ONE hash equi-join on the quad key (broadcast when the
                   polygon side is small, shuffle+AQE-skew otherwise)
-  exact residual— only pairs that matched a *boundary* cell run the exact
-                  crossing-parity PIP (Arrow-batched, grouped by polygon);
-                  interior-cell matches are contained by construction
-                  (the reference's contains_center fast path,
-                  src/s2/s2shape_index.h S2ClippedShape)
+  exact residual— polygons: only pairs that matched a *boundary* cell run
+                  the exact crossing-parity PIP against that cell's
+                  clipped edges (Arrow-batched); interior-cell matches are
+                  contained by construction (the reference's
+                  contains_center fast path, src/s2/s2shape_index.h
+                  S2ClippedShape). Caps: a chord-distance Catalyst filter.
 
 Term-indexer defaults match the reference: max_cells=8, min_level=4,
 max_level=16, level_mod=1 (src/s2/s2region_term_indexer.cc:96-102).
@@ -28,7 +31,7 @@ from pyspark.sql import functions as F
 
 from s2geo_spark import functions as sf
 from s2geo_spark.kernel import cellid_v1 as v1
-from s2geo_spark.kernel import coverer, loops, regions
+from s2geo_spark.kernel import coverer, regions
 
 TERM_MIN_LEVEL = 4
 TERM_MAX_LEVEL = 16
@@ -55,82 +58,21 @@ def _gate_broadcast(df: DataFrame, est_bytes: int, force):
     return F.broadcast(df) if force else df
 
 
-# ---------------------------------------------------------------------------
-# Polygon prep: loops -> covering table (small layers: driver-side NumPy)
-# ---------------------------------------------------------------------------
-
-_PREP_CACHE: dict = {}
-
-
-def prepare_polygons(
-    spark: SparkSession,
-    polygons: dict[int, np.ndarray],
-    min_level: int = TERM_MIN_LEVEL,
-    max_level: int = TERM_MAX_LEVEL,
-    max_cells: int = TERM_MAX_CELLS,
-) -> tuple[DataFrame, dict[int, loops.PreparedLoop]]:
-    """polygons: {polygon_id: (m,3) vertex array (CCW loop)}.
-
-    Returns (covering_df, prepared) where covering_df has columns
-    (polygon_id long, cell long, is_interior boolean) — the Spark-side
-    shape index — and prepared holds the exact-test machinery.
-
-    Driver-side results are memoized per (polygon set, options): polygon
-    prep is the one-time build side of the join (in production the covering
-    table is materialized to storage and reused across scans, SURVEY §3.2).
-    """
-    import hashlib
-
-    # full content digest + the session's applicationId (unique per
-    # SparkSession, unlike id(), which CPython reuses after GC —
-    # VERDICT r2 wrong-#1)
-    digest = hashlib.sha1()
-    for pid, vs in sorted(polygons.items()):
-        digest.update(str(pid).encode())
-        digest.update(vs.tobytes())
-    key = (
-        digest.hexdigest(),
-        min_level,
-        max_level,
-        max_cells,
-        spark.sparkContext.applicationId,
+def cell_quads(cells) -> tuple[np.ndarray, np.ndarray]:
+    """Cell ids (int64 bits) -> (quad key int64, level int32), packed
+    exactly like functions.quad_key, so an index cell equi-joins the scan
+    side's term at its own level."""
+    cells_u = np.asarray(cells, dtype=np.int64).view(np.uint64)
+    lvl = v1.level(cells_u)
+    f, i, j = v1.to_face_ij_orientation(cells_u)
+    s = (30 - lvl).astype(np.int64)
+    quad = (
+        f.astype(np.int64) * (1 << 58)
+        + lvl.astype(np.int64) * (1 << 53)
+        + (i >> s) * (1 << 26)
+        + (j >> s)
     )
-    if key in _PREP_CACHE:
-        return _PREP_CACHE[key]
-    prepared = {pid: loops.PreparedLoop(vs) for pid, vs in polygons.items()}
-    rows = []
-    for pid, lp in prepared.items():
-        cov = coverer.get_covering(
-            lp, max_cells=max_cells, min_level=min_level, max_level=max_level
-        )
-        # interior flag per covering cell: cell fully inside the loop ->
-        # candidate pairs through it skip the exact PIP (contains_center
-        # fast path, s2shape_index.h)
-        inside_mask = lp.contains_cells(cov)
-        for cid, is_int in zip(cov, inside_mask):
-            rows.append((pid, int(np.int64(np.uint64(cid))), bool(is_int)))
-    pdf = pd.DataFrame(rows, columns=["polygon_id", "cell", "is_interior"])
-    pdf = pdf.drop_duplicates()
-    df = spark.createDataFrame(pdf)
-    _PREP_CACHE[key] = (df, prepared)
-    return df, prepared
-
-
-def point_terms(
-    points: DataFrame, cell_col: str = "cell", levels=None
-) -> DataFrame:
-    """Explode each point's ancestors — the query terms.
-
-    Pure column math (s2_parent is a mask+or per level): stays in
-    whole-stage codegen; the explode is narrow. `levels` restricts the
-    fan-out to levels that actually occur in the index side (terms at
-    absent levels can never match — semantically identical, and the explode
-    traffic is the join's dominant memory cost at scale).
-    """
-    if levels is None:
-        levels = range(TERM_MIN_LEVEL, TERM_MAX_LEVEL + 1)
-    ancestors = F.array(*[sf.s2_parent(cell_col, L) for L in sorted(levels)])
-    return points.withColumn("term", F.explode(ancestors))
+    return quad, lvl.astype(np.int32)
 
 
 def memo_stats(df: DataFrame, key: str, compute):
@@ -151,266 +93,6 @@ def memo_stats(df: DataFrame, key: str, compute):
     if key not in cache:
         cache[key] = compute()
     return cache[key]
-
-
-def covering_levels(covering: DataFrame) -> list[int]:
-    """Distinct cell levels present in a covering table (tiny aggregate,
-    memoized per DataFrame object)."""
-
-    def _compute():
-        rows = (
-            covering.select(sf.s2_level_expr("cell").alias("lv"))
-            .distinct()
-            .collect()
-        )
-        return sorted(int(r["lv"]) for r in rows)
-
-    return memo_stats(covering, "levels", _compute)
-
-
-def contains_join(
-    points: DataFrame,
-    covering: DataFrame,
-    prepared: dict[int, loops.PreparedLoop],
-    point_id: str = "point_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    broadcast_covering: bool | None = None,
-    rebalance: bool = True,
-) -> DataFrame:
-    """points (id, lat, lon) x polygons -> (point columns..., polygon_id).
-
-    Exact semantics: SEMI_OPEN vertex model, identical to the reference's
-    S2ContainsPointQuery default (s2contains_point_query.h:62-65).
-    broadcast_covering=None (default) size-gates the broadcast against
-    SPATIAL_BCAST_LIMIT; past the gate the candidates join shuffles on the
-    cell id.
-    """
-    if "cell" in points.columns:
-        # caller already encoded (and can carry the column through)
-        pts = points.filter(F.col("cell") != 0)
-    else:
-        pts = points.withColumn("cell", sf.s2_cell_id(lat, lon)).filter(
-            F.col("cell") != 0
-        )
-    # one pass over the covering: distinct levels AND the row count the
-    # broadcast gate needs (covering_levels alone would run the same job
-    # without the count — no extra job vs the ungated code); memoized on
-    # the covering object so repeat joins skip the job entirely
-    levels, cov_n = memo_stats(
-        covering,
-        "cov_stats",
-        lambda: (
-            lambda r: (sorted(int(v) for v in r["lvls"]), int(r["n"]))
-        )(
-            covering.agg(
-                F.collect_set(sf.s2_level_expr("cell")).alias("lvls"),
-                F.count("*").alias("n"),
-            ).collect()[0]
-        ),
-    )
-    terms = point_terms(pts, levels=levels)
-    cov = covering.withColumnRenamed("cell", "cov_cell")
-    # (polygon_id, cell, is_interior) ~ 40B/row incl. row overhead
-    cov = _gate_broadcast(cov, cov_n * 40, broadcast_covering)
-    cand = terms.join(cov, terms["term"] == cov["cov_cell"], "inner").drop(
-        "term", "cov_cell"
-    )
-
-    # Single pass: interior-cell matches stream through untouched (the
-    # contains_center fast path); only boundary-cell rows run the exact
-    # crossing-parity PIP. One mapInPandas, no plan branch — the upstream
-    # scan/encode runs exactly once.
-    poly_data = {
-        int(pid): (lp.vertices, bool(lp.origin_inside))
-        for pid, lp in prepared.items()
-    }
-    bc = points.sparkSession.sparkContext.broadcast(poly_data)
-    out_schema = cand.drop(lat, lon, "is_interior").schema
-    lat_name, lon_name = lat, lon
-
-    def pip_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as _np
-
-        from s2geo_spark.kernel import s2coords as _sc
-
-        keep = pdf["is_interior"].to_numpy(dtype=bool).copy()
-        boundary = pdf.loc[~keep]
-        for pid, grp in boundary.groupby("polygon_id"):
-            verts, _origin_inside = bc.value[int(pid)]
-            lp = _get_cached_loop(int(pid), verts)
-            x, y, z = _sc.latlng_degrees_to_xyz(
-                grp[lat_name].to_numpy(), grp[lon_name].to_numpy()
-            )
-            pts3 = _np.stack([x, y, z], axis=1)
-            inside = lp.contains_points(pts3)
-            keep[pdf.index.get_indexer(grp.index)] = inside
-        return pdf.loc[keep].drop(columns=[lat_name, lon_name, "is_interior"])
-
-    def pip_iter(batches):
-        for pdf in batches:
-            yield pip_batch(pdf)
-
-    if rebalance:
-        # explicit skew handling: candidates cluster in hot cells (dense
-        # urban tiles), so the exact-PIP work is wildly uneven across input
-        # splits — one cheap round-robin shuffle of the (small) candidate
-        # set balances the Python stage (north_rule skew splitting)
-        cand = cand.repartition(
-            cand.sparkSession.sparkContext.defaultParallelism * 2
-        )
-    return cand.mapInPandas(pip_iter, schema=out_schema)
-
-
-_LOOP_CACHE: dict = {}
-
-
-def _get_cached_loop(pid: int, verts):
-    """Per-worker PreparedLoop cache. Keyed by polygon id + the FULL
-    vertex digest so distinct layers reusing ids can never collide
-    (VERDICT r2 wrong-#1: prefix fingerprints are a wrong-answer risk)."""
-    import hashlib
-
-    key = (pid, hashlib.sha1(np.ascontiguousarray(verts).tobytes()).hexdigest())
-    lp = _LOOP_CACHE.get(key)
-    if lp is None:
-        lp = loops.PreparedLoop(verts)
-        _LOOP_CACHE[key] = lp
-    return lp
-
-
-def covering_quads(covering_pdf) -> "pd.DataFrame":
-    """Covering table (polygon_id, cell int64-bits, is_interior) -> quad-key
-    rows using the same packing as functions.quad_key (vectorized kernel;
-    runs worker-side inside contains_join_quads' prep mapInPandas)."""
-    cells = covering_pdf["cell"].to_numpy().view(np.uint64)
-    lvl = v1.level(cells)
-    f, i, j = v1.to_face_ij_orientation(cells)
-    s = (30 - lvl).astype(np.int64)
-    iq = i >> s
-    jq = j >> s
-    key = (
-        f.astype(np.int64) * (1 << 58)
-        + lvl.astype(np.int64) * (1 << 53)
-        + iq * (1 << 26)
-        + jq
-    )
-    out = covering_pdf.copy()
-    out["quad"] = key
-    out["lvl"] = lvl
-    return out
-
-
-def contains_join_quads(
-    points: DataFrame,
-    covering: DataFrame,
-    prepared: dict[int, loops.PreparedLoop],
-    point_id: str = "point_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    rebalance: bool = True,
-    emit_cell: bool = False,
-    broadcast_covering: bool | None = None,
-) -> DataFrame:
-    """Containment join keyed on JVM-computed (face,i,j) quads — identical
-    semantics to :func:`contains_join` (verified by tests) but the pandas
-    UDF path is gone from the scan side: the Hilbert encode is not needed
-    for the equi-join, only (face, i, j), which the Catalyst expressions in
-    functions.s2_face_ij_cols produce. Python touches only the exact-PIP
-    residual (boundary candidates). Returns point columns + polygon_id
-    (+ f/i/j columns; with emit_cell=True also the leaf `cell`, Hilbert-
-    encoded inside the same Python stage — no extra Arrow round trip).
-    """
-    import pandas as _pd
-
-    # distributed prep (VERDICT r2 next-#7): quad keys are computed by a
-    # mapInPandas over the covering table itself — no toPandas(), no
-    # id()-keyed cache; the distinct-levels collect is a tiny aggregate
-    # (same pattern as contains_join_indexed).
-    def quadify(batches):
-        for pdf in batches:
-            out = covering_quads(pdf)
-            out["lvl"] = out["lvl"].astype("int32")
-            yield out[["polygon_id", "quad", "is_interior", "lvl"]]
-
-    qdf = covering.mapInPandas(
-        quadify, schema="polygon_id long, quad long, is_interior boolean, lvl int"
-    )
-    # one pass over the covering: distinct levels AND the row count the
-    # broadcast gate needs (was a levels-only collect + unconditional
-    # hint); memoized on the INPUT covering object (qdf is rebuilt per
-    # call, but its stats are a pure function of the covering)
-    levels, qdf_n = memo_stats(
-        covering,
-        "quad_stats",
-        lambda: (
-            lambda r: (sorted(int(v) for v in r["lvls"]), int(r["n"]))
-        )(
-            qdf.agg(
-                F.collect_set("lvl").alias("lvls"), F.count("*").alias("n")
-            ).collect()[0]
-        ),
-    )
-    cov_df = qdf.drop("lvl")
-
-    pts = sf.s2_face_ij_attach(points, lat, lon)
-    quads = F.array(*[sf.quad_key("f", "i", "j", L) for L in levels])
-    terms = pts.withColumn("term", F.explode(quads))
-    cov_side = _gate_broadcast(cov_df, qdf_n * 40, broadcast_covering)
-    cand = terms.join(
-        cov_side, terms["term"] == cov_df["quad"], "inner"
-    ).drop("term", "quad")
-
-    poly_data = {
-        int(pid): (lp.vertices, bool(lp.origin_inside))
-        for pid, lp in prepared.items()
-    }
-    bc = points.sparkSession.sparkContext.broadcast(poly_data)
-    from pyspark.sql.types import LongType, StructField
-
-    base_schema = cand.drop("is_interior").schema
-    out_schema = (
-        base_schema.add(StructField("cell", LongType())) if emit_cell else base_schema
-    )
-    lat_name, lon_name = lat, lon
-
-    def pip_batch(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        import numpy as _np
-
-        from s2geo_spark.kernel import cellid_v1 as _v1
-        from s2geo_spark.kernel import s2coords as _sc
-
-        keep = pdf["is_interior"].to_numpy(dtype=bool).copy()
-        boundary = pdf.loc[~keep]
-        for pid, grp in boundary.groupby("polygon_id"):
-            verts, _oi = bc.value[int(pid)]
-            lp = _get_cached_loop(int(pid), verts)
-            x, y, z = _sc.latlng_degrees_to_xyz(
-                grp[lat_name].to_numpy(), grp[lon_name].to_numpy()
-            )
-            inside = lp.contains_points(_np.stack([x, y, z], axis=1))
-            keep[pdf.index.get_indexer(grp.index)] = inside
-        out = pdf.loc[keep].drop(columns=["is_interior"])
-        if emit_cell:
-            # Hilbert interleave on survivors only, in the same stage
-            out = out.assign(
-                cell=_v1.from_face_ij(
-                    out["f"].to_numpy(dtype=np.int64),
-                    out["i"].to_numpy(dtype=np.int64),
-                    out["j"].to_numpy(dtype=np.int64),
-                ).view(np.int64)
-            )
-        return out
-
-    def pip_iter(batches):
-        for pdf in batches:
-            yield pip_batch(pdf)
-
-    if rebalance:
-        cand = cand.repartition(
-            cand.sparkSession.sparkContext.defaultParallelism * 2
-        )
-    return cand.mapInPandas(pip_iter, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -461,7 +143,6 @@ def build_index_df(
     )
 
     def per_poly(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from s2geo_spark.kernel import cellid_v1 as _v1
         from s2geo_spark.kernel import shapeindex as _si
 
         out = []
@@ -477,23 +158,14 @@ def build_index_df(
                 max_cells=max_cells,
                 max_edges_per_cell=max_edges_per_cell,
             )
-            cells_u = idx["cell"].view(np.uint64)
-            lvl = _v1.level(cells_u)
-            f, i, j = _v1.to_face_ij_orientation(cells_u)
-            s = (30 - lvl).astype(np.int64)
-            quad = (
-                f.astype(np.int64) * (1 << 58)
-                + lvl.astype(np.int64) * (1 << 53)
-                + (i >> s) * (1 << 26)
-                + (j >> s)
-            )
+            quad, lvl = cell_quads(idx["cell"])
             out.append(
                 pd.DataFrame(
                     {
                         "polygon_id": row["polygon_id"],
                         "cell": idx["cell"],
                         "quad": quad,
-                        "lvl": lvl.astype(np.int32),
+                        "lvl": lvl,
                         "is_interior": idx["is_interior"],
                         "contains_center": idx["contains_center"],
                         "edges": [e.ravel().tolist() for e in idx["edges"]],
@@ -548,10 +220,14 @@ def localize_index(
     unconditional: no recompute, no cache entry to lose, and the
     broadcast build reads driver-local rows. Falls back to persist() when
     the table is unexpectedly large (> max_rows), preserving the
-    distributed path's semantics.
+    distributed path's semantics, and when two rows share a (polygon_id,
+    cell) key (e.g. a union of index tables): the localized detail map
+    holds one payload per key, while the detail join emits one row per
+    matching detail row.
     """
     rows = index_df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:  # too big to hold on the driver: keep lazy
+    keys = {(r["polygon_id"], r["cell"]) for r in rows}
+    if len(rows) > max_rows or len(keys) < len(rows):  # keep lazy
         df = index_df.persist()
         df.count()
         return df
@@ -612,8 +288,9 @@ def contains_join_indexed(
          run the anchored crossing parity against <=max_edges_per_cell
          clipped edges — work scales with edges-per-cell, not polygon size
          (s2loop.cc:549-601 indexed walk).
-    SEMI_OPEN vertex model, identical to contains_join (tests assert
-    equality against the brute path).
+    SEMI_OPEN vertex model: rows are bit-identical to the kernel's
+    PreparedLoop.contains_points on every side of both gates (localized
+    vs persisted index, broadcast vs shuffle; tests force each side).
 
     broadcast_index=None (default) size-gates BOTH broadcasts against
     SPATIAL_BCAST_LIMIT (slim: ~40B/row; detail: ~48B/row + 9B/edge
@@ -807,9 +484,10 @@ def cap_contains_join(
 ) -> DataFrame:
     """points x caps [(cap_id, lat, lon, radius_deg)] -> rows + cap_id.
 
-    Plan: per-cap covering (driver NumPy, broadcast) -> ancestor equi-join
-    -> exact chord-distance filter as a Catalyst expression (no UDF in the
-    residual — chord^2 <= r^2 is plain arithmetic).
+    Plan: per-cap covering (driver NumPy, broadcast as quad keys) ->
+    quad-key equi-join against the scan side's (face,i,j) terms -> exact
+    chord-distance filter. No UDF anywhere: the terms are Catalyst trig
+    and chord^2 <= r^2 is plain arithmetic. Null/NaN lat or lon rows drop.
     """
     spark = points.sparkSession
     rows = []
@@ -832,30 +510,29 @@ def cap_contains_join(
                     cap.length2,
                 )
             )
-    cov_df = spark.createDataFrame(
-        pd.DataFrame(
-            rows, columns=["cap_id", "cell", "cx", "cy", "cz", "len2"]
-        )
+    cov_pdf = pd.DataFrame(
+        rows, columns=["cap_id", "cell", "cx", "cy", "cz", "len2"]
     )
+    quad, lvl = cell_quads(cov_pdf.pop("cell").to_numpy())
+    cov_df = spark.createDataFrame(cov_pdf.assign(quad=quad))
     pts = xyz_cols(
-        points.withColumn("cell", sf.s2_cell_id(lat, lon)).filter(F.col("cell") != 0),
+        sf.s2_face_ij_attach(points.dropna(subset=[lat, lon]), lat, lon),
         lat,
         lon,
     )
-    # restrict the ancestor fan-out to levels the covering actually uses
-    # (terms at absent levels can never match — VERDICT r1 fan-out note)
-    cov_cells = np.array([r[1] for r in rows], dtype=np.int64).view(np.uint64)
-    levels = sorted(set(v1.level(cov_cells).tolist()))
-    terms = point_terms(pts, levels=levels)
-    cand = terms.join(F.broadcast(cov_df), terms["term"] == cov_df["cell"], "inner")
+    # explode only the levels the covering uses (terms at absent levels
+    # can never match — VERDICT r1 fan-out note)
+    levels = sorted(set(lvl.tolist()))
+    quads = F.array(*[sf.quad_key("f", "i", "j", L) for L in levels])
+    terms = pts.withColumn("term", F.explode(quads))
+    cand = terms.join(F.broadcast(cov_df), terms["term"] == cov_df["quad"], "inner")
     chord2 = (
         (F.col("px") - F.col("cx")) ** 2
         + (F.col("py") - F.col("cy")) ** 2
         + (F.col("pz") - F.col("cz")) ** 2
     )
-    return (
-        cand.filter(chord2 <= F.col("len2"))
-        .drop("term", "cell", "cx", "cy", "cz", "len2", "px", "py", "pz")
+    return cand.filter(chord2 <= F.col("len2")).drop(
+        "term", "quad", "f", "i", "j", "cx", "cy", "cz", "len2", "px", "py", "pz"
     )
 
 

@@ -127,17 +127,6 @@ def adaptive_partitioning(
     return pdf
 
 
-def hot_keys(df: DataFrame, key_col: str, threshold: int) -> list:
-    """Keys whose row count exceeds threshold (the salting candidates)."""
-    rows = (
-        df.groupBy(key_col)
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > threshold)
-        .collect()
-    )
-    return [r[key_col] for r in rows]
-
-
 def salted_join(
     probe: DataFrame,
     build: DataFrame,

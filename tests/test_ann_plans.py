@@ -75,8 +75,10 @@ class TestPlans:
              "lat": RNG.uniform(-60, 60, 100), "lon": RNG.uniform(-180, 180, 100)}
         )
         pts = spark.createDataFrame(pdf)
-        cov_df, prepared = spatial.prepare_polygons(spark, fx.pip_loops())
-        plan = spatial.contains_join(pts, cov_df, prepared)._jdf.queryExecution().executedPlan().toString()
+        index_df = spatial.build_index_df(
+            spatial.polygons_to_df(spark, fx.pip_loops())
+        )
+        plan = spatial.contains_join_indexed(pts, index_df)._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan, plan[:2000]
         assert "SortMergeJoin" not in plan
 
@@ -95,12 +97,12 @@ class TestPlans:
 
         pages = pages_src.synth_pages(spark, 500)
         geo = pages_src.extract_geo(pages).filter(F.col("lat").isNotNull())
-        pts = geo.select(
-            F.col("url").alias("point_id"), "lat", "lon",
-            sf.s2_cell_id("lat", "lon").alias("cell"),
+        pts = geo.select(F.col("url").alias("point_id"), "lat", "lon")
+        index_df = spatial.localize_index(
+            spark,
+            spatial.build_index_df(spatial.polygons_to_df(spark, fx.pip_loops())),
         )
-        cov_df, prepared = spatial.prepare_polygons(spark, fx.pip_loops())
-        joined = spatial.contains_join(pts, cov_df, prepared)
+        joined = spatial.contains_join_indexed(pts, index_df, emit_cell=True)
         tiles = (
             joined.withColumn("tile", sf.tile_assign("cell", 10))
             .groupBy("polygon_id", "tile")

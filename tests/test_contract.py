@@ -97,3 +97,15 @@ def test_entry_runs(spark):
     assert len(rows) >= 0
     assert set(df.columns) == {"polygon_id", "tile_token", "pages"}
     assert len(rows) > 0  # the fixture polygons do catch synthetic points
+
+
+def test_cap_join_has_no_python_stage(spark):
+    """s2_cap_join keys its scan side on Catalyst (face,i,j) quad terms:
+    no Python operator anywhere in the executed plan."""
+    from s2geo_spark import contract
+
+    df = contract.q_cap_join(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for op in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert op not in plan, (op, plan[:2000])

@@ -51,11 +51,16 @@ POLYGONS = {
 }
 
 
+def _indexed_join(spark, points, polygons):
+    return spatial.contains_join_indexed(
+        points, spatial.build_index_df(spatial.polygons_to_df(spark, polygons))
+    )
+
+
 class TestContainsJoin:
     def test_matches_bruteforce(self, spark, points_df, points_pdf):
-        cov_df, prepared = spatial.prepare_polygons(spark, POLYGONS)
         got = (
-            spatial.contains_join(points_df, cov_df, prepared)
+            _indexed_join(spark, points_df, POLYGONS)
             .select("point_id", "polygon_id")
             .toPandas()
             .sort_values(["point_id", "polygon_id"])
@@ -107,9 +112,8 @@ class TestContainsJoin:
             }
         )
         df = spark.createDataFrame(pdf)
-        cov_df, prepared = spatial.prepare_polygons(spark, {7: verts})
         got = set(
-            spatial.contains_join(df, cov_df, prepared)
+            _indexed_join(spark, df, {7: verts})
             .select("point_id")
             .toPandas()["point_id"]
         )
@@ -145,6 +149,14 @@ class TestCapJoin:
                 want_pairs.add((int(points_pdf["point_id"].iloc[idx]), cap_id))
         got_pairs = set(zip(got["point_id"], got["cap_id"]))
         assert got_pairs == want_pairs
+
+    def test_null_coordinates_drop(self, spark):
+        df = spark.createDataFrame(
+            [(0, 47.0, 8.0), (1, None, 8.0), (2, float("nan"), 8.0), (3, 47.0, None)],
+            "point_id long, lat double, lon double",
+        )
+        got = spatial.cap_contains_join(df, [(0, 47.0, 8.0, 1.0)]).collect()
+        assert [(r["point_id"], r["cap_id"]) for r in got] == [(0, 0)]
 
 
 class TestKnnJoin:
@@ -279,6 +291,115 @@ class TestContainsJoinIndexed:
             pdf["lat"].to_numpy(), pdf["lon"].to_numpy()
         ).view(np.int64)
         assert (pdf["cell"].to_numpy() == want).all()
+
+
+def _star_loop(rng, clat, clon, radius_deg, k):
+    """Seeded star-shaped (generally non-convex) CCW loop around a center."""
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, k))
+    r = radius_deg * rng.uniform(0.3, 1.0, k)
+    lat = clat + r * np.sin(ang)
+    lon = clon + r * np.cos(ang) / np.cos(np.radians(clat))
+    return regions.latlng_to_unit(lat, lon)
+
+
+def _join_rows(points, index_df, **kw):
+    return sorted(
+        (int(r["point_id"]), int(r["polygon_id"]))
+        for r in spatial.contains_join_indexed(points, index_df, **kw)
+        .select("point_id", "polygon_id")
+        .collect()
+    )
+
+
+class TestContainsParity:
+    """The one containment path against the kernel ground truth
+    (PreparedLoop.contains_points) on every side of its two gates:
+    {localized, persisted index} x {size-gated, forced-shuffle joins}."""
+
+    def test_random_loops_all_gate_sides(self, spark):
+        rng = np.random.default_rng(2024)
+        polys, centers = {}, []
+        for pid in range(1, 5):
+            clat, clon = rng.uniform(-60, 60), rng.uniform(-180, 180)
+            polys[pid] = _star_loop(rng, clat, clon, 3.0, int(rng.integers(5, 40)))
+            centers.append((clat, clon, 3.0))
+        # loop with a hole (XOR of nested loops)
+        polys[5] = [
+            loops.make_regular_loop(20.0, 30.0, 4.0, 48),
+            _star_loop(rng, 20.0, 30.0, 2.0, 17),
+        ]
+        centers.append((20.0, 30.0, 4.0))
+        lat, lon = [], []
+        for clat, clon, r in centers:
+            lat.append(clat + rng.uniform(-1.3 * r, 1.3 * r, 500))
+            lon.append(clon + rng.uniform(-1.3 * r, 1.3 * r, 500) / np.cos(np.radians(clat)))
+        v = rng.normal(size=(3, 500))
+        v /= np.sqrt((v * v).sum(axis=0))
+        lat.append(np.degrees(np.arcsin(v[2])))
+        lon.append(np.degrees(np.arctan2(v[1], v[0])))
+        # every loop vertex too: SEMI_OPEN must pick exactly one side
+        for vs in polys.values():
+            for lp in vs if isinstance(vs, list) else [vs]:
+                vlat, vlon = sc.xyz_to_latlng_degrees(lp[:, 0], lp[:, 1], lp[:, 2])
+                lat.append(vlat)
+                lon.append(vlon)
+        pdf = pd.DataFrame({"lat": np.concatenate(lat), "lon": np.concatenate(lon)})
+        pdf.insert(0, "point_id", np.arange(len(pdf), dtype=np.int64))
+        pts = spark.createDataFrame(pdf)
+
+        x, y, z = sc.latlng_degrees_to_xyz(pdf["lat"].to_numpy(), pdf["lon"].to_numpy())
+        xyz = np.stack([x, y, z], axis=1)
+        want = []
+        for pid, vs in polys.items():
+            inside = np.zeros(len(pdf), dtype=bool)
+            for lp in vs if isinstance(vs, list) else [vs]:
+                inside ^= loops.PreparedLoop(lp).contains_points(xyz)
+            want += [(int(i), pid) for i in np.nonzero(inside)[0]]
+        want.sort()
+        assert len(want) > 300
+
+        built = spatial.build_index_df(spatial.polygons_to_df(spark, polys))
+        persisted = built.persist()
+        localized = spatial.localize_index(spark, built)
+        assert hasattr(localized, "_s2_local_rows")
+        assert not hasattr(persisted, "_s2_local_rows")
+        sides = {"localized": localized, "persisted": persisted}
+        for name, idx in sides.items():
+            assert _join_rows(pts, idx, broadcast_index=None) == want, name
+        # forced shuffle: no hint, and no automatic broadcast either
+        auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            for name, idx in sides.items():
+                shuffled = spatial.contains_join_indexed(pts, idx, broadcast_index=False)
+                plan = shuffled._jdf.queryExecution().executedPlan().toString()
+                assert "BroadcastHashJoin" not in plan, name
+                assert _join_rows(pts, idx, broadcast_index=False) == want, name
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
+            persisted.unpersist()
+
+    def test_duplicate_keys_localize_like_persist(self, spark, points_df):
+        from s2geo_spark.sources import fixtures as fx
+
+        def build(polys):
+            return spatial.build_index_df(spatial.polygons_to_df(spark, polys))
+
+        small = {1: loops.make_regular_loop(47.0, 8.0, 0.7, 24)}
+        big = {1: loops.make_regular_loop(47.0, 8.0, 1.6, 24)}
+        # small twice: duplicate (polygon_id, cell) keys are guaranteed
+        union = build(small).unionByName(build(big)).unionByName(build(small))
+        keys = union.select("polygon_id", "cell")
+        assert keys.distinct().count() < keys.count()
+        localized = spatial.localize_index(spark, union)
+        assert not hasattr(localized, "_s2_local_rows")
+        reference = build(small).unionByName(build(big)).unionByName(build(small))
+        got = _join_rows(points_df, localized)
+        assert got == _join_rows(points_df, reference) and len(got) > 0
+        localized.unpersist()
+        # the fixture layers behind the flagship and s2_pip_* still localize
+        for layer in (fx.pip_loops(), fx.large_pip_loops()):
+            assert hasattr(spatial.localize_index(spark, build(layer)), "_s2_local_rows")
 
 
 class TestKnnSkewed:

@@ -1,7 +1,7 @@
 """Round-3 robustness fixes (VERDICT r2 'what's wrong' + ADVICE r2):
 content-keyed caches, size-gated jaccard broadcasts, covering-intersection
 boolean candidates, unpersisted kNN round caches, wide-radius expansion,
-explicit winding orientations, distributed quads prep."""
+explicit winding orientations, distributed multi-polygon index prep."""
 
 import numpy as np
 import pandas as pd
@@ -65,17 +65,6 @@ class TestCacheKeys:
         assert got["small"] == _brute_member(pdf, small)
         assert got["big"] == _brute_member(pdf, big)
         assert got["small"] < got["big"]  # strictly nested fixtures
-
-    def test_prepare_polygons_prefix_collision(self, spark):
-        """Two layers identical in the first 64 bytes of the vertex buffer
-        (old cache fingerprint) but different after: prep must not alias."""
-        a = loops.make_regular_loop(10.0, 10.0, 1.0, 12)
-        b = a.copy()
-        b[5:] = loops.make_regular_loop(10.0, 10.0, 2.5, 12)[5:]
-        assert a.tobytes()[:64] == b.tobytes()[:64]
-        _, prep_a = spatial.prepare_polygons(spark, {9: a})
-        _, prep_b = spatial.prepare_polygons(spark, {9: b})
-        assert not np.array_equal(prep_a[9].vertices, prep_b[9].vertices)
 
 
 class TestBooleanDefaultPairs:
@@ -273,15 +262,17 @@ class TestWindingOrientations:
 
 class TestQuadsDistributedPrep:
     def test_parity_with_contains_join(self, spark):
+        """A multi-polygon table goes through the distributed
+        (applyInPandas) index prep and must match the brute oracle."""
         pts, pdf = _grid_points(spark, 47.0, 8.0, 3.0, 400)
         polys = {
             1: loops.parse_loop_text("46:7, 46:9, 48:9, 48:7"),
             2: loops.make_regular_loop(47.0, 8.0, 1.5, 16),
         }
-        cov_df, prepared = spatial.prepare_polygons(spark, polys)
+        idx = spatial.build_index_df(spatial.polygons_to_df(spark, polys))
         got = set(
             (int(r["point_id"]), int(r["polygon_id"]))
-            for r in spatial.contains_join_quads(pts, cov_df, prepared)
+            for r in spatial.contains_join_indexed(pts, idx)
             .select("point_id", "polygon_id")
             .collect()
         )

@@ -175,7 +175,7 @@ class TestDensityPartitionerDistributed:
 
 
 class TestSpatialSizeGate:
-    """VERDICT r3 next-#4: the quads/indexed join broadcasts must be
+    """VERDICT r3 next-#4: the indexed join broadcasts must be
     size-gated (pattern: TestJaccardSizeGate) — parity both sides of the
     gate, plan-asserted."""
 
@@ -204,51 +204,4 @@ class TestSpatialSizeGate:
         finally:
             spatial.SPATIAL_BCAST_LIMIT = old
         idx.unpersist()
-        assert got == base and len(base) > 0
-
-    def test_quads_gate(self, spark):
-        pts = _pts(spark)
-        cov_df, prepared = spatial.prepare_polygons(spark, _layer(spark))
-        dflt = spatial.contains_join_quads(pts, cov_df, prepared)
-        opt = dflt._jdf.queryExecution().optimizedPlan().toString()
-        assert "ResolvedHint" in opt or "broadcast" in opt.lower()
-        base = sorted(
-            (int(r["point_id"]), int(r["polygon_id"]))
-            for r in dflt.select("point_id", "polygon_id").collect()
-        )
-        old = spatial.SPATIAL_BCAST_LIMIT
-        spatial.SPATIAL_BCAST_LIMIT = 1
-        try:
-            fb = spatial.contains_join_quads(pts, cov_df, prepared)
-            opt2 = fb._jdf.queryExecution().optimizedPlan().toString()
-            assert "ResolvedHint" not in opt2 and "strategy=broadcast" not in opt2
-            got = sorted(
-                (int(r["point_id"]), int(r["polygon_id"]))
-                for r in fb.select("point_id", "polygon_id").collect()
-            )
-        finally:
-            spatial.SPATIAL_BCAST_LIMIT = old
-        assert got == base and len(base) > 0
-
-    def test_contains_join_gate(self, spark):
-        pts = _pts(spark)
-        cov_df, prepared = spatial.prepare_polygons(spark, _layer(spark))
-        base = sorted(
-            (int(r["point_id"]), int(r["polygon_id"]))
-            for r in spatial.contains_join(pts, cov_df, prepared)
-            .select("point_id", "polygon_id")
-            .collect()
-        )
-        old = spatial.SPATIAL_BCAST_LIMIT
-        spatial.SPATIAL_BCAST_LIMIT = 1
-        try:
-            fb = spatial.contains_join(pts, cov_df, prepared)
-            opt2 = fb._jdf.queryExecution().optimizedPlan().toString()
-            assert "ResolvedHint" not in opt2 and "strategy=broadcast" not in opt2
-            got = sorted(
-                (int(r["point_id"]), int(r["polygon_id"]))
-                for r in fb.select("point_id", "polygon_id").collect()
-            )
-        finally:
-            spatial.SPATIAL_BCAST_LIMIT = old
         assert got == base and len(base) > 0
