@@ -13,6 +13,7 @@ validates the NumPy kernel + covering + join machinery end-to-end.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import numpy as np
@@ -23,13 +24,11 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from s2geo_spark import functions as sf
 from s2geo_spark.kernel import cellid_v1 as v1
+from s2geo_spark.memo import forget, memo
 from s2geo_spark.operators import knn as knn_op
 from s2geo_spark.operators import spatial
 from s2geo_spark.sources import fixtures as fx
 from s2geo_spark.sources import geo
-
-
-_T_CACHE: dict = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -39,12 +38,20 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # memoize the lazy scan HANDLE per session (a DataFrame is an
     # immutable plan; rows are re-read from parquet on every action):
     # spark.read.parquet pays ~0.1 s of driver schema/listing latency per
-    # call, and metadata memos (memo_stats) only hit on stable objects
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _T_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _T_CACHE[key] = df
+    # call, and metadata memos only hit on stable objects. The handle is
+    # checked against the file's mtime: a rewritten table replaces its
+    # entry, and everything memoized on the old handle goes with it.
+    path = f"{sf_dir}/{name}.parquet"
+    sc = spark.sparkContext
+    stamp = os.stat(path).st_mtime_ns
+
+    def read():
+        return stamp, spark.read.parquet(path)
+
+    seen, df = memo(sc, ("scan", path), read)
+    if seen != stamp:
+        forget(sc, ("scan", path))
+        _, df = memo(sc, ("scan", path), read)
     return df
 
 
@@ -59,15 +66,13 @@ def _tw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     least as wide as the session and this is a no-op, so the shuffle never
     appears in the 100-TB plan.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name, "w")
-    df = _T_CACHE.get(key)
-    if df is None:
-        df = _t(spark, sf_dir, name)
+    df = _t(spark, sf_dir, name)
+
+    def widen():
         par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
-        _T_CACHE[key] = df
-    return df
+        return df.repartition(par) if df.rdd.getNumPartitions() < par else df
+
+    return memo(df, "w", widen)
 
 
 # ---------------------------------------------------------------------------
@@ -205,23 +210,27 @@ def o_cap_counts():
     return f"WITH j AS ({o_cap_join()}) SELECT cap_id, count(*) AS cnt FROM j GROUP BY cap_id"
 
 
-_PIP_INDEX_CACHE: dict = {}
+def _layer_index(spark, name, make_layer):
+    """Shape-index table of one fixture polygon layer, built once per
+    session: make_layer(spark) -> {polygon_id: loop | [loops]}, indexed
+    distributed (applyInPandas, spatial.build_index_df) and kept as a
+    local relation, which survives catalog.clearCache() (a persist() memo
+    does not — every later join then re-ran the applyInPandas build). In
+    production this table is materialized to storage once and reused
+    across scans (SURVEY §3.2)."""
+    return memo(
+        spark.sparkContext,
+        ("index", name),
+        lambda: spatial.localize_index(
+            spark,
+            spatial.build_index_df(spatial.polygons_to_df(spark, make_layer(spark))),
+        ),
+    )
 
 
 def _pip_index(spark):
-    """Shape-index table for the fixture polygon layer — built distributed
-    (applyInPandas over the polygon DataFrame, spatial.build_index_df),
-    cached per session. In production this table is materialized to
-    storage once and reused across scans (SURVEY §3.2)."""
-    key = spark.sparkContext.applicationId  # unique per session; id() is reused by GC
-    df = _PIP_INDEX_CACHE.get(key)
-    if df is None:
-        polys = spatial.polygons_to_df(spark, fx.pip_loops())
-        # local relation: survives catalog.clearCache() (a persist() memo
-        # does not — every later join then re-ran the applyInPandas build)
-        df = spatial.localize_index(spark, spatial.build_index_df(polys))
-        _PIP_INDEX_CACHE[key] = df
-    return df
+    """Shape-index table for the fixture polygon layer."""
+    return _layer_index(spark, "pip", lambda _: fx.pip_loops())
 
 
 def q_pip_join(spark, sf_dir):
@@ -252,25 +261,13 @@ xyz AS (SELECT point_id, {_XYZ_SQL} FROM pts)
 """
 
 
-_PIP_LARGE_CACHE: dict = {}
-
-
-def _pip_large_index(spark):
-    key = spark.sparkContext.applicationId  # unique per session; id() is reused by GC
-    df = _PIP_LARGE_CACHE.get(key)
-    if df is None:
-        polys = spatial.polygons_to_df(spark, fx.large_pip_loops())
-        df = spatial.localize_index(spark, spatial.build_index_df(polys))
-        _PIP_LARGE_CACHE[key] = df
-    return df
-
-
 def q_pip_large(spark, sf_dir):
     """Containment against 512/1024-vertex polygons through the shape
     index: the residual tests <=16 clipped edges per candidate cell, not
     the full vertex count (s2loop.cc:549-601 / VERDICT r1 next-#2)."""
     pts = _points_df(spark, sf_dir, "orders", "o_orderkey")
-    return spatial.contains_join_indexed(pts, _pip_large_index(spark)).select(
+    idx = _layer_index(spark, "pip_large", lambda _: fx.large_pip_loops())
+    return spatial.contains_join_indexed(pts, idx).select(
         "point_id", "polygon_id"
     )
 
@@ -293,43 +290,48 @@ xyz AS (SELECT point_id, {_XYZ_SQL} FROM pts)
 """
 
 
-_BOOL_INDEX_CACHE: dict = {}
-
-
-def _boolean_layer_index(spark):
+def _boolean_layer(spark, pair_ids, pair_loops, allow_empty=False):
     """Polygon layer = the boolean results (intersection/union/difference)
-    of the fixture quad pairs, computed through the DISTRIBUTED
-    boolean_join operator, then shape-indexed for the PIP count join.
-    polygon_id = pair_id * 4 + op_index. Cached per session."""
-    key = spark.sparkContext.applicationId  # unique per session; id() is reused by GC
-    cached = _BOOL_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
+    of fixture quad pairs, computed through the DISTRIBUTED boolean_join
+    operator. polygon_id = pair_id * 4 + op_index. allow_empty: a pair may
+    yield no loop (measure-zero intersections contribute no polygon);
+    otherwise every result must be exactly one loop."""
     from s2geo_spark.operators import booleans
 
+    def side(k):
+        return spark.createDataFrame(
+            [(pid, [pair_loops(pid)[k].ravel().tolist()]) for pid in pair_ids],
+            "polygon_id long, loops array<array<double>>",
+        )
+
+    a_df, b_df = side(0), side(1)
+    pairs = spark.createDataFrame(
+        [(pid, pid) for pid in pair_ids], "a_id long, b_id long"
+    )
     layer = {}
     for op_idx, op in enumerate(fx.BOOL_OPS):
-        a_rows = []
-        b_rows = []
-        for pid in fx.BOOL_PAIRS:
-            av, bv = fx.bool_pair_loops(pid)
-            a_rows.append((pid, [av.ravel().tolist()]))
-            b_rows.append((pid, [bv.ravel().tolist()]))
-        schema = "polygon_id long, loops array<array<double>>"
-        a_df = spark.createDataFrame(a_rows, schema)
-        b_df = spark.createDataFrame(b_rows, schema)
-        pairs = spark.createDataFrame(
-            [(pid, pid) for pid in fx.BOOL_PAIRS], "a_id long, b_id long"
-        )
-        res = booleans.boolean_join(a_df, b_df, op, pairs=pairs).collect()
-        for r in res:
-            assert r["n_loops"] == 1, (op, r["a_id"], r["n_loops"])
-            verts = np.asarray(r["loops"][0], dtype=np.float64).reshape(-1, 3)
-            layer[int(r["a_id"]) * 4 + op_idx] = verts
-    polys = spatial.polygons_to_df(spark, layer)
-    idx = spatial.localize_index(spark, spatial.build_index_df(polys))
-    _BOOL_INDEX_CACHE[key] = idx
-    return idx
+        for r in booleans.boolean_join(a_df, b_df, op, pairs=pairs).collect():
+            if allow_empty and r["n_loops"] == 0:
+                continue
+            assert allow_empty or r["n_loops"] == 1, (op, r["a_id"], r["n_loops"])
+            layer[int(r["a_id"]) * 4 + op_idx] = r["loops"]
+    return layer
+
+
+def _pair_counts(spark, sf_dir, name, make_layer, kind):
+    """Points counted inside each polygon of a pair layer (polygon_id =
+    pair_id * 4 + kind) through the shape-indexed PIP join, grouped by
+    (pair_id, kind); empty groups emit no row."""
+    pts = _points_df(spark, sf_dir, "orders", "o_orderkey")
+    joined = spatial.contains_join_indexed(
+        pts, _layer_index(spark, name, make_layer)
+    )
+    return (
+        joined.withColumn("pair_id", (F.col("polygon_id") / 4).cast("long"))
+        .withColumn(kind, F.col("polygon_id") % 4)
+        .groupBy("pair_id", kind)
+        .agg(F.count("*").alias("cnt"))
+    )
 
 
 def q_boolean_counts(spark, sf_dir):
@@ -340,13 +342,9 @@ def q_boolean_counts(spark, sf_dir):
     DuckDB oracle re-derives the same counts from half-space logic
     (inA AND inB / OR / AND NOT), so a wrong boolean boundary shows up as
     a count mismatch."""
-    pts = _points_df(spark, sf_dir, "orders", "o_orderkey")
-    joined = spatial.contains_join_indexed(pts, _boolean_layer_index(spark))
-    return (
-        joined.withColumn("pair_id", (F.col("polygon_id") / 4).cast("long"))
-        .withColumn("op", F.col("polygon_id") % 4)
-        .groupBy("pair_id", "op")
-        .agg(F.count("*").alias("cnt"))
+    return _pair_counts(
+        spark, sf_dir, "boolean",
+        lambda s: _boolean_layer(s, fx.BOOL_PAIRS, fx.bool_pair_loops), "op",
     )
 
 
@@ -380,50 +378,6 @@ xyz AS (SELECT point_id, {_XYZ_SQL} FROM pts)
 """
 
 
-_DEGEN_INDEX_CACHE: dict = {}
-
-
-def _degen_layer_index(spark):
-    """Polygon layer = boolean results of the DEGENERATE fixture pairs
-    (shared border / partial collinear overlap) through the distributed
-    boolean_join — which routes them to the exact boundary-graph overlay
-    (kernel/overlay.py, the reference's S2Builder + snap-rounding role).
-    polygon_id = pair_id * 4 + op_index; empty results (measure-zero
-    intersections) contribute no polygon."""
-    key = spark.sparkContext.applicationId
-    cached = _DEGEN_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from s2geo_spark.operators import booleans
-
-    layer = {}
-    for op_idx, op in enumerate(fx.BOOL_OPS):
-        a_rows, b_rows = [], []
-        for pid in fx.DEGEN_PAIRS:
-            av, bv = fx.degen_pair_loops(pid)
-            a_rows.append((pid, [av.ravel().tolist()]))
-            b_rows.append((pid, [bv.ravel().tolist()]))
-        schema = "polygon_id long, loops array<array<double>>"
-        a_df = spark.createDataFrame(a_rows, schema)
-        b_df = spark.createDataFrame(b_rows, schema)
-        pairs = spark.createDataFrame(
-            [(pid, pid) for pid in fx.DEGEN_PAIRS], "a_id long, b_id long"
-        )
-        res = booleans.boolean_join(a_df, b_df, op, pairs=pairs).collect()
-        for r in res:
-            if r["n_loops"] == 0:
-                continue  # e.g. intersection of border-sharing quads
-            loop_list = [
-                np.asarray(l, dtype=np.float64).reshape(-1, 3)
-                for l in r["loops"]
-            ]
-            layer[int(r["a_id"]) * 4 + op_idx] = loop_list
-    polys = spatial.polygons_to_df(spark, layer)
-    idx = spatial.localize_index(spark, spatial.build_index_df(polys))
-    _DEGEN_INDEX_CACHE[key] = idx
-    return idx
-
-
 def q_boolean_degenerate(spark, sf_dir):
     """Boolean ops on DEGENERATE inputs end-to-end (VERDICT r2 next-#1):
     two quads sharing a full border edge (the admin-boundary case) and two
@@ -431,14 +385,15 @@ def q_boolean_degenerate(spark, sf_dir):
     via boolean_join (kernel overlay path: exact shared-vertex /
     vertex-on-edge resolution), the result loops become a polygon layer,
     and points are counted inside each result through the shape-indexed
-    PIP join. The oracle re-derives every count from half-space logic."""
-    pts = _points_df(spark, sf_dir, "orders", "o_orderkey")
-    joined = spatial.contains_join_indexed(pts, _degen_layer_index(spark))
-    return (
-        joined.withColumn("pair_id", (F.col("polygon_id") / 4).cast("long"))
-        .withColumn("op", F.col("polygon_id") % 4)
-        .groupBy("pair_id", "op")
-        .agg(F.count("*").alias("cnt"))
+    PIP join. The oracle re-derives every count from half-space logic;
+    empty results (e.g. the intersection of border-sharing quads)
+    contribute no polygon."""
+    return _pair_counts(
+        spark, sf_dir, "degenerate",
+        lambda s: _boolean_layer(
+            s, fx.DEGEN_PAIRS, fx.degen_pair_loops, allow_empty=True
+        ),
+        "op",
     )
 
 
@@ -470,36 +425,19 @@ xyz AS (SELECT point_id, {_XYZ_SQL} FROM pts)
 """
 
 
-_BUFFER_INDEX_CACHE: dict = {}
-
-
-def _buffer_layer_index(spark):
-    """Shape index of the BUFFERED fixture polygon: the convex 8-gon grown
-    by BUFFER_RADIUS_DEG through the distributed buffer operator
+def _buffer_layer(spark):
+    """The BUFFERED fixture polygon: the convex 8-gon grown by
+    BUFFER_RADIUS_DEG through the distributed buffer operator
     (operators/booleans.buffer_polygons -> kernel exact offset curves,
     max_error 1e-8 so the tessellation band is far below the point
-    density). Cached per session."""
-    key = spark.sparkContext.applicationId
-    cached = _BUFFER_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
+    density)."""
     from s2geo_spark.operators import booleans
 
     poly = spatial.polygons_to_df(spark, {1: fx.buffer_poly_loop()})
     buffered = booleans.buffer_polygons(
         poly, np.radians(fx.BUFFER_RADIUS_DEG), max_error=1e-8
     ).collect()
-    layer = {
-        int(r["polygon_id"]): [
-            np.asarray(l, dtype=np.float64).reshape(-1, 3) for l in r["loops"]
-        ]
-        for r in buffered
-    }
-    idx = spatial.localize_index(
-        spark, spatial.build_index_df(spatial.polygons_to_df(spark, layer))
-    )
-    _BUFFER_INDEX_CACHE[key] = idx
-    return idx
+    return {int(r["polygon_id"]): r["loops"] for r in buffered}
 
 
 def q_buffer_contains(spark, sf_dir):
@@ -511,7 +449,9 @@ def q_buffer_contains(spark, sf_dir):
     OR spherical point-to-edge distance <= radius (per-edge closed forms
     on (x,y,z))."""
     pts = _points_df(spark, sf_dir, "orders", "o_orderkey")
-    joined = spatial.contains_join_indexed(pts, _buffer_layer_index(spark))
+    joined = spatial.contains_join_indexed(
+        pts, _layer_index(spark, "buffer", _buffer_layer)
+    )
     return joined.groupBy("polygon_id").agg(F.count("*").alias("cnt"))
 
 
@@ -546,45 +486,28 @@ FROM xyz WHERE ({na}) OR {mind} <= {r!r}
 """
 
 
-_WINDING_INDEX_CACHE: dict = {}
-
 WINDING_RULES = ["positive", "odd"]
 
 
-def _winding_layer_index(spark):
+def _winding_layer(spark):
     """Polygon layer = winding regions of the crossing fixture quad pairs
     under each rule, computed through the DISTRIBUTED winding operator
     (operators/booleans.winding_regions -> overlay.winding_operation:
     arrangement + signed-ray winding). For CCW crossing pairs, positive
     selects the union, odd the symmetric difference — both re-derivable
     from half-space logic in the oracle. polygon_id = pair*4 + rule."""
-    key = spark.sparkContext.applicationId
-    cached = _WINDING_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
     from s2geo_spark.operators import booleans
 
+    rows = [
+        (pid, [lp.ravel().tolist() for lp in fx.bool_pair_loops(pid)])
+        for pid in fx.BOOL_PAIRS
+    ]
+    df = spark.createDataFrame(rows, "region_id long, loops array<array<double>>")
     layer = {}
     for rule_idx, rule in enumerate(WINDING_RULES):
-        rows = []
-        for pid in fx.BOOL_PAIRS:
-            av, bv = fx.bool_pair_loops(pid)
-            rows.append(
-                (pid, [av.ravel().tolist(), bv.ravel().tolist()])
-            )
-        df = spark.createDataFrame(
-            rows, "region_id long, loops array<array<double>>"
-        )
         for r in booleans.winding_regions(df, rule).collect():
-            loop_list = [
-                np.asarray(l, dtype=np.float64).reshape(-1, 3)
-                for l in r["loops"]
-            ]
-            layer[int(r["region_id"]) * 4 + rule_idx] = loop_list
-    polys = spatial.polygons_to_df(spark, layer)
-    idx = spatial.localize_index(spark, spatial.build_index_df(polys))
-    _WINDING_INDEX_CACHE[key] = idx
-    return idx
+            layer[int(r["region_id"]) * 4 + rule_idx] = r["loops"]
+    return layer
 
 
 def q_winding_counts(spark, sf_dir):
@@ -593,14 +516,7 @@ def q_winding_counts(spark, sf_dir):
     (positive = union, odd = symmetric difference for CCW inputs); points
     are counted inside each region via the shape-indexed PIP join and the
     oracle recomputes the counts from half-space logic."""
-    pts = _points_df(spark, sf_dir, "orders", "o_orderkey")
-    joined = spatial.contains_join_indexed(pts, _winding_layer_index(spark))
-    return (
-        joined.withColumn("pair_id", (F.col("polygon_id") / 4).cast("long"))
-        .withColumn("rule", F.col("polygon_id") % 4)
-        .groupBy("pair_id", "rule")
-        .agg(F.count("*").alias("cnt"))
-    )
+    return _pair_counts(spark, sf_dir, "winding", _winding_layer, "rule")
 
 
 def o_winding_counts():
@@ -630,9 +546,6 @@ xyz AS (SELECT point_id, {_XYZ_SQL} FROM pts)
 """
 
 
-_EDGES_CACHE: dict = {}
-
-
 def q_edge_crossings(spark, sf_dir):
     """Edge-crossing join (S2CrossingEdgeQuery + GetIntersection,
     s2crossing_edge_query.cc:389 / s2edge_crossings.cc:360): which
@@ -640,22 +553,18 @@ def q_edge_crossings(spark, sf_dir):
     Candidates via ring-covering term duality; exact 4-det residual."""
     from s2geo_spark.operators import crossing
 
-    # The edge-layer DataFrame OBJECTS are memoized per session so the
-    # metadata probes memo_stats hangs off them (distinct ring levels,
-    # edge counts — pure functions of the immutable lazy plans) run once,
-    # not per call. Rows are still computed from parquet on every action.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGES_CACHE.get(key)
-    if cached is None:
+    def layer(table, key, id_col):
         # width-rebalanced scans: the ring-covering pandas UDF and the
         # 4-det residual otherwise run in the single-file scan's 1-2
-        # tasks (no-op at real scale, where edge layers span many files)
-        cached = (
-            geo.edges_from(_tw(spark, sf_dir, "supplier"), "s_suppkey", "a_id"),
-            geo.edges_from(_tw(spark, sf_dir, "customer"), "c_custkey", "b_id"),
-        )
-        _EDGES_CACHE[key] = cached
-    a, b = cached
+        # tasks (no-op at real scale, where edge layers span many files).
+        # The edge-layer OBJECT is memoized on its scan handle so the
+        # metadata probes memoized on it (ring levels, edge count) run
+        # once, not per call; rows are still read on every action.
+        tw = _tw(spark, sf_dir, table)
+        return memo(tw, ("edges", key, id_col), lambda: geo.edges_from(tw, key, id_col))
+
+    a = layer("supplier", "s_suppkey", "a_id")
+    b = layer("customer", "c_custkey", "b_id")
     return crossing.crossing_join(a, b, emit_points=False).select(
         "a_id", "b_id"
     )
@@ -2926,12 +2835,6 @@ def _shingles(spark, sf_dir, distinct: bool = True):
     return raw.distinct() if distinct else raw
 
 
-# broadcast budget for q_jaccard_pairs' two build relations; ~10% of a
-# typical 4 GiB executor heap. Tests shrink it to force (and plan-assert)
-# the shuffle fallback.
-JACCARD_BCAST_LIMIT = 256 << 20
-
-
 def _jaccard_build(spark, sf_dir):
     """Lazy build of the candidate-verify plan. Returns (inter, sizes,
     stats, pairs); only stats comes back persisted, and the caller must
@@ -2998,7 +2901,7 @@ def _jaccard_build(spark, sf_dir):
     # once instead of twice. Past the size gate both attaches shuffle on
     # their own doc keys, exactly as before.
     st = stats.select("doc_id", "gs")
-    if n_sh * 16 <= JACCARD_BCAST_LIMIT:
+    if n_sh * 16 <= spatial.SPATIAL_BCAST_LIMIT:
         st = F.broadcast(st)
     sa, sb = st.alias("sa"), st.alias("sb")
     cand = (

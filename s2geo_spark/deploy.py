@@ -13,7 +13,7 @@ import os
 import tempfile
 import zipfile
 
-_SENT_SESSIONS: set[int] = set()
+from s2geo_spark.memo import memo
 
 
 def make_pyfiles_zip(dest_dir: str | None = None) -> str:
@@ -35,8 +35,4 @@ def make_pyfiles_zip(dest_dir: str | None = None) -> str:
 def ensure_on_workers(spark) -> None:
     """Idempotently register the package zip with the session's context."""
     sc = spark.sparkContext
-    key = id(sc)
-    if key in _SENT_SESSIONS:
-        return
-    sc.addPyFile(make_pyfiles_zip())
-    _SENT_SESSIONS.add(key)
+    memo(sc, "pyfiles", lambda: sc.addPyFile(make_pyfiles_zip()))

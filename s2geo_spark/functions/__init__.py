@@ -20,12 +20,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType, StructField, DoubleType
 
 from s2geo_spark.kernel import cellid_v1 as _v1
 from s2geo_spark.kernel import cellid_v2 as _v2
+from s2geo_spark.memo import memo
 
 __all__ = [
     "h3_cell",
@@ -266,15 +268,6 @@ def tile_assign(cell, tile_level: int) -> Column:
     return s2_parent(cell, tile_level)
 
 
-def _expr_cache_key(*parts):
-    """Key for memoizing pure Column expression trees: the string args
-    plus the live py4j gateway's identity (a Column wraps a JVM object;
-    a new in-process JVM would invalidate cached trees)."""
-    from pyspark import SparkContext
-
-    return (id(SparkContext._gateway), *parts)
-
-
 def s2_face_ij_attach(df, lat, lon, face: str = "f", i: str = "i",
                       j: str = "j"):
     """Attach (face, i, j) leaf-coordinate columns as PURE Catalyst
@@ -360,9 +353,6 @@ def s2_face_ij_attach(df, lat, lon, face: str = "f", i: str = "i",
     )
 
 
-_QUAD_KEY_CACHE: dict = {}
-
-
 def quad_key(face, i, j, level: int) -> Column:
     """Pack (face, level, i>>s, j>>s) into one int64 join key.
 
@@ -373,24 +363,22 @@ def quad_key(face, i, j, level: int) -> Column:
     """
     if level > 25:
         raise ValueError("quad_key supports level <= 25")
-    if (
-        isinstance(face, str) and isinstance(i, str) and isinstance(j, str)
-    ):
-        key = _expr_cache_key("quad", face, i, j, level)
-        hit = _QUAD_KEY_CACHE.get(key)
-        if hit is not None:
-            return hit
-    else:
-        key = None
-    s = 30 - level
-    iq = F.shiftrightunsigned(_col(i), s)
-    jq = F.shiftrightunsigned(_col(j), s)
-    out = (
-        (_col(face).cast("long") * F.lit(1 << 58))
-        + (F.lit(level).cast("long") * F.lit(1 << 53))
-        + iq * F.lit(1 << 26)
-        + jq
+
+    def build():
+        s = 30 - level
+        iq = F.shiftrightunsigned(_col(i), s)
+        jq = F.shiftrightunsigned(_col(j), s)
+        return (
+            (_col(face).cast("long") * F.lit(1 << 58))
+            + (F.lit(level).cast("long") * F.lit(1 << 53))
+            + iq * F.lit(1 << 26)
+            + jq
+        )
+
+    if not all(isinstance(c, str) for c in (face, i, j)):
+        return build()
+    # a Column wraps a JVM object, so the tree is memoized on the live
+    # SparkContext: a new context (new gateway) starts with an empty memo
+    return memo(
+        SparkContext._active_spark_context, ("quad", face, i, j, level), build
     )
-    if key is not None:
-        _QUAD_KEY_CACHE[key] = out
-    return out

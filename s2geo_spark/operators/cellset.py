@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from s2geo_spark import functions as sf
-from s2geo_spark.operators import spatial
+from s2geo_spark.memo import memo
 
 _SIGN = -(1 << 63)
 
@@ -168,9 +168,9 @@ def set_union(a: DataFrame, b: DataFrame, set_id: str = "set_id") -> DataFrame:
 
 def _levels_of(df: DataFrame) -> list:
     """Distinct S2 levels present in a cell-set relation (<=31 rows);
-    memoized per DataFrame object (spatial.memo_stats) so repeated set
-    operations against the same relation pay the probe job once."""
-    return spatial.memo_stats(
+    memoized per DataFrame object so repeated set operations against the
+    same relation pay the probe job once."""
+    return memo(
         df,
         "levels",
         lambda: sorted(

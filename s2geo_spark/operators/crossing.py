@@ -32,6 +32,7 @@ from pyspark.sql.types import ArrayType, LongType
 from s2geo_spark import functions as sf
 from s2geo_spark.operators import spatial
 from s2geo_spark.kernel import metrics
+from s2geo_spark.memo import memo
 from s2geo_spark.operators.cellset import set_intersections
 
 
@@ -93,9 +94,10 @@ def edge_levels(
     lat2: str = "lat2",
     lon2: str = "lon2",
     max_level: int = 16,
-) -> list:
-    """Distinct ring levels of an edge set — the same expression the ring
-    covering uses, but JVM-only (no ring UDF), so probing it is cheap."""
+) -> tuple[list, int]:
+    """(distinct ring levels, row count) of an edge set from ONE aggregate
+    — the same level expression the ring covering uses, but JVM-only (no
+    ring UDF), so probing it is cheap."""
     e = edges.withColumns(_xyz(lat1, lon1, "ax", "ay", "az"))
     e = e.withColumns(_xyz(lat2, lon2, "bx", "by", "bz"))
     chord2 = (
@@ -104,16 +106,16 @@ def edge_levels(
         + (F.col("az") - F.col("bz")) ** 2
     )
     lvl = _edge_level_from_chord2(chord2, max_level)
-    # memoized per (edges object, column names, max_level): the level set
-    # is a pure function of those, and crossing queries probe it per call
-    return spatial.memo_stats(
-        edges,
-        f"edge_levels:{lat1},{lon1},{lat2},{lon2},{max_level}",
-        lambda: sorted(
-            int(r["lvl"])
-            for r in e.select(lvl.alias("lvl")).distinct().collect()
-        ),
-    )
+
+    def probe():
+        r = e.agg(
+            F.collect_set(lvl).alias("lvls"), F.count("*").alias("n")
+        ).collect()[0]
+        return sorted(int(v) for v in r["lvls"]), int(r["n"])
+
+    # memoized per (edges object, column names, max_level): the result is
+    # a pure function of those, and crossing queries probe it per call
+    return memo(edges, ("edge_levels", lat1, lon1, lat2, lon2, max_level), probe)
 
 
 def edge_ring_cells(
@@ -169,10 +171,9 @@ def crossing_join(
     # set_intersections then explodes ancestors at just those levels.
     # Size-gated broadcast (guide §3.1): when one edge layer's tagged term
     # table fits the build budget, ship it — the big side's exploded ring
-    # terms then never shuffle. Counts are memoized per edge-DF object.
-    la, lb = edge_levels(a_edges), edge_levels(b_edges)
-    a_n = spatial.memo_stats(a_edges, "n_edges", a_edges.count)
-    b_n = spatial.memo_stats(b_edges, "n_edges", b_edges.count)
+    # terms then never shuffle. Levels and counts come from one memoized
+    # aggregate per edge-DF object.
+    (la, a_n), (lb, b_n) = edge_levels(a_edges), edge_levels(b_edges)
     est_a = a_n * 9 * (1 + len(lb)) * 24  # <=9 ring cells, cov+ancestors
     est_b = b_n * 9 * (1 + len(la)) * 24
     bcast = None

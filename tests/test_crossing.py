@@ -96,3 +96,21 @@ class TestCrossingJoin:
         assert crossing.crossing_join(a_df, b_df).count() == 0
         touch = crossing.crossing_join(a_df, b_df, include_touching=True).toPandas()
         assert len(touch) == 1 and int(touch["sign"].iloc[0]) == 0
+
+    def test_gate_inputs_cost_one_job_per_side(self, spark):
+        # constructing the join probes each edge layer's ring levels AND
+        # row count (the broadcast gate's inputs) through one aggregate per
+        # side. The bound: a distinct-collect plus a count() per side runs
+        # 8 jobs on these inputs under AQE
+        a_df = spark.createDataFrame(_edge_frame(40, 5).rename(columns={"edge_id": "a_id"}))
+        b_df = spark.createDataFrame(_edge_frame(50, 6).rename(columns={"edge_id": "b_id"}))
+        sc_ = spark.sparkContext
+        group = "test-crossing-gate-inputs"
+        sc_.setJobGroup(group, "crossing_join construction")
+        try:
+            crossing.crossing_join(a_df, b_df)
+        finally:
+            sc_.setLocalProperty("spark.jobGroup.id", None)
+            sc_.setLocalProperty("spark.job.description", None)
+        jobs = len(sc_.statusTracker().getJobIdsForGroup(group))
+        assert 0 < jobs < 8, jobs

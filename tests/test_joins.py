@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from s2geo_spark.kernel import loops, regions, s2coords as sc
+from s2geo_spark.memo import memo
 from s2geo_spark.operators import knn as knn_op
 from s2geo_spark.operators import spatial
 
@@ -329,6 +330,11 @@ class TestContainsParity:
             _star_loop(rng, 20.0, 30.0, 2.0, 17),
         ]
         centers.append((20.0, 30.0, 4.0))
+        # around the face-0/1/2 corner, where a null or NaN coordinate's
+        # (face, i, j) = (2, 0, 0) lands if such rows reach the join
+        corner = (np.degrees(np.arctan(1 / np.sqrt(2))), 45.0, 3.0)
+        polys[6] = loops.make_regular_loop(*corner, 24)
+        centers.append(corner)
         lat, lon = [], []
         for clat, clon, r in centers:
             lat.append(clat + rng.uniform(-1.3 * r, 1.3 * r, 500))
@@ -345,7 +351,13 @@ class TestContainsParity:
                 lon.append(vlon)
         pdf = pd.DataFrame({"lat": np.concatenate(lat), "lon": np.concatenate(lon)})
         pdf.insert(0, "point_id", np.arange(len(pdf), dtype=np.int64))
-        pts = spark.createDataFrame(pdf)
+        n = len(pdf)
+        # a null-lat and a NaN-lon row: neither may join on any side
+        bad = spark.createDataFrame(
+            [(n, None, 45.0), (n + 1, 35.0, float("nan"))],
+            "point_id long, lat double, lon double",
+        )
+        pts = spark.createDataFrame(pdf).unionByName(bad)
 
         x, y, z = sc.latlng_degrees_to_xyz(pdf["lat"].to_numpy(), pdf["lon"].to_numpy())
         xyz = np.stack([x, y, z], axis=1)
@@ -648,9 +660,9 @@ class TestFurthestAndClosestCell:
 
 
 class TestIndexStatsMemo:
-    """memo_stats: index metadata (levels, size estimates) is computed
-    once per DataFrame object — repeat joins must not re-run the probe
-    job (VERDICT r4 #4)."""
+    """memo: index metadata (levels, size estimates) is computed once per
+    DataFrame object — repeat joins must not re-run the probe job
+    (VERDICT r4 #4)."""
 
     def test_memo_computes_once(self, spark):
         df = spark.range(3)
@@ -660,12 +672,12 @@ class TestIndexStatsMemo:
             calls["n"] += 1
             return [4, 5]
 
-        assert spatial.memo_stats(df, "k", compute) == [4, 5]
-        assert spatial.memo_stats(df, "k", compute) == [4, 5]
+        assert memo(df, "k", compute) == [4, 5]
+        assert memo(df, "k", compute) == [4, 5]
         assert calls["n"] == 1
         # distinct keys are independent
-        assert spatial.memo_stats(df, "k2", lambda: 7) == 7
-        assert df._s2_index_stats == {"k": [4, 5], "k2": 7}
+        assert memo(df, "k2", lambda: 7) == 7
+        assert df._s2_memo == {"k": [4, 5], "k2": 7}
 
     def test_indexed_join_skips_stats_job_on_reuse(self, spark, points_df):
         polys = spatial.polygons_to_df(spark, POLYGONS)
@@ -676,7 +688,7 @@ class TestIndexStatsMemo:
                 .select("point_id", "polygon_id")
                 .collect()
             )
-            assert "indexed_stats" in index_df._s2_index_stats
+            assert "indexed_stats" in index_df._s2_memo
             # poison this object's agg: a second call must not re-probe
             index_df.agg = None  # type: ignore[method-assign]
             second = (

@@ -111,8 +111,8 @@ class TestJaccardSizeGate:
             .orderBy("doc_a", "doc_b")
             .collect()
         )
-        old = contract.JACCARD_BCAST_LIMIT
-        contract.JACCARD_BCAST_LIMIT = 1  # force the shuffle fallback
+        old = spatial.SPATIAL_BCAST_LIMIT
+        spatial.SPATIAL_BCAST_LIMIT = 1  # force the shuffle fallback
         try:
             # plan-assert on the lazy build handle (q_jaccard_pairs now
             # checkpoints the expansion join internally, so its RETURNED
@@ -131,7 +131,7 @@ class TestJaccardSizeGate:
                 .collect()
             )
         finally:
-            contract.JACCARD_BCAST_LIMIT = old
+            spatial.SPATIAL_BCAST_LIMIT = old
         assert got == base
 
     def test_default_plan_keeps_hints(self, spark):
