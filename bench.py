@@ -134,7 +134,8 @@ def pages_pipeline(spark, n_pages: int) -> int:
     # geo extract (JVM) -> (face,i,j) via Catalyst trig (JVM) -> quad-key
     # broadcast join (JVM) -> exact-PIP residual on boundary candidates
     # (mapInPandas) -> Hilbert encode of the ~few-% survivors -> tile
-    # rollup. The only shuffles: candidate rebalance + final groupBy.
+    # rollup. The only shuffles: the candidate rebalance (AQE sizes the
+    # residual's Python tasks by candidate bytes) + final groupBy.
     pages = pages_table(spark, n_pages)
     geo = pages_src.extract_geo(pages).filter(F.col("lat").isNotNull())
     pts = geo.select(F.col("url").alias("point_id"), "lat", "lon")

@@ -10,7 +10,10 @@ src/s2/s2region_term_indexer.cc:121-289):
                   (functions.s2_face_ij_attach), exploded to the quad key
                   at every level the index uses ("query terms": no UDF)
   candidates    — ONE hash equi-join on the quad key (broadcast when the
-                  polygon side is small, shuffle+AQE-skew otherwise)
+                  polygon side is small, shuffle+AQE-skew otherwise),
+                  then ONE round-robin REBALANCE exchange: the Python
+                  residual's task count follows candidate bytes (AQE),
+                  not the scan's split count
   exact residual— polygons: only pairs that matched a *boundary* cell run
                   the exact crossing-parity PIP against that cell's
                   clipped edges (Arrow-batched); interior-cell matches are
@@ -164,24 +167,26 @@ def build_index_df(
     return polys.groupBy("polygon_id").applyInPandas(per_poly, schema=schema)
 
 
-def _scan_width(points: DataFrame) -> int:
-    """Partition count of a batch input plan, memoized per session and
-    semanticHash: the .rdd translation costs ~0.1 s of driver latency per
-    call, and width is a pure function of the (immutable) plan within a
-    session."""
-    try:
-        key = ("nparts", points.semanticHash())
-    except Exception:
-        return points.rdd.getNumPartitions()
-    return memo(
-        points.sparkSession.sparkContext,
-        key,
-        lambda: points.rdd.getNumPartitions(),
-    )
+def _index_stats(index_df: DataFrame) -> tuple[list[int], int, int]:
+    """(distinct levels, slim bytes, detail bytes) of a shape-index table
+    from ONE aggregate, memoized on the table object. The byte estimates
+    size the broadcast gates and localize_index: the slim projection is
+    ~40 B/row; the detail one ~48 B/row + 9 B per edge element."""
+
+    def build():
+        r = index_df.agg(
+            F.collect_set("lvl").alias("lvls"),
+            F.count("*").alias("n"),
+            F.coalesce(F.sum(F.size("edges")), F.lit(0)).alias("ne"),
+        ).collect()[0]
+        n, ne = int(r["n"]), int(r["ne"])
+        return sorted(int(v) for v in r["lvls"]), n * 40, n * 48 + ne * 9
+
+    return memo(index_df, "indexed_stats", build)
 
 
 def localize_index(
-    spark: SparkSession, index_df: DataFrame, max_rows: int = 100_000
+    spark: SparkSession, index_df: DataFrame, max_bytes: int = SPATIAL_BCAST_LIMIT
 ) -> DataFrame:
     """Materialize a small build-side index table as a LOCAL relation.
 
@@ -193,26 +198,34 @@ def localize_index(
     slim and detail projections both read it). Collecting the (tiny)
     table once and re-creating it as a LocalTableScan makes the memo
     unconditional: no recompute, no cache entry to lose, and the
-    broadcast build reads driver-local rows. Falls back to persist() when
-    the table is unexpectedly large (> max_rows), preserving the
-    distributed path's semantics, and when two rows share a (polygon_id,
-    cell) key (e.g. a union of index tables): the localized detail map
-    holds one payload per key, while the detail join emits one row per
-    matching detail row.
+    broadcast build reads driver-local rows.
+
+    The table is persisted first, so _index_stats' one aggregate builds it
+    once for both outcomes. Only when its detail estimate fits max_bytes
+    is it collected; otherwise it stays persisted, preserving the
+    distributed path's semantics. It also stays persisted when two rows
+    share a (polygon_id, cell) key (e.g. a union of index tables): the
+    localized detail map holds one payload per key, while the detail join
+    emits one row per matching detail row.
     """
-    rows = index_df.limit(max_rows + 1).collect()
-    keys = {(r["polygon_id"], r["cell"]) for r in rows}
-    if len(rows) > max_rows or len(keys) < len(rows):  # keep lazy
-        df = index_df.persist()
-        df.count()
+    was_cached = index_df.is_cached
+    df = index_df.persist()
+    stats = _index_stats(df)
+    if stats[2] > max_bytes:  # the detail broadcast's estimate
         return df
-    df = spark.createDataFrame(rows, index_df.schema)
+    rows = df.collect()
+    if len({(r["polygon_id"], r["cell"]) for r in rows}) < len(rows):
+        return df
+    if not was_cached:
+        df.unpersist()
+    local = spark.createDataFrame(rows, df.schema)
+    memo(local, "indexed_stats", lambda: stats)
     # keep the raw rows on the object: contains_join_indexed uses them to
     # ship the boundary detail ONCE as a task broadcast instead of
     # attaching per-row edge arrays through a join + Arrow (guide §4.1:
     # control how many bytes cross the Python boundary)
-    df._s2_local_rows = rows
-    return df
+    local._s2_local_rows = rows
+    return local
 
 
 def _residual_group(pid: int, cell: int, contains_center: bool, edges, ksigns, pts3):
@@ -241,7 +254,6 @@ def contains_join_indexed(
     lat: str = "lat",
     lon: str = "lon",
     broadcast_index: bool | None = None,
-    rebalance: bool = True,
     emit_cell: bool = False,
 ) -> DataFrame:
     """Containment join against a shape-index table (from build_index_df).
@@ -251,9 +263,12 @@ def contains_join_indexed(
          at the index's levels (tiny distinct-levels aggregate) — no UDF;
       2. ONE hash equi-join candidates vs the slim (quad, polygon_id,
          cell, is_interior) projection (broadcast when small);
-      3. round-robin rebalance of the slim candidates (skew: hot cells) —
-         skipped when the candidate stream is already at least
-         session-wide, so a wide scan doesn't pay a pointless exchange;
+      3. ONE round-robin REBALANCE exchange of the slim candidates: AQE
+         sizes the Python residual's tasks by candidate bytes, not by
+         scan splits (each Python task has a fixed cost far above its
+         work on a few thousand rows), and splits skewed partitions (hot
+         cells); streaming plans (no AQE) get spark.sql.shuffle.partitions
+         tasks;
       4. detail attach of (contains_center, edges, ksigns) on
          (polygon_id, cell): for a LOCALIZED index (localize_index) the
          detail ships ONCE per task as a Python broadcast — no join, no
@@ -274,29 +289,9 @@ def contains_join_indexed(
     """
     spark = points.sparkSession
     local_rows = getattr(index_df, "_s2_local_rows", None)
-    # one pass over the index: distinct levels + the size estimates the
-    # broadcast gates need (was a levels-only distinct collect); memoized
-    # on the index object — the flagship and every q_pip_* call reuse one
-    # persisted index table, so only the first call pays the job
-    levels, idx_n, idx_ne = memo(
-        index_df,
-        "indexed_stats",
-        lambda: (
-            lambda r: (
-                sorted(int(v) for v in r["lvls"]),
-                int(r["n"]),
-                int(r["ne"]),
-            )
-        )(
-            index_df.agg(
-                F.collect_set("lvl").alias("lvls"),
-                F.count("*").alias("n"),
-                F.coalesce(F.sum(F.size("edges")), F.lit(0)).alias("ne"),
-            ).collect()[0]
-        ),
-    )
-    slim_est = idx_n * 40
-    detail_est = idx_n * 48 + idx_ne * 9
+    # memoized on the index object: the flagship and every q_pip_* call
+    # reuse one index table, so only its build pays the stats job
+    levels, slim_est, detail_est = _index_stats(index_df)
     # staged projections: small analyzer trees, trig computed once
     pts = sf.s2_face_ij_attach(points, lat, lon)
     quads = F.array(*[sf.quad_key("f", "i", "j", L) for L in levels])
@@ -312,16 +307,7 @@ def contains_join_indexed(
     cand = terms.join(slim, terms["term"] == slim["quad"], "inner").drop(
         "term", "quad"
     )
-    if rebalance:
-        par = spark.sparkContext.defaultParallelism
-        # streaming plans cannot probe .rdd; their micro-batch input is
-        # narrow, so always rebalance there. Batch: only pay the exchange
-        # when the scan side is narrower than the session — a wide scan
-        # (the 100-TB case) flows straight into the residual. The probe
-        # (scan-only RDD translation) is memoized per semantically-equal
-        # input plan, so repeated query constructions skip it.
-        if points.isStreaming or _scan_width(points) < par:
-            cand = cand.repartition(par * 2)
+    cand = cand.hint("rebalance")
 
     detail_bc = None
     if local_rows is not None:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -76,9 +77,11 @@ def spatial_join_stream(
 
     The batch contains_join_indexed plan is streaming-compatible verbatim:
     the index side is a broadcast static table (stream-static equi-joins
-    are stateless), the rebalance is a stateless exchange, and the exact
-    residual is a stateless mapInPandas — so streaming results equal the
-    batch operator's on the same rows by construction. Downstream,
+    are stateless), the candidate rebalance is a stateless round-robin
+    exchange (streaming runs without AQE, so it always has
+    spark.sql.shuffle.partitions partitions), and the exact residual is a
+    stateless mapInPandas — so streaming results equal the batch
+    operator's on the same rows by construction. Downstream,
     windowed/keyed aggregation rides normal Structured Streaming state.
     """
     from s2geo_spark.operators import spatial
@@ -94,8 +97,9 @@ def run_to_memory(
     name: str,
     mode: str = "append",
     available_now: bool = True,
-) -> None:
-    """Drive a stream to completion synchronously (test/local harness).
+) -> StreamingQuery:
+    """Drive a stream to completion synchronously (test/local harness) and
+    return the finished query (its plan stays inspectable).
 
     Aggregations should pass mode="complete" so windows emit without
     waiting for the watermark to pass them.
@@ -116,6 +120,7 @@ def run_to_memory(
         q = writer.trigger(processingTime="1 second").start()
         q.processAllAvailable()
         q.stop()
+    return q
 
 
 # ---------------------------------------------------------------------------

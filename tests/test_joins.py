@@ -5,6 +5,8 @@ reference's BruteForceContains pattern, src/s2/s2loop.cc:589-599); kNN
 oracle = exhaustive chord-distance scan with (dist, point_id) tie-break
 (src/s2/s2closest_point_query_base.h result ordering)."""
 
+import itertools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -50,6 +52,15 @@ POLYGONS = {
     3: loops.make_regular_loop(-30.0, 120.0, 8.0, 512),  # big far k-gon
     4: loops.parse_loop_text("88:0, 88:120, 88:-120"),  # polar triangle
 }
+
+
+def _wide(spark, df):
+    """The same rows as a scan of 3 x defaultParallelism splits, with no
+    exchange above it (the shape of a wide parquet scan)."""
+    n = 3 * spark.sparkContext.defaultParallelism
+    wide = spark.createDataFrame(spark.sparkContext.parallelize(df.collect(), n), df.schema)
+    assert wide.rdd.getNumPartitions() == n
+    return wide
 
 
 def _indexed_join(spark, points, polygons):
@@ -264,6 +275,28 @@ class TestContainsJoinIndexed:
         assert (got["point_id"].to_numpy() == want["point_id"].to_numpy()).all()
         assert (got["polygon_id"].to_numpy() == want["polygon_id"].to_numpy()).all()
 
+    def test_wide_scan_feeds_residual_through_rebalance(self, spark, points_df):
+        """However many splits the scan has, the Python residual reads
+        ONE round-robin rebalance exchange, so AQE sizes its tasks by
+        candidate bytes instead of running one Python task per split."""
+        import re
+
+        from s2geo_spark import contract
+
+        index_df = contract._pip_index(spark)
+        assert hasattr(index_df, "_s2_local_rows")
+        joined = spatial.contains_join_indexed(_wide(spark, points_df), index_df)
+        got = sorted((r["point_id"], r["polygon_id"]) for r in joined.collect())
+        assert got == _join_rows(points_df, index_df) and len(got) > 0
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        assert re.search(
+            r"MapInPandas [^\n]*\n\s*\+- AQEShuffleRead [^\n]*\n"
+            r"\s*\+- ShuffleQueryStage [^\n]*\n"
+            r"\s*\+- Exchange RoundRobinPartitioning\(\d+\), REBALANCE_PARTITIONS_BY_NONE",
+            plan,
+        ), plan[:3000]
+
     def test_index_bounds_edges_per_cell(self, spark):
         big = {7: loops.make_regular_loop(40.0, -100.0, 6.0, 2048)}
         index_df = spatial.build_index_df(
@@ -358,6 +391,9 @@ class TestContainsParity:
             "point_id long, lat double, lon double",
         )
         pts = spark.createDataFrame(pdf).unionByName(bad)
+        # the same rows split wider than the session: the residual must
+        # not depend on how the scan is split
+        inputs = {"narrow": pts, "wide": _wide(spark, pts)}
 
         x, y, z = sc.latlng_degrees_to_xyz(pdf["lat"].to_numpy(), pdf["lon"].to_numpy())
         xyz = np.stack([x, y, z], axis=1)
@@ -376,17 +412,17 @@ class TestContainsParity:
         assert hasattr(localized, "_s2_local_rows")
         assert not hasattr(persisted, "_s2_local_rows")
         sides = {"localized": localized, "persisted": persisted}
-        for name, idx in sides.items():
-            assert _join_rows(pts, idx, broadcast_index=None) == want, name
+        for (name, idx), (shape, p) in itertools.product(sides.items(), inputs.items()):
+            assert _join_rows(p, idx, broadcast_index=None) == want, (name, shape)
         # forced shuffle: no hint, and no automatic broadcast either
         auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            for name, idx in sides.items():
-                shuffled = spatial.contains_join_indexed(pts, idx, broadcast_index=False)
+            for (name, idx), (shape, p) in itertools.product(sides.items(), inputs.items()):
+                shuffled = spatial.contains_join_indexed(p, idx, broadcast_index=False)
                 plan = shuffled._jdf.queryExecution().executedPlan().toString()
-                assert "BroadcastHashJoin" not in plan, name
-                assert _join_rows(pts, idx, broadcast_index=False) == want, name
+                assert "BroadcastHashJoin" not in plan, (name, shape)
+                assert _join_rows(p, idx, broadcast_index=False) == want, (name, shape)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
             persisted.unpersist()

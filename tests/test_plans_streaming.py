@@ -194,8 +194,15 @@ class TestStreaming:
             counts = joined.groupBy("polygon_id", "tile").agg(
                 F.count("*").alias("n")
             )
-            stream_pipe.run_to_memory(
+            query = stream_pipe.run_to_memory(
                 counts, "sjoin_stream", mode="complete"
+            )
+            # no AQE in micro-batches: the candidate rebalance is a plain
+            # round-robin exchange into spark.sql.shuffle.partitions
+            parts = spark.conf.get("spark.sql.shuffle.partitions")
+            assert (
+                f"RoundRobinPartitioning({parts}), REBALANCE_PARTITIONS_BY_NONE"
+                in query._jsq.explainInternal(False)
             )
             got = (
                 spark.table("sjoin_stream")
