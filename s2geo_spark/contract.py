@@ -217,10 +217,11 @@ def _layer_index(spark, name, make_layer):
     local relation, which survives catalog.clearCache() (a persist() memo
     does not — every later join then re-ran the applyInPandas build). In
     production this table is materialized to storage once and reused
-    across scans (SURVEY §3.2)."""
+    across scans (SURVEY §3.2). The key holds SPATIAL_BCAST_LIMIT, which
+    decides between the local and the persisted table."""
     return memo(
         spark.sparkContext,
-        ("index", name),
+        ("index", name, spatial.SPATIAL_BCAST_LIMIT),
         lambda: spatial.localize_index(
             spark,
             spatial.build_index_df(spatial.polygons_to_df(spark, make_layer(spark))),

@@ -29,6 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from s2geo_spark.operators import spatial
+
+# Driver working set of _driver_components per canonical edge: the
+# tracemalloc peak of a 1M-edge random-graph run is ~74 B/edge
+# (scripts/measure_cc_driver_bytes.py), rounded up. Against the 256 MiB
+# SPATIAL_BCAST_LIMIT the driver finishes graphs of up to ~3.4M edges.
+DRIVER_BYTES_PER_EDGE = 80
+
 
 def _large_star(sym: DataFrame) -> DataFrame:
     """One large-star round over a SYMMETRIC edge set (u,v)&(v,u).
@@ -116,7 +124,6 @@ def connected_components(
     dst: str = "dst",
     nodes: DataFrame | None = None,
     max_iter: int = 64,
-    max_driver_edges: int = 4_000_000,
 ) -> DataFrame:
     """Label every node with the MINIMUM node id of its connected
     component.
@@ -127,14 +134,15 @@ def connected_components(
     themselves.  Returns DataFrame(node, component).
 
     The canonical edge set is counted once (the count doubles as the
-    materializing action for its checkpoint); at or below
-    ``max_driver_edges`` (default 4M edges = 64 MB of int64 pairs) the
-    closure finishes on the driver with vectorized pointer jumping —
-    label-identical to the star rounds, verified by tests running both
-    paths.  Above the gate, alternating large-star/small-star rounds run
-    distributed; convergence is detected by a (count, xor-of-hash)
-    checksum of the canonicalized edge set — one tiny aggregate per
-    round, no driver collect of edges.  The result is exact for any
+    materializing action for its checkpoint); when edges x
+    DRIVER_BYTES_PER_EDGE fits spatial.SPATIAL_BCAST_LIMIT (read per
+    call: ~3.4M edges at the default budget) the closure finishes on the
+    driver with vectorized pointer jumping — label-identical to the star
+    rounds, verified by tests running both paths.  Above the gate,
+    alternating large-star/small-star rounds run distributed;
+    convergence is detected by a (count, xor-of-hash) checksum of the
+    canonicalized edge set — one tiny aggregate per round, no driver
+    collect of edges.  The result is exact for any
     graph the rounds converge on (the algorithm is a contraction: the
     checksum can only repeat on a fixpoint for the star forest it
     converges to).
@@ -149,24 +157,23 @@ def connected_components(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    node_col = None
-    if nodes is not None:
-        node_col = nodes.columns[0]
+    e = e.localCheckpoint(eager=False)
+    if e.count() * DRIVER_BYTES_PER_EDGE <= spatial.SPATIAL_BCAST_LIMIT:
+        labels = _driver_components(e)
+    else:
+        labels = _star_components(e, max_iter)
+    if nodes is None:
+        return labels
+    all_nodes = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
+    return all_nodes.join(labels, "node", "left").select(
+        "node", F.coalesce("component", F.col("node")).alias("component")
+    )
 
-    if max_driver_edges > 0:
-        e = e.localCheckpoint(eager=False)
-        if e.count() <= max_driver_edges:
-            labels = _driver_components(e)
-            if nodes is not None:
-                all_nodes = nodes.select(
-                    F.col(node_col).alias("node")
-                ).distinct()
-                labels = all_nodes.join(labels, "node", "left").select(
-                    "node",
-                    F.coalesce("component", F.col("node")).alias("component"),
-                )
-            return labels
 
+def _star_components(e: DataFrame, max_iter: int) -> DataFrame:
+    """Alternating large-star/small-star rounds over a canonical (u < v)
+    distinct edge set until its (count, xor-of-hash) checksum repeats;
+    returns (node, component) for every edge endpoint."""
     prev_sig = None
     for _ in range(max_iter):
         # e is distinct with u != v throughout (input is distinct-ed,
@@ -199,20 +206,8 @@ def connected_components(
     # still carries two star edges on early exit.
     members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("node"), F.col("v").alias("component"))
-    labels = (
+    return (
         members.unionByName(roots)
         .groupBy("node")
         .agg(F.min("component").alias("component"))
     )
-    if nodes is not None:
-        all_nodes = nodes.select(
-            F.col(node_col).alias("node")
-        ).distinct()
-        labels = (
-            all_nodes.join(labels, "node", "left")
-            .select(
-                "node",
-                F.coalesce("component", F.col("node")).alias("component"),
-            )
-        )
-    return labels

@@ -42,6 +42,13 @@ from s2geo_spark.operators.spatial import xyz_cols
 
 _FACE_CELLS = [np.int64(np.uint64((2 * f + 1) << 60)) for f in range(6)]
 
+# density tiers of the ring path: points are counted per PROBE_LEVEL cell;
+# N_TIERS start levels 2 apart (16x density); a query moves one tier finer
+# while its ring at the coarser tier would hold more than TARGET_RING points
+PROBE_LEVEL = 4
+TARGET_RING = 4096
+N_TIERS = 4
+
 
 @F.pandas_udf(ArrayType(LongType()))
 def _ring_cells(cell: pd.Series, level: pd.Series) -> pd.Series:
@@ -85,10 +92,6 @@ def knn_join(
     k: int,
     query_id: str = "query_id",
     point_id: str = "point_id",
-    start_level: int | None = None,
-    probe_level: int = 4,
-    target_ring: int = 4096,
-    n_tiers: int = 4,
     brute_max_points: int = 4096,
 ) -> DataFrame:
     """For each query (query_id, lat, lon): the k nearest points
@@ -98,101 +101,95 @@ def knn_join(
     dist2 = squared chord distance (monotone in angle, like S1ChordAngle —
     src/s2/s1chord_angle.h).
 
-    start_level=None (default) picks a per-query tier from local density;
-    an int pins every query to that level (compat/testing).
+    Up to brute_max_points points take one broadcast brute-force pass;
+    larger point sets run the density-tiered ring rounds.
     """
-    q = xyz_cols(queries, "lat", "lon").withColumn(
-        "qcell", sf.s2_cell_id("lat", "lon")
-    ).select(
+    q = xyz_cols(queries, "lat", "lon").select(
         query_id,
-        "qcell",
+        "lat",
+        "lon",
         F.col("px").alias("qx"),
         F.col("py").alias("qy"),
         F.col("pz").alias("qz"),
     )
-    p = xyz_cols(points, "lat", "lon").withColumn(
-        "pcell", sf.s2_cell_id("lat", "lon")
-    ).select(point_id, "pcell", "px", "py", "pz")
-    p = p.cache()
+    p = xyz_cols(points, "lat", "lon")
+    n_pts = p.count()
+    if n_pts <= brute_max_points:
+        # small point side -> broadcast brute force: ONE pass, no ring
+        # rounds, all JVM (no cell ids, so no Python UDF). This is the
+        # broadcast-the-small-dim rule: ring search only pays off when the
+        # point side is too big to ship to every task. Exact, same
+        # (dist2, point_id) tie rule.
+        # Width guard: the BNLJ expansion (|q| * n_pts rows) runs in
+        # the query side's scan partitions — a single small parquet
+        # file would serialize it; at real scale the scan is already
+        # wide and this is a no-op (guide §2.5 input skew).
+        par = q.sparkSession.sparkContext.defaultParallelism
+        if q.rdd.getNumPartitions() < par:
+            q = q.repartition(par)
+        cand = q.crossJoin(F.broadcast(p.select(point_id, "px", "py", "pz")))
+        dist2 = (
+            (F.col("px") - F.col("qx")) ** 2
+            + (F.col("py") - F.col("qy")) ** 2
+            + (F.col("pz") - F.col("qz")) ** 2
+        )
+        cand = cand.withColumn("dist2", dist2)
+        if k == 1:
+            # min(struct) = lexicographic (dist2, point_id) argmin: a
+            # single hash aggregate, no per-query sort at all
+            m = cand.groupBy(query_id).agg(
+                F.min(F.struct("dist2", point_id)).alias("m")
+            )
+            return m.select(
+                query_id,
+                F.col(f"m.{point_id}").alias(point_id),
+                F.lit(1).alias("rank"),
+                F.col("m.dist2").alias("dist2"),
+            )
+        w = Window.partitionBy(query_id).orderBy("dist2", point_id)
+        return (
+            cand.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(query_id, point_id, "rank", "dist2")
+        )
 
-    if start_level is None:
-        n_pts = p.count()  # also materializes the cache
-        if n_pts <= brute_max_points:
-            # small point side -> broadcast brute force: ONE pass, no ring
-            # rounds, all JVM. This is the broadcast-the-small-dim rule:
-            # ring search only pays off when the point side is too big to
-            # ship to every task. Exact, same (dist2, point_id) tie rule.
-            # Width guard: the BNLJ expansion (|q| * n_pts rows) runs in
-            # the query side's scan partitions — a single small parquet
-            # file would serialize it; at real scale the scan is already
-            # wide and this is a no-op (guide §2.5 input skew).
-            par = q.sparkSession.sparkContext.defaultParallelism
-            if q.rdd.getNumPartitions() < par:
-                q = q.repartition(par)
-            cand = q.crossJoin(
-                F.broadcast(p.select(point_id, "px", "py", "pz"))
-            )
-            dist2 = (
-                (F.col("px") - F.col("qx")) ** 2
-                + (F.col("py") - F.col("qy")) ** 2
-                + (F.col("pz") - F.col("qz")) ** 2
-            )
-            cand = cand.withColumn("dist2", dist2)
-            p.unpersist()
-            if k == 1:
-                # min(struct) = lexicographic (dist2, point_id) argmin: a
-                # single hash aggregate, no per-query sort at all
-                m = cand.groupBy(query_id).agg(
-                    F.min(F.struct("dist2", point_id)).alias("m")
-                )
-                return m.select(
-                    query_id,
-                    F.col(f"m.{point_id}").alias(point_id),
-                    F.lit(1).alias("rank"),
-                    F.col("m.dist2").alias("dist2"),
-                )
-            w = Window.partitionBy(query_id).orderBy("dist2", point_id)
-            return (
-                cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(query_id, point_id, "rank", "dist2")
-            )
-        # coarse clamp from the GLOBAL count: for a sparse layer the probe
-        # level's rings are near-empty and every query pays extra rounds
-        # walking coarser; start instead at the finest level whose expected
-        # ring population (9 cells of the 6*4^L grid) still reaches a
-        # resolvable candidate pool. Exactness is unaffected — the round
-        # loop's resolution bound is what guarantees correctness.
-        need = max(32, 8 * k)
-        base = 0
-        while base < probe_level and 9 * n_pts / (6 * 4 ** (base + 1)) >= need:
-            base += 1
-        probe_level = min(probe_level, base)
-        # density probe: points per probe-level cell (bounded cardinality:
-        # <= 6*4^probe_level rows), broadcast onto queries. Each tier is 2
-        # levels (16x density) apart; ring population ~ 9 * local / 16^t.
-        counts = p.groupBy(
-            sf.s2_parent("pcell", probe_level).alias("probe_cell")
-        ).agg(F.count("*").alias("local_n"))
-        q = q.join(
-            F.broadcast(counts),
-            sf.s2_parent("qcell", probe_level) == F.col("probe_cell"),
-            "left",
-        ).drop("probe_cell")
-        local = F.coalesce(F.col("local_n"), F.lit(0))
-        tier = F.lit(0)
-        for t in range(1, n_tiers):
-            # tier t when the ring at tier t-1 would exceed target_ring
-            tier = F.when(
-                local * 9 > F.lit(int(target_ring) * (16 ** (t - 1))), F.lit(t)
-            ).otherwise(tier)
-        q = q.withColumn(
-            "lvl", (F.lit(probe_level) + 2 * tier).cast("int")
-        ).drop("local_n")
-        tier_levels = [probe_level + 2 * t for t in range(n_tiers)]
-    else:
-        q = q.withColumn("lvl", F.lit(int(start_level)).cast("int"))
-        tier_levels = [int(start_level)]
+    q = q.withColumn("qcell", sf.s2_cell_id("lat", "lon")).drop("lat", "lon")
+    p = p.withColumn("pcell", sf.s2_cell_id("lat", "lon")).select(
+        point_id, "pcell", "px", "py", "pz"
+    )
+    p = p.cache()
+    # coarse clamp from the GLOBAL count: for a sparse layer the probe
+    # level's rings are near-empty and every query pays extra rounds
+    # walking coarser; start instead at the finest level whose expected
+    # ring population (9 cells of the 6*4^L grid) still reaches a
+    # resolvable candidate pool. Exactness is unaffected — the round
+    # loop's resolution bound is what guarantees correctness.
+    need = max(32, 8 * k)
+    probe = 0
+    while probe < PROBE_LEVEL and 9 * n_pts / (6 * 4 ** (probe + 1)) >= need:
+        probe += 1
+    # density probe: points per probe-level cell (bounded cardinality:
+    # <= 6*4^probe rows), broadcast onto queries. Each tier is 2
+    # levels (16x density) apart; ring population ~ 9 * local / 16^t.
+    counts = p.groupBy(
+        sf.s2_parent("pcell", probe).alias("probe_cell")
+    ).agg(F.count("*").alias("local_n"))
+    q = q.join(
+        F.broadcast(counts),
+        sf.s2_parent("qcell", probe) == F.col("probe_cell"),
+        "left",
+    ).drop("probe_cell")
+    local = F.coalesce(F.col("local_n"), F.lit(0))
+    tier = F.lit(0)
+    for t in range(1, N_TIERS):
+        # tier t when the ring at tier t-1 would exceed TARGET_RING
+        tier = F.when(
+            local * 9 > F.lit(TARGET_RING * (16 ** (t - 1))), F.lit(t)
+        ).otherwise(tier)
+    q = q.withColumn(
+        "lvl", (F.lit(probe) + 2 * tier).cast("int")
+    ).drop("local_n")
+    tier_levels = [probe + 2 * t for t in range(N_TIERS)]
 
     max_level = max(tier_levels)
     n_rounds = -(-max_level // 2) + 1  # schedule reaches level 0 last round

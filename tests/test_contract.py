@@ -2,12 +2,17 @@
 DuckDB at sf0.001, compare row counts and order-insensitive values — the
 same gate the driver applies (CORRECTNESS_r{N}.json) at sf0.01."""
 
+import ast
+import pathlib
+import re
+
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
+import s2geo_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -52,8 +57,7 @@ QUERY_NAMES = sorted(entrymod.queries().keys())
 ROWS_ONLY: set = set()  # every query has a DuckDB oracle since round 2
 
 
-@pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, ddb, name):
+def _assert_matches_oracle(spark, ddb, name):
     q = entrymod.queries()[name]
     sql = entrymod.oracle_sql().get(name)
     raw_got = q(spark, SF_DIR).toPandas()
@@ -89,6 +93,90 @@ def test_query_matches_oracle(spark, ddb, name):
         else:
             eq = gv == wv
             assert eq.all(), (name, c, gv[~eq][:5], wv[~eq][:5])
+
+
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_query_matches_oracle(spark, ddb, name):
+    _assert_matches_oracle(spark, ddb, name)
+
+
+# the contract queries whose physical path turns on SPATIAL_BCAST_LIMIT,
+# and those of them that join a fixture layer's shape index
+BYTE_GATED = [
+    "dedup_clusters",
+    "dedup_jaccard_pairs",
+    "s2_boolean_counts",
+    "s2_boolean_degenerate",
+    "s2_buffer_contains",
+    "s2_edge_crossings",
+    "s2_pip_counts",
+    "s2_pip_join",
+    "s2_pip_large",
+    "s2_stream_tiles",
+    "s2_winding_counts",
+]
+INDEXED = set(BYTE_GATED) - {"dedup_clusters", "dedup_jaccard_pairs", "s2_edge_crossings"}
+BROADCAST_OP = re.compile(r"Broadcast(Exchange|HashJoin|NestedLoopJoin)")
+
+
+@pytest.mark.parametrize("name", BYTE_GATED)
+def test_forced_large_side_matches_oracle(
+    spark, ddb, name, monkeypatch, sql_execs, large_side
+):
+    """With the byte limit at 0 and Spark's own broadcast threshold off,
+    every gate takes its large side (shuffle joins, a persisted index,
+    distributed CC rounds) and the rows still match the oracle."""
+    from s2geo_spark import contract
+    from s2geo_spark.operators import dedup
+
+    indexes, rounds = [], []
+    layer_index, star_components = contract._layer_index, dedup._star_components
+    monkeypatch.setattr(
+        contract, "_layer_index", lambda *a: indexes.append(layer_index(*a)) or indexes[-1]
+    )
+    monkeypatch.setattr(
+        dedup, "_star_components", lambda *a: rounds.append(a) or star_components(*a)
+    )
+    mark = sql_execs.mark()
+    _assert_matches_oracle(spark, ddb, name)
+    ran = sql_execs.plans_since(mark)
+    assert ran and not any(BROADCAST_OP.search(p) for p in ran), name
+    if name in INDEXED:
+        assert indexes and not any(hasattr(i, "_s2_local_rows") for i in indexes)
+    assert bool(rounds) == (name == "dedup_clusters")
+
+
+def _limit_defaults(tree):
+    """Names of the defs whose default argument values read
+    SPATIAL_BCAST_LIMIT (bound once, when the def runs: a patched limit
+    never reaches them)."""
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            continue
+        defaults = node.args.defaults + [d for d in node.args.kw_defaults if d]
+        for sub in (n for d in defaults for n in ast.walk(d)):
+            if "SPATIAL_BCAST_LIMIT" in (getattr(sub, "id", None), getattr(sub, "attr", None)):
+                yield getattr(node, "name", "<lambda>")
+
+
+@pytest.mark.parametrize(
+    "src",
+    ["def f(x=SPATIAL_BCAST_LIMIT): pass",
+     "def f(*, x=spatial.SPATIAL_BCAST_LIMIT // 2): pass",
+     "g = lambda x=SPATIAL_BCAST_LIMIT: x"],
+)
+def test_guard_catches_limit_defaults(src):
+    assert list(_limit_defaults(ast.parse(src))) != []
+
+
+def test_no_limit_default_arguments():
+    pkg = pathlib.Path(s2geo_spark.__file__).parent
+    found = [
+        f"{path.relative_to(pkg)}:{name}"
+        for path in sorted(pkg.rglob("*.py"))
+        for name in _limit_defaults(ast.parse(path.read_text()))
+    ]
+    assert found == [], "read SPATIAL_BCAST_LIMIT when called: " + ", ".join(found)
 
 
 def test_entry_runs(spark):

@@ -37,6 +37,23 @@ def _xyz(pdf, lat, lon):
     return np.stack([x, y, z], axis=1)
 
 
+def _proper_crossings(a_pdf, b_pdf):
+    """Exhaustive oracle: every (a, b) pair whose edges properly cross."""
+    a1, a2 = _xyz(a_pdf, "lat1", "lon1"), _xyz(a_pdf, "lat2", "lon2")
+    b1, b2 = _xyz(b_pdf, "lat1", "lon1"), _xyz(b_pdf, "lat2", "lon2")
+    want = set()
+    for i in range(len(a_pdf)):
+        sign = ek.crossing_signs_pairs(
+            np.broadcast_to(a1[i], b1.shape),
+            np.broadcast_to(a2[i], b1.shape),
+            b1,
+            b2,
+        )
+        for j in np.nonzero(sign == 1)[0]:
+            want.add((i, int(j)))
+    return want
+
+
 class TestCrossingJoin:
     def test_matches_allpairs_oracle(self, spark):
         na, nb = 120, 150
@@ -44,17 +61,7 @@ class TestCrossingJoin:
         b_pdf = _edge_frame(nb, 2)
         a1, a2 = _xyz(a_pdf, "lat1", "lon1"), _xyz(a_pdf, "lat2", "lon2")
         b1, b2 = _xyz(b_pdf, "lat1", "lon1"), _xyz(b_pdf, "lat2", "lon2")
-        # exhaustive oracle
-        want = set()
-        for i in range(na):
-            sign = ek.crossing_signs_pairs(
-                np.broadcast_to(a1[i], b1.shape),
-                np.broadcast_to(a2[i], b1.shape),
-                b1,
-                b2,
-            )
-            for j in np.nonzero(sign == 1)[0]:
-                want.add((i, int(j)))
+        want = _proper_crossings(a_pdf, b_pdf)
         assert len(want) > 20  # fixture sanity
 
         a_df = spark.createDataFrame(a_pdf.rename(columns={"edge_id": "a_id"}))
@@ -72,6 +79,16 @@ class TestCrossingJoin:
             assert abs(np.dot(x, n1) / np.linalg.norm(n1)) < 1e-12
             assert abs(np.dot(x, n2) / np.linalg.norm(n2)) < 1e-12
             assert np.dot(x, a1[i] + a2[i]) > 0 and np.dot(x, b1[j] + b2[j]) > 0
+
+    def test_forced_shuffle_matches_allpairs_oracle(self, spark, sql_execs, large_side):
+        a_pdf, b_pdf = _edge_frame(120, 1), _edge_frame(150, 2)
+        a_df = spark.createDataFrame(a_pdf.rename(columns={"edge_id": "a_id"}))
+        b_df = spark.createDataFrame(b_pdf.rename(columns={"edge_id": "b_id"}))
+        mark = sql_execs.mark()
+        res = crossing.crossing_join(a_df, b_df, emit_points=False).toPandas()
+        ran = sql_execs.plans_since(mark)
+        assert ran and not any("BroadcastHashJoin" in p for p in ran)
+        assert set(zip(res["a_id"], res["b_id"])) == _proper_crossings(a_pdf, b_pdf)
 
     def test_no_cartesian_in_plan(self, spark):
         a_df = spark.createDataFrame(_edge_frame(30, 3).rename(columns={"edge_id": "a_id"}))

@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from s2geo_spark.operators import spatial
 from s2geo_spark.operators.dedup import connected_components
 
 
@@ -28,7 +29,7 @@ def _uf_components(n_nodes, edges):
     return {x: find(x) for x in range(n_nodes)}
 
 
-def _run(spark, n_nodes, edges, with_nodes=True, **kw):
+def _run(spark, n_nodes, edges, with_nodes=True):
     edf = spark.createDataFrame(
         [(int(u), int(v)) for u, v in edges] or [(0, 0)], "src long, dst long"
     )
@@ -39,7 +40,7 @@ def _run(spark, n_nodes, edges, with_nodes=True, **kw):
         if with_nodes
         else None
     )
-    out = connected_components(edf, nodes=ndf, **kw)
+    out = connected_components(edf, nodes=ndf)
     return {r["node"]: r["component"] for r in out.collect()}
 
 
@@ -77,18 +78,20 @@ class TestConnectedComponents:
         assert got == _uf_components(n, edges)
 
     @pytest.mark.parametrize("seed,n,m", [(11, 70, 60), (12, 50, 150)])
-    def test_distributed_rounds_match_driver_finisher(self, spark, seed, n, m):
+    def test_distributed_rounds_match_driver_finisher(self, spark, seed, n, m, monkeypatch):
         # both physical paths (size-gated driver union-find vs the
         # alternating-star rounds) must be label-identical
         rng = random.Random(seed)
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         driver = _run(spark, n, edges)  # default gate: driver finisher
-        dist = _run(spark, n, edges, max_driver_edges=0)  # force rounds
+        monkeypatch.setattr(spatial, "SPATIAL_BCAST_LIMIT", 0)  # force rounds
+        dist = _run(spark, n, edges)
         assert driver == dist == _uf_components(n, edges)
 
-    def test_distributed_long_path(self, spark):
+    def test_distributed_long_path(self, spark, monkeypatch):
         edges = [(i, i + 1) for i in range(199)]
-        got = _run(spark, 200, edges, max_driver_edges=0)
+        monkeypatch.setattr(spatial, "SPATIAL_BCAST_LIMIT", 0)  # force rounds
+        got = _run(spark, 200, edges)
         assert set(got.values()) == {0} and len(got) == 200
 
     def test_no_nodes_df_only_edge_endpoints(self, spark):

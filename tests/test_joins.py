@@ -207,8 +207,9 @@ class TestKnnJoin:
 
 class TestKnnBrutePath:
     """The size-gated broadcast brute-force fast path must return exactly
-    the ring-search result (same rows, same tie rule) — and actually be
-    the BroadcastNestedLoop plan it claims to be."""
+    the density-tiered ring-search result (same rows, same tie rule) —
+    and actually be the BroadcastNestedLoop plan it claims to be, with no
+    Python anywhere."""
 
     def test_brute_equals_rings(self, spark, points_df, points_pdf):
         qpdf = pd.DataFrame(
@@ -227,7 +228,7 @@ class TestKnnBrutePath:
             brute = knn_op.knn_join(q, points_df, k=k)
             plan = brute._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastNestedLoop" in plan  # the fast path was taken
-            rings = knn_op.knn_join(q, points_df, k=k, start_level=6)
+            rings = knn_op.knn_join(q, points_df, k=k, brute_max_points=0)
             b = (
                 brute.orderBy("query_id", "rank")
                 .select("query_id", "rank", "point_id")
@@ -239,6 +240,25 @@ class TestKnnBrutePath:
                 .toPandas()
             )
             assert b.equals(r), f"k={k}"
+            plan = rings._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastNestedLoop" not in plan  # the ring side ran
+
+    def test_brute_path_runs_no_python(self, spark, points_df, sql_execs):
+        q = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "query_id": np.arange(25, dtype=np.int64),
+                    "lat": RNG.uniform(-60, 60, 25),
+                    "lon": RNG.uniform(-180, 180, 25),
+                }
+            )
+        )
+        for k in (1, 4):
+            mark = sql_execs.mark()
+            knn_op.knn_join(q, points_df, k=k).collect()
+            ran = sql_execs.plans_since(mark)
+            assert any("BroadcastNestedLoop" in p for p in ran), k
+            assert not any("ArrowEvalPython" in p for p in ran), k
 
 
 class TestContainsJoinIndexed:
@@ -336,10 +356,10 @@ def _star_loop(rng, clat, clon, radius_deg, k):
     return regions.latlng_to_unit(lat, lon)
 
 
-def _join_rows(points, index_df, **kw):
+def _join_rows(points, index_df):
     return sorted(
         (int(r["point_id"]), int(r["polygon_id"]))
-        for r in spatial.contains_join_indexed(points, index_df, **kw)
+        for r in spatial.contains_join_indexed(points, index_df)
         .select("point_id", "polygon_id")
         .collect()
     )
@@ -350,7 +370,7 @@ class TestContainsParity:
     (PreparedLoop.contains_points) on every side of its two gates:
     {localized, persisted index} x {size-gated, forced-shuffle joins}."""
 
-    def test_random_loops_all_gate_sides(self, spark):
+    def test_random_loops_all_gate_sides(self, spark, monkeypatch):
         rng = np.random.default_rng(2024)
         polys, centers = {}, []
         for pid in range(1, 5):
@@ -413,16 +433,17 @@ class TestContainsParity:
         assert not hasattr(persisted, "_s2_local_rows")
         sides = {"localized": localized, "persisted": persisted}
         for (name, idx), (shape, p) in itertools.product(sides.items(), inputs.items()):
-            assert _join_rows(p, idx, broadcast_index=None) == want, (name, shape)
+            assert _join_rows(p, idx) == want, (name, shape)
         # forced shuffle: no hint, and no automatic broadcast either
+        monkeypatch.setattr(spatial, "SPATIAL_BCAST_LIMIT", 0)
         auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             for (name, idx), (shape, p) in itertools.product(sides.items(), inputs.items()):
-                shuffled = spatial.contains_join_indexed(p, idx, broadcast_index=False)
+                shuffled = spatial.contains_join_indexed(p, idx)
                 plan = shuffled._jdf.queryExecution().executedPlan().toString()
                 assert "BroadcastHashJoin" not in plan, (name, shape)
-                assert _join_rows(p, idx, broadcast_index=False) == want, (name, shape)
+                assert _join_rows(p, idx) == want, (name, shape)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
             persisted.unpersist()

@@ -91,9 +91,9 @@ class TestLocalizedIndexParity:
 
     def test_oversized_index_falls_back_to_persist(self, spark, pts):
         polys = spatial.polygons_to_df(spark, POLYGONS)
-        fallback = spatial.localize_index(
-            spark, spatial.build_index_df(polys), max_bytes=1
-        )
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(spatial, "SPATIAL_BCAST_LIMIT", 1)
+            fallback = spatial.localize_index(spark, spatial.build_index_df(polys))
         assert getattr(fallback, "_s2_local_rows", None) is None
         a = self._rows(spatial.contains_join_indexed(pts, fallback), False)
         local_idx = spatial.localize_index(
