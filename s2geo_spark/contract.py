@@ -660,14 +660,7 @@ def q_knn(spark, sf_dir):
         )
     )
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
-    # caller-side knowledge the operator cannot infer (same pattern as
-    # set_intersections' levels): the query side is the ~25-row nation
-    # probe set, so brute work is |q|*n_pts and the broadcast-brute path
-    # beats ring rounds while the point side fits the 2M-row (~64 MB)
-    # broadcast budget; past that the density-tiered rings take over.
-    return knn_op.knn_join(
-        queries, pts, k=fx.KNN_K, brute_max_points=2_000_000
-    ).select(
+    return knn_op.knn_join(queries, pts, k=fx.KNN_K).select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("point_id").alias("neighbor_id"),
@@ -687,10 +680,7 @@ def q_furthest(spark, sf_dir):
         )
     )
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
-    # same caller-side brute gate as q_knn (25-query probe set)
-    return knn_op.furthest_join(
-        queries, pts, k=fx.KNN_K, brute_max_points=2_000_000
-    ).select(
+    return knn_op.furthest_join(queries, pts, k=fx.KNN_K).select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("point_id").alias("neighbor_id"),

@@ -619,3 +619,31 @@ def append_all_neighbors(cell_id, nbr_level):
             break
         k += nbr_s
     return np.stack(cols, axis=-1)
+
+
+# the six face cells (level 0): a ring that covers the whole sphere
+FACE_CELLS = np.array([(2 * f + 1) << 60 for f in range(NUM_FACES)], dtype=np.uint64)
+
+
+def ring_cells(cell_id, levels):
+    """Each cell's ancestor at its row's level plus that ancestor's 8
+    same-level neighbors (append_all_neighbors), as an (n, 9) uint64
+    array; rows are grouped by level, one neighbor walk per level.
+
+    Level-0 rows hold the six face cells (faces 0-2 repeated to fill the
+    row): the 3x3 ring of a face omits the antipodal face, the six faces
+    cover the sphere. Cube-corner rings repeat a neighbor too, so callers
+    dedupe.
+    """
+    cell_id = np.asarray(cell_id, dtype=np.uint64)
+    levels = np.asarray(levels, dtype=np.int64)
+    out = np.empty((len(cell_id), 9), dtype=np.uint64)
+    for lvl in np.unique(levels):
+        rows = levels == lvl
+        if lvl == 0:
+            out[rows] = np.resize(FACE_CELLS, 9)
+            continue
+        anc = parent(cell_id[rows], int(lvl))
+        out[rows, 0] = anc
+        out[rows, 1:] = append_all_neighbors(anc, int(lvl))
+    return out

@@ -8,9 +8,10 @@ src/s2/s2edge_crossings.cc:360-420).
 Plan (the 100TB shape):
   1. each edge -> its adaptive-level ring covering (cell of endpoint A at
      the level whose kMinWidth >= edge length, + 8 neighbors): the ring
-     provably covers the edge, computed by one pandas UDF reusing the kNN
-     ring kernel (AppendAllNeighbors); the level choice is pure Catalyst
-     (log2 of the chord angle);
+     provably covers the edge; one pandas UDF encodes endpoint A and builds
+     its ring with cellid_v1.ring_cells, the ring kernel of the kNN and
+     distance joins; the level choice is pure Catalyst (log2 of the chord
+     angle);
   2. candidate (a, b) pairs via the ancestor/covering term duality — two
      hash equi-joins (cellset.set_intersections), never a cartesian
      product;
@@ -29,8 +30,8 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import ArrayType, LongType
 
-from s2geo_spark import functions as sf
 from s2geo_spark.operators import spatial
+from s2geo_spark.kernel import cellid_v1 as v1
 from s2geo_spark.kernel import metrics
 from s2geo_spark.memo import memo
 from s2geo_spark.operators.cellset import set_intersections
@@ -38,26 +39,11 @@ from s2geo_spark.operators.cellset import set_intersections
 
 @F.pandas_udf(ArrayType(LongType()))
 def _edge_rings_udf(lat: pd.Series, lon: pd.Series, level: pd.Series) -> pd.Series:
-    """lat/lon + per-row level -> ancestor ring (cell + 8 neighbors) in ONE
-    Arrow round trip (encode + parent + AppendAllNeighbors fused)."""
-    from s2geo_spark.kernel import cellid_v1 as v1
-
+    """lat/lon + per-row level -> cellid_v1.ring_cells of the leaf, encode
+    and ring in ONE Arrow round trip (a ring UDF over an encode UDF would
+    not chain: two arguments, two ArrowEvalPython operators)."""
     leaf = v1.from_latlng(lat.to_numpy(), lon.to_numpy())
-    lv = level.to_numpy(dtype=np.int64)
-    out = [None] * len(leaf)
-    for L in np.unique(lv):
-        rows = np.nonzero(lv == L)[0]
-        anc = v1.parent(leaf[rows], int(L))
-        if L == 0:
-            faces = [int(np.int64(np.uint64((2 * f + 1) << 60))) for f in range(6)]
-            for r in rows:
-                out[r] = faces  # sphere-covering terminal ring
-            continue
-        rings = v1.append_all_neighbors(anc, int(L))
-        full = np.concatenate([anc[:, None], rings], axis=1).view(np.int64)
-        for pos, r in enumerate(rows):
-            out[r] = full[pos].tolist()
-    return pd.Series(out)
+    return pd.Series(list(v1.ring_cells(leaf, level.to_numpy()).view(np.int64)))
 
 
 def _xyz(lat, lon, px, py, pz):
@@ -87,6 +73,18 @@ def _edge_level_from_chord2(chord2, max_level: int):
     return F.greatest(F.least(lvl, F.lit(max_level)), F.lit(0)).cast("int")
 
 
+def _with_edge_level(edges, lat1, lon1, lat2, lon2, max_level):
+    """edges + an int `lvl` column: the ring level of each edge (JVM-only)."""
+    e = edges.withColumns(_xyz(lat1, lon1, "ax", "ay", "az"))
+    e = e.withColumns(_xyz(lat2, lon2, "bx", "by", "bz"))
+    chord2 = (
+        (F.col("ax") - F.col("bx")) ** 2
+        + (F.col("ay") - F.col("by")) ** 2
+        + (F.col("az") - F.col("bz")) ** 2
+    )
+    return e.withColumn("lvl", _edge_level_from_chord2(chord2, max_level))
+
+
 def edge_levels(
     edges: DataFrame,
     lat1: str = "lat1",
@@ -96,20 +94,13 @@ def edge_levels(
     max_level: int = 16,
 ) -> tuple[list, int]:
     """(distinct ring levels, row count) of an edge set from ONE aggregate
-    — the same level expression the ring covering uses, but JVM-only (no
+    — the same level column the ring covering uses, but JVM-only (no
     ring UDF), so probing it is cheap."""
-    e = edges.withColumns(_xyz(lat1, lon1, "ax", "ay", "az"))
-    e = e.withColumns(_xyz(lat2, lon2, "bx", "by", "bz"))
-    chord2 = (
-        (F.col("ax") - F.col("bx")) ** 2
-        + (F.col("ay") - F.col("by")) ** 2
-        + (F.col("az") - F.col("bz")) ** 2
-    )
-    lvl = _edge_level_from_chord2(chord2, max_level)
+    e = _with_edge_level(edges, lat1, lon1, lat2, lon2, max_level)
 
     def probe():
         r = e.agg(
-            F.collect_set(lvl).alias("lvls"), F.count("*").alias("n")
+            F.collect_set("lvl").alias("lvls"), F.count("*").alias("n")
         ).collect()[0]
         return sorted(int(v) for v in r["lvls"]), int(r["n"])
 
@@ -134,14 +125,7 @@ def edge_ring_cells(
     with the float-slop nudge); the ring around endpoint-1's ancestor then
     provably contains the whole edge (every edge point is within
     edge-length <= kMinWidth(L) of endpoint 1)."""
-    e = edges.withColumns(_xyz(lat1, lon1, "ax", "ay", "az"))
-    e = e.withColumns(_xyz(lat2, lon2, "bx", "by", "bz"))
-    chord2 = (
-        (F.col("ax") - F.col("bx")) ** 2
-        + (F.col("ay") - F.col("by")) ** 2
-        + (F.col("az") - F.col("bz")) ** 2
-    )
-    ring = e.withColumn("lvl", _edge_level_from_chord2(chord2, max_level))
+    ring = _with_edge_level(edges, lat1, lon1, lat2, lon2, max_level)
     return ring.select(
         edge_id,
         F.explode(

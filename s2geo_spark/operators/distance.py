@@ -14,14 +14,13 @@ prefilter (src/s2/s2cell_union.cc:450-480):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from s2geo_spark import functions as sf
 from s2geo_spark.kernel import cellid_v1 as v1
 from s2geo_spark.kernel import metrics
+from s2geo_spark.operators.knn import _ring_cells
 from s2geo_spark.operators.spatial import xyz_cols
 
 
@@ -63,19 +62,12 @@ def distance_join(
     lvl = _ring_level_for_radius(radius_rad)
     chord2 = float((2.0 * np.sin(0.5 * radius_rad)) ** 2)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def ring(cell: pd.Series) -> pd.Series:
-        ids = cell.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-        anc = v1.parent(ids, lvl)
-        rings = v1.append_all_neighbors(anc, lvl)
-        return pd.Series(list(np.concatenate([anc[:, None], rings], 1).view(np.int64)))
-
     l = xyz_cols(left).withColumn("lcell", sf.s2_cell_id("lat", "lon")).select(
         left_id,
         F.col("px").alias("lx"),
         F.col("py").alias("ly"),
         F.col("pz").alias("lz"),
-        F.explode(F.array_distinct(ring(F.col("lcell")))).alias("jcell"),
+        F.explode(F.array_distinct(_ring_cells("lcell", F.lit(lvl)))).alias("jcell"),
     )
     r = xyz_cols(right).withColumn("rcell", sf.s2_cell_id("lat", "lon")).select(
         right_id,

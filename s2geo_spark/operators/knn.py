@@ -38,9 +38,7 @@ from pyspark.sql.types import ArrayType, LongType
 from s2geo_spark import functions as sf
 from s2geo_spark.kernel import cellid_v1 as v1
 from s2geo_spark.kernel import metrics
-from s2geo_spark.operators.spatial import xyz_cols
-
-_FACE_CELLS = [np.int64(np.uint64((2 * f + 1) << 60)) for f in range(6)]
+from s2geo_spark.operators import spatial
 
 # density tiers of the ring path: points are counted per PROBE_LEVEL cell;
 # N_TIERS start levels 2 apart (16x density); a query moves one tier finer
@@ -49,30 +47,18 @@ PROBE_LEVEL = 4
 TARGET_RING = 4096
 N_TIERS = 4
 
+# the brute-force pass's |q| x |p| pair budget (q_knn's 25 probes x 2M
+# points); read when knn_join is called, so tests force the ring rounds
+# with monkeypatch.setattr(knn, "BRUTE_MAX_PAIRS", 0)
+BRUTE_MAX_PAIRS = 50_000_000
+
 
 @F.pandas_udf(ArrayType(LongType()))
 def _ring_cells(cell: pd.Series, level: pd.Series) -> pd.Series:
-    """Query cell's ancestor at `level` + all 8 same-level neighbors;
-    level 0 returns all 6 face cells (sphere-covering terminal ring).
-
-    Mixed levels per batch are grouped (cross-face wrap needs the kernel's
-    AppendAllNeighbors, src/s2/s2cell_id_v1.cc:570-611)."""
+    """cellid_v1.ring_cells per row: the cell's ancestor at `level` + its
+    8 neighbors; level 0 gives the 6 face cells (sphere-covering ring)."""
     ids = cell.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-    lv = level.to_numpy(dtype=np.int64)
-    out = [None] * len(ids)
-    faces = [int(c) for c in _FACE_CELLS]
-    for L in np.unique(lv):
-        rows = np.nonzero(lv == L)[0]
-        if L == 0:
-            for r in rows:
-                out[r] = faces
-            continue
-        anc = v1.parent(ids[rows], int(L))
-        rings = v1.append_all_neighbors(anc, int(L))
-        full = np.concatenate([anc[:, None], rings], axis=1).view(np.int64)
-        for pos, r in enumerate(rows):
-            out[r] = full[pos].tolist()
-    return pd.Series(out)
+    return pd.Series(list(v1.ring_cells(ids, level.to_numpy()).view(np.int64)))
 
 
 def _safe_chord2(level: int) -> float:
@@ -86,25 +72,103 @@ def _safe_chord2(level: int) -> float:
     )
 
 
+def _chord2(ax, ay, az, bx, by, bz):
+    return (
+        (F.col(ax) - F.col(bx)) ** 2
+        + (F.col(ay) - F.col(by)) ** 2
+        + (F.col(az) - F.col(bz)) ** 2
+    )
+
+
+def _ring_rounds(remaining, start_levels, k, query_id, candidates, ties, held):
+    """The resolve-or-widen round loop of knn_join and closest_cell_join.
+
+    remaining: (query_id, qcell, lvl, ...) with each lvl in start_levels.
+    Each round explodes the remaining queries to one row per ring cell
+    `rc` and asks candidates(ring, levels) (levels: the round's distinct
+    lvl values) for candidate rows with a dist2 column; it keeps the top
+    k per query by (dist2, *ties). A query resolves when it has k
+    candidates and the kth is within the ring's guaranteed radius at its
+    level, or at level 0 (the face ring covers the sphere); the rest move
+    2 levels coarser. Returns the resolved rows' (query_id, *ties, rank,
+    dist2); `held` and every cache the loop took are unpersisted before
+    return.
+    """
+    n_rounds = -(-max(start_levels) // 2) + 1  # the last round is at level 0
+    w = Window.partitionBy(query_id).orderBy("dist2", *ties)
+    results, cached = [], [held]
+    for r in range(n_rounds):
+        levels = sorted({max(L - 2 * r, 0) for L in start_levels})
+        ring = remaining.withColumn(
+            "rc", F.explode(F.array_distinct(_ring_cells("qcell", "lvl")))
+        )
+        topk = (
+            candidates(ring, levels)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+        ).cache()  # feeds both the resolution agg and the result rows
+        cached.append(topk)
+        # per-level resolution bound as a column expression
+        bound = F.lit(_safe_chord2(levels[-1]))
+        for L in levels[:-1]:
+            bound = F.when(F.col("lvl") == L, F.lit(_safe_chord2(L))).otherwise(bound)
+        per_query = topk.groupBy(query_id, "lvl").agg(
+            F.count("*").alias("n_cand"), F.max("dist2").alias("kth_dist2")
+        )
+        resolved_ids = per_query.filter(
+            (F.col("lvl") <= 0)
+            | ((F.col("n_cand") == k) & (F.col("kth_dist2") <= bound))
+        ).select(query_id)
+        # eager localCheckpoint truncates lineage so the round caches can
+        # be dropped before return (VERDICT r2 #8: a long session must not
+        # accumulate cached round blocks). Resolved rows are tiny (<= k per
+        # resolved query); on a real cluster the trade is executor-storage
+        # volatility vs unbounded cache growth — growth loses.
+        results.append(
+            topk.join(F.broadcast(resolved_ids), query_id, "leftsemi")
+            .select(query_id, *ties, "rank", "dist2")
+            .localCheckpoint(eager=True)
+        )
+        if r == n_rounds - 1:
+            break
+        remaining = (
+            remaining.join(F.broadcast(resolved_ids), query_id, "left_anti")
+            .withColumn("lvl", F.greatest(F.col("lvl") - 2, F.lit(0)))
+            .cache()
+        )
+        cached.append(remaining)
+        if remaining.isEmpty():
+            break
+
+    out = results[0]
+    for res in results[1:]:
+        out = out.unionByName(res)
+    for df in cached:
+        df.unpersist()
+    return out
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
     k: int,
     query_id: str = "query_id",
     point_id: str = "point_id",
-    brute_max_points: int = 4096,
 ) -> DataFrame:
     """For each query (query_id, lat, lon): the k nearest points
     (point_id, lat, lon) by spherical distance, ties broken by point_id.
 
     Returns (query_id, point_id, rank, dist2) with rank 1..k and
     dist2 = squared chord distance (monotone in angle, like S1ChordAngle —
-    src/s2/s1chord_angle.h).
+    src/s2/s1chord_angle.h). Rows with a null or NaN lat or lon drop on
+    both sides.
 
-    Up to brute_max_points points take one broadcast brute-force pass;
-    larger point sets run the density-tiered ring rounds.
+    One broadcast brute-force pass runs while the points' broadcast
+    (point_id, px, py, pz: 32 B each) fits spatial.SPATIAL_BCAST_LIMIT and
+    |q| x |p| <= BRUTE_MAX_PAIRS; otherwise the density-tiered ring rounds
+    run. Both counts come from one job.
     """
-    q = xyz_cols(queries, "lat", "lon").select(
+    q = spatial.xyz_cols(queries.dropna(subset=["lat", "lon"])).select(
         query_id,
         "lat",
         "lon",
@@ -112,14 +176,19 @@ def knn_join(
         F.col("py").alias("qy"),
         F.col("pz").alias("qz"),
     )
-    p = xyz_cols(points, "lat", "lon")
-    n_pts = p.count()
-    if n_pts <= brute_max_points:
-        # small point side -> broadcast brute force: ONE pass, no ring
-        # rounds, all JVM (no cell ids, so no Python UDF). This is the
-        # broadcast-the-small-dim rule: ring search only pays off when the
-        # point side is too big to ship to every task. Exact, same
-        # (dist2, point_id) tie rule.
+    p = spatial.xyz_cols(points.dropna(subset=["lat", "lon"]))
+    n = dict(
+        q.select(F.lit("q").alias("side"))
+        .unionByName(p.select(F.lit("p").alias("side")))
+        .groupBy("side")
+        .count()
+        .collect()
+    )
+    n_q, n_pts = n.get("q", 0), n.get("p", 0)
+    if 32 * n_pts <= spatial.SPATIAL_BCAST_LIMIT and n_q * n_pts <= BRUTE_MAX_PAIRS:
+        # broadcast brute force: ONE pass, no ring rounds, all JVM (no
+        # cell ids, so no Python UDF). Exact, same (dist2, point_id) tie
+        # rule.
         # Width guard: the BNLJ expansion (|q| * n_pts rows) runs in
         # the query side's scan partitions — a single small parquet
         # file would serialize it; at real scale the scan is already
@@ -128,12 +197,7 @@ def knn_join(
         if q.rdd.getNumPartitions() < par:
             q = q.repartition(par)
         cand = q.crossJoin(F.broadcast(p.select(point_id, "px", "py", "pz")))
-        dist2 = (
-            (F.col("px") - F.col("qx")) ** 2
-            + (F.col("py") - F.col("qy")) ** 2
-            + (F.col("pz") - F.col("qz")) ** 2
-        )
-        cand = cand.withColumn("dist2", dist2)
+        cand = cand.withColumn("dist2", _chord2("px", "py", "pz", "qx", "qy", "qz"))
         if k == 1:
             # min(struct) = lexicographic (dist2, point_id) argmin: a
             # single hash aggregate, no per-query sort at all
@@ -189,81 +253,21 @@ def knn_join(
     q = q.withColumn(
         "lvl", (F.lit(probe) + 2 * tier).cast("int")
     ).drop("local_n")
-    tier_levels = [probe + 2 * t for t in range(N_TIERS)]
 
-    max_level = max(tier_levels)
-    n_rounds = -(-max_level // 2) + 1  # schedule reaches level 0 last round
-
-    results = []
-    cached = [p]  # every .cache() this loop takes is unpersisted on exit
-    remaining = q
-    for r in range(n_rounds):
-        # static per-round level set: tier levels shifted down 2r, floor 0
-        active_levels = sorted({max(L - 2 * r, 0) for L in tier_levels})
-        ring = remaining.withColumn(
-            "rc", F.explode(F.array_distinct(_ring_cells("qcell", "lvl")))
-        )
-        # point terms at every statically-active level (cell ids encode
-        # their level, so cross-level matches are impossible)
+    def candidates(ring, levels):
+        # point terms at every level of the round (cell ids encode their
+        # level, so cross-level matches are impossible)
         pterm = p.withColumn(
-            "pc",
-            F.explode(
-                F.array(*[sf.s2_parent("pcell", L) for L in active_levels])
-                if len(active_levels) > 1
-                else F.array(sf.s2_parent("pcell", active_levels[0]))
-            ),
+            "pc", F.explode(F.array(*[sf.s2_parent("pcell", L) for L in levels]))
         )
-        cand = ring.join(pterm, F.col("rc") == F.col("pc"), "inner")
-        dist2 = (
-            (F.col("px") - F.col("qx")) ** 2
-            + (F.col("py") - F.col("qy")) ** 2
-            + (F.col("pz") - F.col("qz")) ** 2
+        return ring.join(pterm, F.col("rc") == F.col("pc"), "inner").withColumn(
+            "dist2", _chord2("px", "py", "pz", "qx", "qy", "qz")
         )
-        w = Window.partitionBy(query_id).orderBy("dist2", point_id)
-        topk = (
-            cand.withColumn("dist2", dist2)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        ).cache()  # feeds both the resolution agg and the result rows
-        cached.append(topk)
-        # per-level resolution bound as a column expression
-        bound = F.lit(_safe_chord2(active_levels[-1]))
-        for L in active_levels[:-1]:
-            bound = F.when(F.col("lvl") == L, F.lit(_safe_chord2(L))).otherwise(bound)
-        per_query = topk.groupBy(query_id, "lvl").agg(
-            F.count("*").alias("n_cand"), F.max("dist2").alias("kth_dist2")
-        )
-        resolved_ids = per_query.filter(
-            (F.col("lvl") <= 0)
-            | ((F.col("n_cand") == k) & (F.col("kth_dist2") <= bound))
-        ).select(query_id)
-        # eager localCheckpoint truncates lineage so the round caches can
-        # be dropped before return (VERDICT r2 #8: a long session must not
-        # accumulate cached round blocks). Resolved rows are tiny (<= k per
-        # resolved query); on a real cluster the trade is executor-storage
-        # volatility vs unbounded cache growth — growth loses.
-        results.append(
-            topk.join(F.broadcast(resolved_ids), query_id, "leftsemi")
-            .select(query_id, point_id, "rank", "dist2")
-            .localCheckpoint(eager=True)
-        )
-        if r == n_rounds - 1:
-            break
-        remaining = (
-            remaining.join(F.broadcast(resolved_ids), query_id, "left_anti")
-            .withColumn("lvl", F.greatest(F.col("lvl") - 2, F.lit(0)))
-            .cache()
-        )
-        cached.append(remaining)
-        if remaining.isEmpty():
-            break
 
-    out = results[0]
-    for res in results[1:]:
-        out = out.unionByName(res)
-    for df in cached:
-        df.unpersist()
-    return out
+    return _ring_rounds(
+        q, [probe + 2 * t for t in range(N_TIERS)], k, query_id,
+        candidates, [point_id], held=p,
+    )
 
 
 def furthest_join(
@@ -272,7 +276,6 @@ def furthest_join(
     k: int,
     query_id: str = "query_id",
     point_id: str = "point_id",
-    **kwargs,
 ) -> DataFrame:
     """k FURTHEST points per query (S2FurthestPointQuery /
     s2furthest_edge_query.cc:122 semantics for point targets).
@@ -288,9 +291,7 @@ def furthest_join(
             F.col("lon") + 180.0
         ),
     )
-    near = knn_join(
-        anti, points, k, query_id=query_id, point_id=point_id, **kwargs
-    )
+    near = knn_join(anti, points, k, query_id=query_id, point_id=point_id)
     return near.select(
         query_id,
         point_id,
@@ -316,10 +317,9 @@ def closest_cell_join(
     distance is the EXACT point-to-cell chord distance
     (cells.distance2_to_points, s2cell.cc:369-430), not the center
     approximation. Terminal round joins every cell (face-level ring)."""
-    q = xyz_cols(queries, "lat", "lon").withColumn(
-        "qcell", sf.s2_cell_id("lat", "lon")
-    ).select(
-        query_id, "qcell",
+    q = spatial.xyz_cols(queries).select(
+        query_id,
+        sf.s2_cell_id("lat", "lon").alias("qcell"),
         F.col("px").alias("qx"), F.col("py").alias("qy"), F.col("pz").alias("qz"),
     )
     c = cells.select(cell_label, F.col("cell").alias("tcell")).withColumn(
@@ -341,79 +341,35 @@ def closest_cell_join(
             )
         )
 
-    results = []
-    cached = [c]  # unpersisted on exit (VERDICT r2 #8)
-    remaining = q.withColumn("ring_lvl", F.lit(max(levels)).cast("int"))
-    n_rounds = -(-max(levels) // 2) + 1
-    for r in range(n_rounds):
-        lvl_round = max(max(levels) - 2 * r, 0)
+    def candidates(ring, round_levels):
+        (lvl,) = round_levels  # every query starts at, and moves with, max(levels)
         # two-sided term duality (cells intersect iff one contains the
         # other): ring side emits rc + rc's ancestors at coarser TARGET
         # levels; target side emits tcell + its ancestors at the ring
         # level. Spurious equal-ancestor matches are harmless — the exact
         # distance residual filters them.
-        coarser_t = [tl for tl in levels if tl < lvl_round]
-        rc_col = F.col("rc")
         qterms = F.array_distinct(
-            F.array(rc_col, *[sf.s2_parent("rc", tl) for tl in coarser_t])
-        ) if coarser_t else F.array(rc_col)
-        ring = remaining.withColumn(
-            "rc", F.explode(F.array_distinct(_ring_cells("qcell", "ring_lvl")))
-        ).withColumn("qt", F.explode(qterms)).drop("rc")
-        lv_t = F.col("tlvl")
+            F.array("rc", *[sf.s2_parent("rc", tl) for tl in levels if tl < lvl])
+        )
         tterms = F.array_distinct(
             F.filter(
                 F.array(
                     F.col("tcell"),
-                    F.when(
-                        F.lit(lvl_round) <= lv_t,
-                        sf.s2_parent("tcell", lvl_round),
-                    ),
+                    F.when(F.lit(lvl) <= F.col("tlvl"), sf.s2_parent("tcell", lvl)),
                 ),
                 lambda x: x.isNotNull(),
             )
         )
-        pterm = c.withColumn("tt", F.explode(tterms))
-        cand = ring.join(pterm, F.col("qt") == F.col("tt"), "inner").drop(
-            "qt", "tt"
+        qt = ring.withColumn("qt", F.explode(qterms)).drop("rc")
+        tt = c.withColumn("tt", F.explode(tterms))
+        return (
+            qt.join(tt, F.col("qt") == F.col("tt"), "inner")
+            .drop("qt", "tt")
+            .withColumn("dist2", cell_dist2("tcell", "qx", "qy", "qz"))
+            .dropDuplicates([query_id, cell_label, "tcell"])
         )
-        cand = cand.withColumn(
-            "dist2", cell_dist2("tcell", "qx", "qy", "qz")
-        ).dropDuplicates([query_id, cell_label, "tcell"])
-        w = Window.partitionBy(query_id).orderBy("dist2", cell_label, "tcell")
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        ).cache()
-        cached.append(topk)
-        lvl_now = lvl_round
-        bound = F.lit(_safe_chord2(lvl_now))
-        per_query = topk.groupBy(query_id).agg(
-            F.count("*").alias("n_cand"), F.max("dist2").alias("kth")
-        )
-        resolved = per_query.filter(
-            (F.lit(lvl_now) <= 0) | ((F.col("n_cand") == k) & (F.col("kth") <= bound))
-        ).select(query_id)
-        results.append(
-            topk.join(F.broadcast(resolved), query_id, "leftsemi")
-            .select(
-                query_id, cell_label, F.col("tcell").alias("cell"), "rank", "dist2"
-            )
-            .localCheckpoint(eager=True)
-        )
-        if r == n_rounds - 1:
-            break
-        remaining = (
-            remaining.join(F.broadcast(resolved), query_id, "left_anti")
-            .withColumn("ring_lvl", F.greatest(F.col("ring_lvl") - 2, F.lit(0)))
-            .cache()
-        )
-        cached.append(remaining)
-        if remaining.isEmpty():
-            break
-    out = results[0]
-    for res in results[1:]:
-        out = out.unionByName(res)
-    for df in cached:
-        df.unpersist()
-    return out
+
+    return _ring_rounds(
+        q.withColumn("lvl", F.lit(max(levels))), [max(levels)], k, query_id,
+        candidates, [cell_label, "tcell"], held=c,
+    ).withColumnRenamed("tcell", "cell")

@@ -54,6 +54,8 @@ TERM_MAX_CELLS = 8
 #   crossing.crossing_join            24 B per term: <=9 ring cells per
 #                                     edge x (1 + the other side's levels)
 #   contract._jaccard_build           16 B per shingle
+#   knn.knn_join brute-force pass     32 B per point (point_id, px, py,
+#                                     pz), with |q| x |p| <= BRUTE_MAX_PAIRS
 #   dedup.connected_components        dedup.DRIVER_BYTES_PER_EDGE per
 #                                     canonical edge (driver finish)
 SPATIAL_BCAST_LIMIT = 256 << 20

@@ -146,16 +146,34 @@ def test_forced_large_side_matches_oracle(
     assert bool(rounds) == (name == "dedup_clusters")
 
 
+@pytest.mark.parametrize("name", ["s2_furthest", "s2_hausdorff", "s2_knn"])
+def test_forced_ring_side_matches_oracle(spark, ddb, name, monkeypatch, sql_execs):
+    """With BRUTE_MAX_PAIRS at 0 the kNN family runs the density-tiered
+    ring rounds instead of the broadcast brute pass, and the rows still
+    match the oracle."""
+    from s2geo_spark.operators import knn
+
+    monkeypatch.setattr(knn, "BRUTE_MAX_PAIRS", 0)
+    mark = sql_execs.mark()
+    _assert_matches_oracle(spark, ddb, name)
+    ran = sql_execs.plans_since(mark)
+    assert ran and not any("BroadcastNestedLoopJoin" in p for p in ran), name
+
+
+# limits that tests patch, so a gate must read them when it is called
+PATCHED_LIMITS = {"SPATIAL_BCAST_LIMIT", "BRUTE_MAX_PAIRS"}
+
+
 def _limit_defaults(tree):
-    """Names of the defs whose default argument values read
-    SPATIAL_BCAST_LIMIT (bound once, when the def runs: a patched limit
-    never reaches them)."""
+    """Names of the defs whose default argument values read a patched
+    limit (bound once, when the def runs: a patched limit never reaches
+    them)."""
     for node in ast.walk(tree):
         if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
             continue
         defaults = node.args.defaults + [d for d in node.args.kw_defaults if d]
         for sub in (n for d in defaults for n in ast.walk(d)):
-            if "SPATIAL_BCAST_LIMIT" in (getattr(sub, "id", None), getattr(sub, "attr", None)):
+            if {getattr(sub, "id", None), getattr(sub, "attr", None)} & PATCHED_LIMITS:
                 yield getattr(node, "name", "<lambda>")
 
 
@@ -163,7 +181,8 @@ def _limit_defaults(tree):
     "src",
     ["def f(x=SPATIAL_BCAST_LIMIT): pass",
      "def f(*, x=spatial.SPATIAL_BCAST_LIMIT // 2): pass",
-     "g = lambda x=SPATIAL_BCAST_LIMIT: x"],
+     "g = lambda x=SPATIAL_BCAST_LIMIT: x",
+     "def f(q, p, max_pairs=knn.BRUTE_MAX_PAIRS): pass"],
 )
 def test_guard_catches_limit_defaults(src):
     assert list(_limit_defaults(ast.parse(src))) != []
@@ -176,7 +195,7 @@ def test_no_limit_default_arguments():
         for path in sorted(pkg.rglob("*.py"))
         for name in _limit_defaults(ast.parse(path.read_text()))
     ]
-    assert found == [], "read SPATIAL_BCAST_LIMIT when called: " + ", ".join(found)
+    assert found == [], "read limits when called: " + ", ".join(found)
 
 
 def test_entry_runs(spark):

@@ -211,7 +211,10 @@ class TestKnnBrutePath:
     and actually be the BroadcastNestedLoop plan it claims to be, with no
     Python anywhere."""
 
-    def test_brute_equals_rings(self, spark, points_df, points_pdf):
+    def test_brute_equals_rings(self, spark, points_df, points_pdf, monkeypatch):
+        """Rows with a null or NaN coordinate drop on both sides, so brute
+        force, the rings and the oracle over the valid rows agree (a null
+        dist2 used to sort first on the brute path)."""
         qpdf = pd.DataFrame(
             {
                 "query_id": np.arange(12, dtype=np.int64),
@@ -223,17 +226,49 @@ class TestKnnBrutePath:
                 ),
             }
         )
-        q = spark.createDataFrame(qpdf)
+        schema = "id long, lat double, lon double"
+        q = spark.createDataFrame(qpdf).unionByName(
+            spark.createDataFrame([(12, None, 8.0)], schema).withColumnRenamed("id", "query_id")
+        )
+        pts = points_df.unionByName(
+            spark.createDataFrame(
+                [(N_POINTS, None, 8.0), (N_POINTS + 1, 47.0, None),
+                 (N_POINTS + 2, float("nan"), 8.0)],
+                schema,
+            ).withColumnRenamed("id", "point_id")
+        )
+        px, py, pz = sc.latlng_degrees_to_xyz(
+            points_pdf["lat"].to_numpy(), points_pdf["lon"].to_numpy()
+        )
+        qx, qy, qz = sc.latlng_degrees_to_xyz(
+            qpdf["lat"].to_numpy(), qpdf["lon"].to_numpy()
+        )
+        d2 = (
+            (qx[:, None] - px) ** 2 + (qy[:, None] - py) ** 2 + (qz[:, None] - pz) ** 2
+        )
         for k in (1, 4):
-            brute = knn_op.knn_join(q, points_df, k=k)
+            want = pd.DataFrame(
+                [
+                    (qi, rank + 1, int(pid))
+                    for qi in range(len(qpdf))
+                    for rank, pid in enumerate(
+                        np.lexsort((points_pdf["point_id"].to_numpy(), d2[qi]))[:k]
+                    )
+                ],
+                columns=["query_id", "rank", "point_id"],
+            )
+            brute = knn_op.knn_join(q, pts, k=k)
             plan = brute._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastNestedLoop" in plan  # the fast path was taken
-            rings = knn_op.knn_join(q, points_df, k=k, brute_max_points=0)
             b = (
                 brute.orderBy("query_id", "rank")
                 .select("query_id", "rank", "point_id")
                 .toPandas()
             )
+            assert b.astype("int64").equals(want), f"k={k}"
+            with monkeypatch.context() as m:
+                m.setattr(knn_op, "BRUTE_MAX_PAIRS", 0)
+                rings = knn_op.knn_join(q, pts, k=k)
             r = (
                 rings.orderBy("query_id", "rank")
                 .select("query_id", "rank", "point_id")
@@ -242,6 +277,14 @@ class TestKnnBrutePath:
             assert b.equals(r), f"k={k}"
             plan = rings._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastNestedLoop" not in plan  # the ring side ran
+
+    def test_brute_gate_reads_point_bytes(self, spark, points_df, monkeypatch):
+        """The points' broadcast (32 B each) must fit the byte limit too."""
+        q = spark.createDataFrame([(0, 47.0, 8.0)], "query_id long, lat double, lon double")
+        for limit, brute in ((32 * N_POINTS, True), (32 * N_POINTS - 1, False)):
+            monkeypatch.setattr(spatial, "SPATIAL_BCAST_LIMIT", limit)
+            plan = knn_op.knn_join(q, points_df, k=2)._jdf.queryExecution()
+            assert ("BroadcastNestedLoop" in plan.executedPlan().toString()) == brute
 
     def test_brute_path_runs_no_python(self, spark, points_df, sql_execs):
         q = spark.createDataFrame(
@@ -476,7 +519,8 @@ class TestKnnSkewed:
     skew fixture from VERDICT r1 #8. Exact vs exhaustive numpy oracle and
     no cartesian product anywhere in the executed plan."""
 
-    def test_skewed_exact_and_no_cartesian(self, spark):
+    def test_skewed_exact_and_no_cartesian(self, spark, monkeypatch):
+        monkeypatch.setattr(knn_op, "BRUTE_MAX_PAIRS", 0)  # the ring rounds
         rng = np.random.default_rng(99)
         # points: 5000 in a dense "city" (0.2 deg), 50 scattered globally
         n_city, n_scatter = 5000, 50

@@ -188,6 +188,17 @@ class TestCellIdV1:
         )
         assert got == expect
 
+    def test_ring_cells_mixed_levels(self):
+        # each row: its ancestor + the 8 neighbors at its own level; level
+        # 0 rows hold all six faces (the face-3 ring above omits face 0)
+        leaf = v1.from_latlng(np.array([47.3769, 10.0, 47.3769]), np.array([8.5417, 20.0, 8.5417]))
+        ring = v1.ring_cells(leaf, [12, 0, 5])
+        for row, lvl in ((0, 12), (2, 5)):
+            anc = v1.parent(leaf[row : row + 1], lvl)
+            assert ring[row, 0] == anc[0]
+            assert (ring[row, 1:] == v1.append_all_neighbors(anc, lvl)[0]).all()
+        assert set(ring[1]) == set(v1.FACE_CELLS)
+
     def test_edge_neighbors_symmetry(self):
         x, y, z = random_points(2000)
         cells = v1.parent(v1.from_point(x, y, z), 6)

@@ -150,7 +150,8 @@ class TestJaccardSizeGate:
 
 
 class TestKnnUnpersist:
-    def test_no_leaked_cache_entries(self, spark):
+    def test_no_leaked_cache_entries(self, spark, monkeypatch):
+        monkeypatch.setattr(knn, "BRUTE_MAX_PAIRS", 0)  # the ring rounds cache
         spark.catalog.clearCache()
         q_pdf = pd.DataFrame(
             {
