@@ -140,8 +140,7 @@ def _points_df(spark, sf_dir, table, key) -> DataFrame:
 def q_face_counts(spark, sf_dir):
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
     return (
-        pts.withColumn("cell", sf.s2_cell_id("lat", "lon"))
-        .select(sf.s2_face_expr("cell").alias("face"))
+        sf.s2_face_ij_attach(pts, "lat", "lon", face="face")
         .groupBy("face")
         .agg(F.count("*").alias("cnt"))
     )
@@ -2787,9 +2786,11 @@ FROM sig a JOIN sig b ON a.mh1 = b.mh1 AND a.doc_id < b.doc_id
 """
 
 
-def _shingles(spark, sf_dir, distinct: bool = True):
-    """Distinct 12-char shingles per doc, as TWO int64 hashes — the
-    near-dup unit.
+def _shingles(spark, sf_dir):
+    """Every 12-char shingle per doc, as TWO int64 hashes — the near-dup
+    unit. Repeats within a doc are kept: both consumers aggregate them
+    away (a min per band, a collect_set), so a per-doc dedup exchange
+    would shuffle the whole shingle stream for nothing (guide §2.4).
 
     The scalable pattern: all-pairs token joins blow up on common tokens
     (O(sum df^2)); instead LSH (minhash bands) proposes candidates and the
@@ -2800,16 +2801,12 @@ def _shingles(spark, sf_dir, distinct: bool = True):
     (~2^-60-scale) are mirrored exactly by the oracle, which computes the
     same substrings. (A same-digest two-slice variant was tried and
     rejected: its band-2 argmin re-clustered the planted duplicate docs
-    and doubled the candidate pairs.)
-
-    distinct=False skips the per-doc dedup exchange for consumers whose
-    aggregates are duplicate-insensitive (min per band) — one full
-    shuffle of the shingle stream saved (guide §2.4)."""
+    and doubled the candidate pairs.)"""
     docs = _tw(spark, sf_dir, "documents")
     s = F.expr("substr(text, pos, 12)")
     m1 = F.md5(s)
     m2 = F.md5(F.concat(F.lit("salt:"), s))
-    raw = (
+    return (
         docs.select(
             "doc_id",
             F.explode(
@@ -2823,7 +2820,6 @@ def _shingles(spark, sf_dir, distinct: bool = True):
             F.conv(F.substring(m2, 1, 15), 16, 10).cast("long").alias("g2"),
         )
     )
-    return raw.distinct() if distinct else raw
 
 
 def _jaccard_build(spark, sf_dir):
@@ -2851,7 +2847,7 @@ def _jaccard_build(spark, sf_dir):
     # of a separate full-stream distinct exchange (guide §2.3 "aggregate
     # before you shuffle"); min() is duplicate-insensitive, and gs keeps
     # the exact per-distinct-(g,g2) multiset of g the oracle computes
-    sh = _shingles(spark, sf_dir, distinct=False)
+    sh = _shingles(spark, sf_dir)
     stats = (
         sh.groupBy("doc_id")
         .agg(
@@ -3030,7 +3026,7 @@ def q_dedup_clusters(spark, sf_dir):
     docs = _tw(spark, sf_dir, "documents")
     # min per band is duplicate-insensitive: skip the shingle-dedup
     # exchange entirely (one full shuffle of the 10M-row stream saved)
-    sig = _shingles(spark, sf_dir, distinct=False).groupBy("doc_id").agg(
+    sig = _shingles(spark, sf_dir).groupBy("doc_id").agg(
         F.min("g").alias("mh1"), F.min("g2").alias("mh2")
     )
     edges = None

@@ -34,7 +34,6 @@ __all__ = [
     "h3_kring",
     "h3_parent",
     "s2_cell_id",
-    "s2_cell_from_fij",
     "s2_cell_id_at",
     "s2_face_ij_attach",
     "quad_key",
@@ -83,18 +82,6 @@ def s2_cell_id(lat: pd.Series, lon: pd.Series) -> pd.Series:
     )
     if mask.any():
         ids = np.where(mask.to_numpy(), np.uint64(0), ids)
-    return _i64(ids)
-
-
-@F.pandas_udf(LongType())
-def s2_cell_from_fij(face: pd.Series, i: pd.Series, j: pd.Series) -> pd.Series:
-    """(face, i, j) leaf coords -> v1 leaf cell id (Hilbert interleave only;
-    pairs with s2_face_ij_attach so the trig stays JVM-side)."""
-    ids = _v1.from_face_ij(
-        face.to_numpy(dtype=np.int64, na_value=0),
-        i.to_numpy(dtype=np.int64, na_value=0),
-        j.to_numpy(dtype=np.int64, na_value=0),
-    )
     return _i64(ids)
 
 

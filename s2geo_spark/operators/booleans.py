@@ -22,12 +22,10 @@ def region_covering_df(
     polys: DataFrame,
     out_id: str,
     id_col: str = "polygon_id",
-    max_cells: int = 8,
-    min_level: int = 4,
-    max_level: int = 16,
 ) -> DataFrame:
     """(polygon_id, loops) -> (out_id, cell) covering relation, computed
-    distributed (applyInPandas per polygon). The union of per-loop
+    distributed (applyInPandas per polygon) with the term-indexer
+    defaults (spatial.TERM_*). The union of per-loop
     coverings covers the XOR-nested region (the outer loop's covering
     alone already does; holes only shrink it), so it is a valid candidate
     filter for pair enumeration."""
@@ -35,6 +33,7 @@ def region_covering_df(
     def per(key, pdf: pd.DataFrame) -> pd.DataFrame:
         from s2geo_spark.kernel import cellunion, coverer
         from s2geo_spark.kernel import loops as lps
+        from s2geo_spark.operators import spatial
 
         rows = []
         for _, r in pdf.iterrows():
@@ -46,9 +45,9 @@ def region_covering_df(
                 covs.append(
                     coverer.get_covering(
                         lp,
-                        max_cells=max_cells,
-                        min_level=min_level,
-                        max_level=max_level,
+                        max_cells=spatial.TERM_MAX_CELLS,
+                        min_level=spatial.TERM_MIN_LEVEL,
+                        max_level=spatial.TERM_MAX_LEVEL,
                     )
                 )
             cells = cellunion.normalize(

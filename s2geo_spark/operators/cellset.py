@@ -71,7 +71,6 @@ def _tagged_terms(df: DataFrame, id_col: str, anc_levels: list) -> DataFrame:
 
 def set_intersections(
     a: DataFrame, b: DataFrame, a_id: str = "a_id", b_id: str = "b_id",
-    min_level: int = 0, max_level: int = 30,
     levels_a: list | None = None, levels_b: list | None = None,
     broadcast_side: str | None = None,
 ) -> DataFrame:
@@ -88,22 +87,14 @@ def set_intersections(
     A side's ancestor terms are generated only at the levels actually
     present on the OTHER side (a term can only equi-match a cell at that
     cell's own level), so the explode factor is the other side's distinct
-    level count, not the [min_level, max_level] span. Callers that
+    level count, not the span of levels. Callers that
     already know their level sets (e.g. crossing_join, whose ring levels
     come from a pure-JVM expression) pass levels_a/levels_b to skip the
     probe. broadcast_side ("a"/"b") lets a caller that KNOWS one layer is
     small (size-gated upstream) ship that side's terms to every task —
     the big side's exploded terms then never shuffle."""
-    lv_a = [
-        L
-        for L in (levels_a if levels_a is not None else _levels_of(a))
-        if min_level <= L <= max_level
-    ]
-    lv_b = [
-        L
-        for L in (levels_b if levels_b is not None else _levels_of(b))
-        if min_level <= L <= max_level
-    ]
+    lv_a = levels_a if levels_a is not None else _levels_of(a)
+    lv_b = levels_b if levels_b is not None else _levels_of(b)
     at = _tagged_terms(a, a_id, lv_b)
     bt = _tagged_terms(b, b_id, lv_a)
     if broadcast_side == "a":

@@ -36,6 +36,9 @@ from s2geo_spark.kernel import metrics
 from s2geo_spark.memo import memo
 from s2geo_spark.operators.cellset import set_intersections
 
+# finest ring level: shorter edges get rings at this level too
+MAX_RING_LEVEL = 16
+
 
 @F.pandas_udf(ArrayType(LongType()))
 def _edge_rings_udf(lat: pd.Series, lon: pd.Series, level: pd.Series) -> pd.Series:
@@ -56,7 +59,7 @@ def _xyz(lat, lon, px, py, pz):
     }
 
 
-def _edge_level_from_chord2(chord2, max_level: int):
+def _edge_level_from_chord2(chord2):
     """Ring level column from an edge's squared chord length: coarsest
     level with kMinWidth >= edge angle (the reference's ilogb metric
     inversion, s2metrics.h:184-189, with the float-slop nudge of
@@ -70,10 +73,10 @@ def _edge_level_from_chord2(chord2, max_level: int):
     lvl = F.when(too_small, raw - 1).otherwise(raw)
     ok_finer = (F.lit(metrics.MIN_WIDTH_DERIV) * F.pow(2.0, -(lvl + 1))) >= angle
     lvl = F.when(ok_finer, lvl + 1).otherwise(lvl)
-    return F.greatest(F.least(lvl, F.lit(max_level)), F.lit(0)).cast("int")
+    return F.greatest(F.least(lvl, F.lit(MAX_RING_LEVEL)), F.lit(0)).cast("int")
 
 
-def _with_edge_level(edges, lat1, lon1, lat2, lon2, max_level):
+def _with_edge_level(edges, lat1, lon1, lat2, lon2):
     """edges + an int `lvl` column: the ring level of each edge (JVM-only)."""
     e = edges.withColumns(_xyz(lat1, lon1, "ax", "ay", "az"))
     e = e.withColumns(_xyz(lat2, lon2, "bx", "by", "bz"))
@@ -82,7 +85,7 @@ def _with_edge_level(edges, lat1, lon1, lat2, lon2, max_level):
         + (F.col("ay") - F.col("by")) ** 2
         + (F.col("az") - F.col("bz")) ** 2
     )
-    return e.withColumn("lvl", _edge_level_from_chord2(chord2, max_level))
+    return e.withColumn("lvl", _edge_level_from_chord2(chord2))
 
 
 def edge_levels(
@@ -91,12 +94,11 @@ def edge_levels(
     lon1: str = "lon1",
     lat2: str = "lat2",
     lon2: str = "lon2",
-    max_level: int = 16,
 ) -> tuple[list, int]:
     """(distinct ring levels, row count) of an edge set from ONE aggregate
     — the same level column the ring covering uses, but JVM-only (no
     ring UDF), so probing it is cheap."""
-    e = _with_edge_level(edges, lat1, lon1, lat2, lon2, max_level)
+    e = _with_edge_level(edges, lat1, lon1, lat2, lon2)
 
     def probe():
         r = e.agg(
@@ -104,9 +106,9 @@ def edge_levels(
         ).collect()[0]
         return sorted(int(v) for v in r["lvls"]), int(r["n"])
 
-    # memoized per (edges object, column names, max_level): the result is
-    # a pure function of those, and crossing queries probe it per call
-    return memo(edges, ("edge_levels", lat1, lon1, lat2, lon2, max_level), probe)
+    # memoized per (edges object, column names): the result is a pure
+    # function of those, and crossing queries probe it per call
+    return memo(edges, ("edge_levels", lat1, lon1, lat2, lon2), probe)
 
 
 def edge_ring_cells(
@@ -116,7 +118,6 @@ def edge_ring_cells(
     lon1: str = "lon1",
     lat2: str = "lat2",
     lon2: str = "lon2",
-    max_level: int = 16,
 ) -> DataFrame:
     """(edge_id, cell) ring covering per edge.
 
@@ -125,7 +126,7 @@ def edge_ring_cells(
     with the float-slop nudge); the ring around endpoint-1's ancestor then
     provably contains the whole edge (every edge point is within
     edge-length <= kMinWidth(L) of endpoint 1)."""
-    ring = _with_edge_level(edges, lat1, lon1, lat2, lon2, max_level)
+    ring = _with_edge_level(edges, lat1, lon1, lat2, lon2)
     return ring.select(
         edge_id,
         F.explode(
@@ -164,7 +165,7 @@ def crossing_join(
     if min(est_a, est_b) <= spatial.SPATIAL_BCAST_LIMIT:
         bcast = "a" if est_a <= est_b else "b"
     cand = set_intersections(
-        a_cells, b_cells, a_id="a_id_", b_id="b_id_", min_level=0, max_level=16,
+        a_cells, b_cells, a_id="a_id_", b_id="b_id_",
         levels_a=la, levels_b=lb, broadcast_side=bcast,
     )
 

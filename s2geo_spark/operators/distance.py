@@ -18,10 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from s2geo_spark import functions as sf
-from s2geo_spark.kernel import cellid_v1 as v1
 from s2geo_spark.kernel import metrics
 from s2geo_spark.operators.knn import _ring_cells
-from s2geo_spark.operators.spatial import xyz_cols
+from s2geo_spark.operators.spatial import covering_join, xyz_cols
 
 
 def _ring_level_for_radius(radius_rad: float) -> int:
@@ -100,8 +99,9 @@ def polyline_distance_join(
 
     polylines: {line_id: (m,3) unit vertices}. Plan: cover each polyline
     expanded by the radius (coverer over the Polyline region + ring
-    expand), broadcast, ancestor equi-join, exact point-edge chord residual
-    in one mapInPandas. Returns (point_id, line_id, dist2).
+    expand) -> spatial.covering_join on quad keys -> exact point-edge
+    chord residual in one mapInPandas. Null/NaN lat or lon rows drop.
+    Returns (point_id, line_id, dist2).
     """
     import pandas as pd
 
@@ -120,19 +120,12 @@ def polyline_distance_join(
         cov = cellunion.expand_by_level(cov, expand_level)
         for c in cov:
             rows.append((lid, int(np.int64(np.uint64(c)))))
-    cov_df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["line_id", "ccell"])
+    cov = pd.DataFrame(rows, columns=["line_id", "cell"])
+    cand = (
+        covering_join(points, cov)
+        .select(point_id, "lat", "lon", "line_id")
+        .distinct()
     )
-    levels = sorted(
-        {int(lv) for lv in v1.level(np.array([r[1] for r in rows], dtype=np.int64).view(np.uint64))}
-    )
-
-    pts = points.withColumn("leaf", sf.s2_cell_id("lat", "lon"))
-    anc = F.array(*[sf.s2_parent("leaf", L) for L in levels])
-    terms = pts.withColumn("term", F.explode(anc))
-    cand = terms.join(
-        F.broadcast(cov_df), terms["term"] == cov_df["ccell"]
-    ).select(point_id, "lat", "lon", "line_id").distinct()
 
     bc = spark.sparkContext.broadcast({int(k): v for k, v in polylines.items()})
     out_schema = f"{point_id} string, line_id long, dist2 double" if dict(points.dtypes).get(point_id) == "string" else f"{point_id} long, line_id long, dist2 double"

@@ -19,7 +19,12 @@ src/s2/s2region_term_indexer.cc:121-289):
                   clipped edges (Arrow-batched); interior-cell matches are
                   contained by construction (the reference's
                   contains_center fast path, src/s2/s2shape_index.h
-                  S2ClippedShape). Caps: a chord-distance Catalyst filter.
+                  S2ClippedShape). The clipped edges reach the residual
+                  one way per index, chosen from the index itself: one
+                  per-executor broadcast when its detail estimate fits
+                  SPATIAL_BCAST_LIMIT and its (polygon_id, cell) keys are
+                  unique, else a detail join on that key.
+                  Caps: a chord-distance Catalyst filter.
 
 Term-indexer defaults match the reference: max_cells=8, min_level=4,
 max_level=16, level_mod=1 (src/s2/s2region_term_indexer.cc:96-102).
@@ -49,8 +54,11 @@ TERM_MAX_CELLS = 8
 # large side with monkeypatch.setattr(spatial, "SPATIAL_BCAST_LIMIT", 0).
 # The gates and the estimate each compares with it:
 #   contains_join_indexed slim join   ~40 B per index row
-#   contains_join_indexed detail join ~48 B per index row + 9 B per edge
-#     element; localize_index collects the index on the same estimate
+#   contains_join_indexed detail      ~48 B per index row + 9 B per edge
+#     broadcast                       element; past it (or on duplicate
+#                                     keys) an unhinted detail join;
+#                                     localize_index collects the index
+#                                     on the same estimate
 #   crossing.crossing_join            24 B per term: <=9 ring cells per
 #                                     edge x (1 + the other side's levels)
 #   contract._jaccard_build           16 B per shingle
@@ -59,16 +67,6 @@ TERM_MAX_CELLS = 8
 #   dedup.connected_components        dedup.DRIVER_BYTES_PER_EDGE per
 #                                     canonical edge (driver finish)
 SPATIAL_BCAST_LIMIT = 256 << 20
-
-
-def _gate_broadcast(df: DataFrame, est_bytes: int) -> DataFrame:
-    """Broadcast df when est_bytes fits SPATIAL_BCAST_LIMIT.
-
-    Past the gate the equi-join becomes a shuffle hash join keyed on the
-    cell/quad id — the north_rule's "cell-id-repartitioned" strategy —
-    with AQE skew splitting handling hot cells.
-    """
-    return F.broadcast(df) if est_bytes <= SPATIAL_BCAST_LIMIT else df
 
 
 def cell_quads(cells) -> tuple[np.ndarray, np.ndarray]:
@@ -111,13 +109,7 @@ def polygons_to_df(
     return spark.createDataFrame(rows, "polygon_id long, loops array<array<double>>")
 
 
-def build_index_df(
-    polys: DataFrame,
-    min_level: int = TERM_MIN_LEVEL,
-    max_level: int = TERM_MAX_LEVEL,
-    max_cells: int = TERM_MAX_CELLS,
-    max_edges_per_cell: int = 16,
-) -> DataFrame:
+def build_index_df(polys: DataFrame) -> DataFrame:
     """Distributed polygon prep (VERDICT r1 #5 / SURVEY §3.2): covering +
     per-cell clipped edge lists computed in an applyInPandas over the
     polygon DataFrame — no driver-side per-polygon loop, no whole-polygon
@@ -126,7 +118,7 @@ def build_index_df(
       (polygon_id, cell, quad, lvl, is_interior, contains_center,
        edges array<double> (6 per edge), ksigns array<int>)
 
-    Boundary cells hold <= max_edges_per_cell clipped edges
+    Boundary cells hold <= shapeindex.MAX_EDGES_PER_CELL clipped edges
     (mutable_s2shape_index.cc:69-76); the residual tests only those.
     """
     schema = (
@@ -146,10 +138,9 @@ def build_index_df(
             ]
             idx = _si.build_polygon_index(
                 loop_arrays,
-                min_level=min_level,
-                max_level=max_level,
-                max_cells=max_cells,
-                max_edges_per_cell=max_edges_per_cell,
+                min_level=TERM_MIN_LEVEL,
+                max_level=TERM_MAX_LEVEL,
+                max_cells=TERM_MAX_CELLS,
             )
             quad, lvl = cell_quads(idx["cell"])
             out.append(
@@ -179,8 +170,9 @@ def build_index_df(
 def _index_stats(index_df: DataFrame) -> tuple[list[int], int, int]:
     """(distinct levels, slim bytes, detail bytes) of a shape-index table
     from ONE aggregate, memoized on the table object. The byte estimates
-    size the broadcast gates and localize_index: the slim projection is
-    ~40 B/row; the detail one ~48 B/row + 9 B per edge element."""
+    size the slim and detail broadcasts and localize_index: the slim
+    projection is ~40 B/row; the detail one ~48 B/row + 9 B per edge
+    element."""
 
     def build():
         r = index_df.agg(
@@ -201,19 +193,14 @@ def localize_index(spark: SparkSession, index_df: DataFrame) -> DataFrame:
     (SURVEY §3.2: in production the covering table is materialized to
     storage). A `.persist()` memo is defeated by any later
     `spark.catalog.clearCache()` — every subsequent join then re-runs the
-    whole applyInPandas build, TWICE per contains_join_indexed call (the
-    slim and detail projections both read it). Collecting the (tiny)
-    table once and re-creating it as a LocalTableScan makes the memo
+    whole applyInPandas build. Collecting the (tiny) table once and
+    re-creating it as a driver-local relation makes the memo
     unconditional: no recompute, no cache entry to lose, and the
-    broadcast build reads driver-local rows.
+    broadcast builds read driver-local rows.
 
     The table is persisted first, so _index_stats' one aggregate builds it
     once for both outcomes. Only when its detail estimate fits
-    SPATIAL_BCAST_LIMIT is it collected; otherwise it stays persisted,
-    preserving the distributed path's semantics. It also stays persisted
-    when two rows share a (polygon_id, cell) key (e.g. a union of index
-    tables): the localized detail map holds one payload per key, while the
-    detail join emits one row per matching detail row.
+    SPATIAL_BCAST_LIMIT is it collected; otherwise it stays persisted.
     """
     was_cached = index_df.is_cached
     df = index_df.persist()
@@ -221,37 +208,50 @@ def localize_index(spark: SparkSession, index_df: DataFrame) -> DataFrame:
     if stats[2] > SPATIAL_BCAST_LIMIT:  # the detail broadcast's estimate
         return df
     rows = df.collect()
-    if len({(r["polygon_id"], r["cell"]) for r in rows}) < len(rows):
-        return df
     if not was_cached:
         df.unpersist()
     local = spark.createDataFrame(rows, df.schema)
     memo(local, "indexed_stats", lambda: stats)
-    # keep the raw rows on the object: contains_join_indexed uses them to
-    # ship the boundary detail ONCE as a task broadcast instead of
-    # attaching per-row edge arrays through a join + Arrow (guide §4.1:
-    # control how many bytes cross the Python boundary)
-    local._s2_local_rows = rows
     return local
 
 
-def _residual_group(pid: int, cell: int, contains_center: bool, edges, ksigns, pts3):
-    """Worker-side anchored parity for one (polygon, cell) group.
+def _cell_payload(cell: int, contains_center: bool, edges, ksigns):
+    """One boundary cell's residual inputs, the leading arguments of
+    shapeindex.contains_from_anchor: (cell-center anchor, contains_center,
+    (e, 6) clipped edges, (e,) crossing signs)."""
+    cx, cy, cz = v1.to_point(np.array([cell], dtype=np.int64).view(np.uint64))
+    return (
+        np.array([cx[0], cy[0], cz[0]]),
+        bool(contains_center),
+        np.asarray(edges, dtype=np.float64).reshape(-1, 6),
+        np.asarray(ksigns, dtype=np.int8),
+    )
 
-    NOT memoized: two index tables can legitimately share a (polygon_id,
-    cell) key with different edge payloads (rebuilt index, overlapping id
-    spaces — ADVICE r2), and the edges ship with every row anyway; the
-    avoided work is one to_point + two reshapes per group, which is noise
-    next to the parity test itself."""
-    from s2geo_spark.kernel import cellid_v1 as _v1
-    from s2geo_spark.kernel import shapeindex as _si
 
-    cid = np.array([cell], dtype=np.int64).view(np.uint64)
-    cx, cy, cz = _v1.to_point(cid)
-    anchor = np.array([cx[0], cy[0], cz[0]])
-    em = np.asarray(edges, dtype=np.float64).reshape(-1, 6)
-    km = np.asarray(ksigns, dtype=np.int8)
-    return _si.contains_from_anchor(anchor, bool(contains_center), em, km, pts3)
+def _detail_broadcast(index_df: DataFrame):
+    """{(polygon_id, cell): _cell_payload} of the index's boundary cells
+    as one task broadcast, built once from the index's own rows and
+    memoized on it; None when two rows share a (polygon_id, cell) key
+    (e.g. a union of index tables): the map holds one payload per key,
+    while the detail join emits one row per matching detail row."""
+
+    def build():
+        rows = index_df.select(
+            "polygon_id", "cell", "is_interior", "contains_center", "edges", "ksigns"
+        ).collect()
+        if len({(r["polygon_id"], r["cell"]) for r in rows}) < len(rows):
+            return None
+        return index_df.sparkSession.sparkContext.broadcast(
+            {
+                (int(r["polygon_id"]), int(r["cell"])): _cell_payload(
+                    r["cell"], r["contains_center"], r["edges"], r["ksigns"]
+                )
+                for r in rows
+                if not r["is_interior"]
+            }
+        )
+
+    return memo(index_df, "detail_bc", build)
 
 
 def contains_join_indexed(
@@ -274,27 +274,24 @@ def contains_join_indexed(
          work on a few thousand rows), and splits skewed partitions (hot
          cells); streaming plans (no AQE) get spark.sql.shuffle.partitions
          tasks;
-      4. detail attach of (contains_center, edges, ksigns) on
-         (polygon_id, cell): for a LOCALIZED index (localize_index) the
-         detail ships ONCE per task as a Python broadcast — no join, no
-         per-row edge arrays through Arrow (guide §4.1); otherwise the
-         broadcast-join re-attach keeps rows slim through 3;
+      4. boundary detail (contains_center, edges, ksigns) per (polygon_id,
+         cell), one transport chosen from the index alone: when its detail
+         estimate fits SPATIAL_BCAST_LIMIT and its keys are unique, ONE
+         per-executor broadcast of the boundary cells' payloads, so no
+         edge array crosses Arrow (guide §4.1); otherwise one unhinted
+         detail join on the key;
       5. mapInPandas residual: interior rows stream through; boundary rows
-         run the anchored crossing parity against <=max_edges_per_cell
-         clipped edges — work scales with edges-per-cell, not polygon size
-         (s2loop.cc:549-601 indexed walk).
+         run the anchored crossing parity against
+         <=shapeindex.MAX_EDGES_PER_CELL clipped edges — work scales with
+         edges-per-cell, not polygon size (s2loop.cc:549-601 indexed walk).
     SEMI_OPEN vertex model: rows are bit-identical to the kernel's
     PreparedLoop.contains_points on every side of both gates (localized
     vs persisted index, broadcast vs shuffle); tests force the shuffle
     side by patching SPATIAL_BCAST_LIMIT to 0.
 
-    Both broadcasts are size-gated against SPATIAL_BCAST_LIMIT (slim:
-    ~40B/row; detail: ~48B/row + 9B/edge element); past the gate both
-    joins shuffle on their keys with AQE skew handling. Null/NaN lat or
-    lon rows drop.
+    Past the slim gate (~40B/row) the equi-join shuffles on the quad key
+    with AQE skew handling. Null/NaN lat or lon rows drop.
     """
-    spark = points.sparkSession
-    local_rows = getattr(index_df, "_s2_local_rows", None)
     # memoized on the index object: the flagship and every q_pip_* call
     # reuse one index table, so only its build pays the stats job
     levels, slim_est, detail_est = _index_stats(index_df)
@@ -309,38 +306,17 @@ def contains_join_indexed(
     terms = pts.withColumn("term", F.explode(F.when(valid, quads)))
 
     slim = index_df.select("quad", "polygon_id", "cell", "is_interior")
-    slim = _gate_broadcast(slim, slim_est)
+    if slim_est <= SPATIAL_BCAST_LIMIT:
+        slim = F.broadcast(slim)
     cand = terms.join(slim, terms["term"] == slim["quad"], "inner").drop(
         "term", "quad"
     )
     cand = cand.hint("rebalance")
 
     detail_bc = None
-    if local_rows is not None:
-        # Localized index: pre-group the boundary detail on the driver
-        # (anchor point, clipped-edge matrix, crossing signs — a few KB)
-        # and ship it ONCE per executor. The per-row join would instead
-        # duplicate up to max_edges_per_cell*6 doubles onto every
-        # boundary candidate and drag them through Arrow.
-        def _build_detail():
-            from s2geo_spark.kernel import cellid_v1 as _v1
-
-            dmap = {}
-            for r in local_rows:
-                if r["is_interior"]:
-                    continue
-                cid = np.array([r["cell"]], dtype=np.int64).view(np.uint64)
-                cx, cy, cz = _v1.to_point(cid)
-                dmap[(int(r["polygon_id"]), int(r["cell"]))] = (
-                    np.array([cx[0], cy[0], cz[0]]),
-                    bool(r["contains_center"]),
-                    np.asarray(r["edges"], dtype=np.float64).reshape(-1, 6),
-                    np.asarray(r["ksigns"], dtype=np.int8),
-                )
-            return spark.sparkContext.broadcast(dmap)
-
-        detail_bc = memo(index_df, "detail_bc", _build_detail)
-    else:
+    if detail_est <= SPATIAL_BCAST_LIMIT:
+        detail_bc = _detail_broadcast(index_df)
+    if detail_bc is None:
         detail = index_df.select(
             F.col("polygon_id").alias("d_pid"),
             F.col("cell").alias("d_cell"),
@@ -348,7 +324,6 @@ def contains_join_indexed(
             "edges",
             "ksigns",
         )
-        detail = _gate_broadcast(detail, detail_est)
         cand = cand.join(
             detail,
             (cand["polygon_id"] == detail["d_pid"])
@@ -396,21 +371,18 @@ def contains_join_indexed(
                     rows = order[bounds[gi]:bounds[gi + 1]]
                     key = (int(sp[bounds[gi]]), int(sc_[bounds[gi]]))
                     if detail_bc is not None:
-                        anchor, cc, em, km = detail_bc.value[key]
-                        inside = _si.contains_from_anchor(
-                            anchor, cc, em, km, pts3_all[rows]
-                        )
+                        payload = detail_bc.value[key]
                     else:
                         first = boundary.iloc[rows[0]]
-                        inside = _residual_group(
-                            key[0],
+                        payload = _cell_payload(
                             key[1],
-                            bool(first["contains_center"]),
+                            first["contains_center"],
                             first["edges"],
                             first["ksigns"],
-                            pts3_all[rows],
                         )
-                    keep[pos[rows]] = inside
+                    keep[pos[rows]] = _si.contains_from_anchor(
+                        *payload, pts3_all[rows]
+                    )
             out = pdf.loc[keep].drop(
                 columns=[
                     c
@@ -432,7 +404,8 @@ def contains_join_indexed(
 
 
 # ---------------------------------------------------------------------------
-# Cap containment join (distance-style predicate, fully JVM-side residual)
+# Driver-covering joins (caps here, polylines in distance.py): quad-key
+# candidates, then each caller's exact residual
 # ---------------------------------------------------------------------------
 
 def xyz_cols(df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
@@ -448,6 +421,32 @@ def xyz_cols(df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
     )
 
 
+def covering_join(
+    points: DataFrame, cov: pd.DataFrame, lat: str = "lat", lon: str = "lon"
+) -> DataFrame:
+    """points x a driver-side covering -> one row per (point, covering
+    cell containing it), with the covering's other columns attached.
+
+    cov holds a `cell` column (int64 bits) plus payload columns. Its
+    cells are packed as quad keys (cell_quads) and broadcast; the scan
+    side's (face,i,j) terms are exploded at only the covering's levels
+    (terms at absent levels can never match — VERDICT r1 fan-out note)
+    and equi-joined on the quad key. No UDF. Null/NaN lat or lon rows
+    drop.
+    """
+    quad, lvl = cell_quads(cov["cell"].to_numpy())
+    cov_df = points.sparkSession.createDataFrame(
+        cov.drop(columns="cell").assign(quad=quad)
+    )
+    pts = sf.s2_face_ij_attach(points.dropna(subset=[lat, lon]), lat, lon)
+    levels = sorted(set(lvl.tolist()))
+    quads = F.array(*[sf.quad_key("f", "i", "j", L) for L in levels])
+    terms = pts.withColumn("term", F.explode(quads))
+    return terms.join(
+        F.broadcast(cov_df), terms["term"] == cov_df["quad"], "inner"
+    ).drop("term", "quad", "f", "i", "j")
+
+
 def cap_contains_join(
     points: DataFrame,
     caps: list[tuple[int, float, float, float]],
@@ -456,12 +455,10 @@ def cap_contains_join(
 ) -> DataFrame:
     """points x caps [(cap_id, lat, lon, radius_deg)] -> rows + cap_id.
 
-    Plan: per-cap covering (driver NumPy, broadcast as quad keys) ->
-    quad-key equi-join against the scan side's (face,i,j) terms -> exact
-    chord-distance filter. No UDF anywhere: the terms are Catalyst trig
-    and chord^2 <= r^2 is plain arithmetic. Null/NaN lat or lon rows drop.
+    Plan: per-cap covering on the driver -> covering_join -> exact
+    chord-distance filter. No UDF anywhere: chord^2 <= r^2 is plain
+    arithmetic. Null/NaN lat or lon rows drop.
     """
-    spark = points.sparkSession
     rows = []
     for cap_id, clat, clon, radius_deg in caps:
         cap = regions.Cap.from_latlng_radius_degrees(clat, clon, radius_deg)
@@ -485,26 +482,14 @@ def cap_contains_join(
     cov_pdf = pd.DataFrame(
         rows, columns=["cap_id", "cell", "cx", "cy", "cz", "len2"]
     )
-    quad, lvl = cell_quads(cov_pdf.pop("cell").to_numpy())
-    cov_df = spark.createDataFrame(cov_pdf.assign(quad=quad))
-    pts = xyz_cols(
-        sf.s2_face_ij_attach(points.dropna(subset=[lat, lon]), lat, lon),
-        lat,
-        lon,
-    )
-    # explode only the levels the covering uses (terms at absent levels
-    # can never match — VERDICT r1 fan-out note)
-    levels = sorted(set(lvl.tolist()))
-    quads = F.array(*[sf.quad_key("f", "i", "j", L) for L in levels])
-    terms = pts.withColumn("term", F.explode(quads))
-    cand = terms.join(F.broadcast(cov_df), terms["term"] == cov_df["quad"], "inner")
+    cand = covering_join(xyz_cols(points, lat, lon), cov_pdf, lat, lon)
     chord2 = (
         (F.col("px") - F.col("cx")) ** 2
         + (F.col("py") - F.col("cy")) ** 2
         + (F.col("pz") - F.col("cz")) ** 2
     )
     return cand.filter(chord2 <= F.col("len2")).drop(
-        "term", "quad", "f", "i", "j", "cx", "cy", "cz", "len2", "px", "py", "pz"
+        "cx", "cy", "cz", "len2", "px", "py", "pz"
     )
 
 

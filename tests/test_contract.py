@@ -142,7 +142,9 @@ def test_forced_large_side_matches_oracle(
     ran = sql_execs.plans_since(mark)
     assert ran and not any(BROADCAST_OP.search(p) for p in ran), name
     if name in INDEXED:
-        assert indexes and not any(hasattr(i, "_s2_local_rows") for i in indexes)
+        # each stayed persisted: its applyInPandas build is in its plan
+        plans = [i._jdf.queryExecution().executedPlan().toString() for i in indexes]
+        assert plans and all("FlatMapGroupsInPandas" in p for p in plans)
     assert bool(rounds) == (name == "dedup_clusters")
 
 

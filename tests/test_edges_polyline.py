@@ -82,6 +82,20 @@ def test_polyline_distance_join(spark):
     assert not any(lid == 2 for _, lid in got_pairs)  # far line catches none
 
 
+def test_polyline_join_plan_and_null_coordinates(spark):
+    """The polyline join's candidates come from quad-key terms (no cell
+    encode UDF), and null/NaN coordinates drop."""
+    line = loops.parse_loop_text("40:-74, 42:-71")
+    pts = spark.createDataFrame(
+        [(0, 41.0, -72.5), (1, None, -72.5), (2, float("nan"), -72.5), (3, 41.0, None)],
+        "point_id long, lat double, lon double",
+    )
+    joined = dist_op.polyline_distance_join({1: line}, pts, 60_000.0)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BroadcastHashJoin" in plan
+    assert [(r["point_id"], r["line_id"]) for r in joined.collect()] == [(0, 1)]
+
+
 def test_distance_join_radius_overflow_raises():
     import pytest as _pytest
 

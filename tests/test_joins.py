@@ -6,6 +6,7 @@ oracle = exhaustive chord-distance scan with (dist, point_id) tie-break
 (src/s2/s2closest_point_query_base.h result ordering)."""
 
 import itertools
+import re
 
 import numpy as np
 import pandas as pd
@@ -61,6 +62,22 @@ def _wide(spark, df):
     wide = spark.createDataFrame(spark.sparkContext.parallelize(df.collect(), n), df.schema)
     assert wide.rdd.getNumPartitions() == n
     return wide
+
+
+def _localized(index_df):
+    """The index is driver-local rows (LocalTableScan or a parallelized
+    ExistingRDD) with no applyInPandas build left in its plan."""
+    plan = index_df._jdf.queryExecution().executedPlan().toString()
+    local = "LocalTableScan" in plan or "ExistingRDD" in plan
+    return local and "FlatMapGroupsInPandas" not in plan
+
+
+def _joins(df):
+    """Join operators in df's executed plan, once it has run (AQE's
+    initial plan, printed after the final one, is not counted)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return re.findall(r"(?:BroadcastHash|ShuffledHash|SortMerge)Join", final)
 
 
 def _indexed_join(spark, points, polygons):
@@ -342,12 +359,10 @@ class TestContainsJoinIndexed:
         """However many splits the scan has, the Python residual reads
         ONE round-robin rebalance exchange, so AQE sizes its tasks by
         candidate bytes instead of running one Python task per split."""
-        import re
-
         from s2geo_spark import contract
 
         index_df = contract._pip_index(spark)
-        assert hasattr(index_df, "_s2_local_rows")
+        assert _localized(index_df)
         joined = spatial.contains_join_indexed(_wide(spark, points_df), index_df)
         got = sorted((r["point_id"], r["polygon_id"]) for r in joined.collect())
         assert got == _join_rows(points_df, index_df) and len(got) > 0
@@ -362,9 +377,7 @@ class TestContainsJoinIndexed:
 
     def test_index_bounds_edges_per_cell(self, spark):
         big = {7: loops.make_regular_loop(40.0, -100.0, 6.0, 2048)}
-        index_df = spatial.build_index_df(
-            spatial.polygons_to_df(spark, big), max_edges_per_cell=16
-        )
+        index_df = spatial.build_index_df(spatial.polygons_to_df(spark, big))
         pdf = index_df.toPandas()
         n_edges = pdf["edges"].apply(lambda e: len(e) // 6)
         assert n_edges.max() <= 16
@@ -472,8 +485,7 @@ class TestContainsParity:
         built = spatial.build_index_df(spatial.polygons_to_df(spark, polys))
         persisted = built.persist()
         localized = spatial.localize_index(spark, built)
-        assert hasattr(localized, "_s2_local_rows")
-        assert not hasattr(persisted, "_s2_local_rows")
+        assert _localized(localized) and not _localized(persisted)
         sides = {"localized": localized, "persisted": persisted}
         for (name, idx), (shape, p) in itertools.product(sides.items(), inputs.items()):
             assert _join_rows(p, idx) == want, (name, shape)
@@ -504,14 +516,15 @@ class TestContainsParity:
         keys = union.select("polygon_id", "cell")
         assert keys.distinct().count() < keys.count()
         localized = spatial.localize_index(spark, union)
-        assert not hasattr(localized, "_s2_local_rows")
         reference = build(small).unionByName(build(big)).unionByName(build(small))
-        got = _join_rows(points_df, localized)
+        joined = spatial.contains_join_indexed(points_df, localized)
+        got = sorted((r["point_id"], r["polygon_id"]) for r in joined.collect())
         assert got == _join_rows(points_df, reference) and len(got) > 0
-        localized.unpersist()
+        # the one-payload-per-key broadcast is skipped: the detail join ran
+        assert len(_joins(joined)) == 2
         # the fixture layers behind the flagship and s2_pip_* still localize
         for layer in (fx.pip_loops(), fx.large_pip_loops()):
-            assert hasattr(spatial.localize_index(spark, build(layer)), "_s2_local_rows")
+            assert _localized(spatial.localize_index(spark, build(layer)))
 
 
 class TestKnnSkewed:

@@ -1,8 +1,9 @@
 """memo(owner, key, build): values live on the object they describe.
 
 Covers owner isolation, stored-None hits, concurrent first callers, a
-rewritten table refreshing its scan handles, and a guard that keeps
-module-level cache dicts from coming back."""
+rewritten table refreshing its scan handles, and guards that keep
+module-level cache dicts and ad-hoc `_s2_*` attributes from coming
+back."""
 
 import ast
 import pathlib
@@ -161,3 +162,50 @@ def test_no_module_level_cache_dicts():
         for name in _cache_bindings(ast.parse(path.read_text()))
     ]
     assert found == [], "session state belongs on its owner via memo(): " + ", ".join(found)
+
+
+def _s2_attr_writes(tree):
+    """`_s2_*` attribute names the code assigns: `x._s2_a = v` (also in
+    tuple targets and augmented or annotated assignments) and
+    `setattr(x, "_s2_a", v)`."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+            targets = [node.target]
+        elif (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None))
+            in ("setattr", "__setattr__")
+            and len(node.args) > 1
+            and isinstance(node.args[1], ast.Constant)
+            and str(node.args[1].value).startswith("_s2_")
+        ):
+            yield node.args[1].value
+            continue
+        else:
+            continue
+        for sub in (n for t in targets for n in ast.walk(t)):
+            if isinstance(sub, ast.Attribute) and sub.attr.startswith("_s2_"):
+                yield sub.attr
+
+
+@pytest.mark.parametrize(
+    "src", ["df._s2_rows = rows", "a, df._s2_rows = 1, rows", "df._s2_n += 1",
+            "setattr(df, '_s2_rows', rows)", "object.__setattr__(df, '_s2_rows', r)"],
+)
+def test_guard_catches_s2_attributes(src):
+    assert list(_s2_attr_writes(ast.parse(src))) != []
+
+
+def test_no_s2_attributes_outside_memo():
+    """What the package knows about an object lives in memo()'s one
+    store, never in a side-channel attribute another function probes."""
+    pkg = pathlib.Path(s2geo_spark.__file__).parent
+    found = [
+        f"{path.relative_to(pkg)}:{name}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "memo.py"
+        for name in _s2_attr_writes(ast.parse(path.read_text()))
+    ]
+    assert found == [], "store object metadata via memo(): " + ", ".join(found)

@@ -1,11 +1,11 @@
 """Round-6 optimization invariants.
 
 The optimizations must not change what any operator computes:
-  * localize_index: the LOCAL-relation index (driver rows + Python-
-    broadcast detail residual) must be bit-identical to the distributed
-    index path (detail broadcast-join residual), with and without
-    emit_cell, and must survive spark.catalog.clearCache() without
-    recomputing the build.
+  * localize_index: the LOCAL-relation index must be bit-identical to
+    the persisted index, with and without emit_cell, and must survive
+    spark.catalog.clearCache() without recomputing the build; a small
+    persisted index ships its boundary detail the same way (one
+    broadcast, no detail join).
   * set_intersections broadcast_side: same pairs as the unhinted plan.
 """
 
@@ -43,6 +43,14 @@ def pts(spark):
     ).repartition(8)
 
 
+def _localized(index_df):
+    """Driver-local rows (LocalTableScan or a parallelized ExistingRDD)
+    with no applyInPandas build in the plan."""
+    plan = index_df._jdf.queryExecution().executedPlan().toString()
+    local = "LocalTableScan" in plan or "ExistingRDD" in plan
+    return local and "FlatMapGroupsInPandas" not in plan
+
+
 class TestLocalizedIndexParity:
     def _rows(self, df, emit_cell):
         cols = ["point_id", "polygon_id"] + (["cell"] if emit_cell else [])
@@ -56,7 +64,7 @@ class TestLocalizedIndexParity:
         local_idx = spatial.localize_index(
             spark, spatial.build_index_df(polys)
         )
-        assert getattr(local_idx, "_s2_local_rows", None) is not None
+        assert _localized(local_idx)
         a = self._rows(
             spatial.contains_join_indexed(pts, dist_idx, emit_cell=emit_cell),
             emit_cell,
@@ -82,19 +90,16 @@ class TestLocalizedIndexParity:
             spatial.contains_join_indexed(pts, local_idx), False
         )
         assert before == after
-        # the localized index is driver-local data (LocalTableScan or a
-        # parallelized ExistingRDD): no applyInPandas build appears in its
-        # plan, so clearCache cannot trigger a rebuild
-        plan = local_idx._jdf.queryExecution().executedPlan().toString()
-        assert "LocalTableScan" in plan or "ExistingRDD" in plan
-        assert "FlatMapGroupsInPandas" not in plan
+        # the localized index is driver-local data: no applyInPandas
+        # build appears in its plan, so clearCache cannot trigger a rebuild
+        assert _localized(local_idx)
 
     def test_oversized_index_falls_back_to_persist(self, spark, pts):
         polys = spatial.polygons_to_df(spark, POLYGONS)
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(spatial, "SPATIAL_BCAST_LIMIT", 1)
             fallback = spatial.localize_index(spark, spatial.build_index_df(polys))
-        assert getattr(fallback, "_s2_local_rows", None) is None
+        assert not _localized(fallback)
         a = self._rows(spatial.contains_join_indexed(pts, fallback), False)
         local_idx = spatial.localize_index(
             spark, spatial.build_index_df(polys)
@@ -102,6 +107,27 @@ class TestLocalizedIndexParity:
         b = self._rows(spatial.contains_join_indexed(pts, local_idx), False)
         fallback.unpersist()
         assert a == b
+
+    def test_persisted_index_ships_detail_once(self, spark, pts):
+        """A small persisted index joins through the same one detail
+        broadcast as a localized one: the slim join is the only join in
+        the executed plan, and the rows are the localized index's."""
+        polys = spatial.polygons_to_df(spark, POLYGONS)
+        persisted = spatial.build_index_df(polys).persist()
+        local_idx = spatial.localize_index(spark, spatial.build_index_df(polys))
+        joined = spatial.contains_join_indexed(pts, persisted, emit_cell=True)
+        joined = joined.select("point_id", "polygon_id", "cell")
+        a = sorted(tuple(r) for r in joined.collect())
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        b = self._rows(
+            spatial.contains_join_indexed(pts, local_idx, emit_cell=True), True
+        )
+        persisted.unpersist()
+        assert a == b and len(a) > 0
+        assert "isFinalPlan=true" in plan
+        assert final.count("BroadcastHashJoin") == 1, final
+        assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final
 
 
 class TestSetIntersectionsBroadcastSide:
