@@ -24,6 +24,7 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from s2geo_spark import functions as sf
 from s2geo_spark.kernel import cellid_v1 as v1
+from s2geo_spark.kernel import coverer, regions
 from s2geo_spark.memo import forget, memo
 from s2geo_spark.operators import knn as knn_op
 from s2geo_spark.operators import spatial
@@ -649,17 +650,20 @@ def o_rect_counts():
     )
 
 
-def q_knn(spark, sf_dir):
-    queries = (
-        _t(spark, sf_dir, "nation")
-        .select(
-            F.col("n_nationkey").cast("long").alias("query_id"),
-            geo.lat_col(F.col("n_nationkey") * 31 + 7).alias("lat"),
-            geo.lon_col(F.col("n_nationkey") * 31 + 7).alias("lon"),
-        )
+def _nation_probes(spark, sf_dir):
+    """The kNN family's query points: one (query_id, lat, lon) per nation,
+    scrambled from its key."""
+    key = F.col("n_nationkey") * 31 + 7
+    return _t(spark, sf_dir, "nation").select(
+        F.col("n_nationkey").cast("long").alias("query_id"),
+        geo.lat_col(key).alias("lat"),
+        geo.lon_col(key).alias("lon"),
     )
+
+
+def q_knn(spark, sf_dir):
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
-    return knn_op.knn_join(queries, pts, k=fx.KNN_K).select(
+    return knn_op.knn_join(_nation_probes(spark, sf_dir), pts, k=fx.KNN_K).select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("point_id").alias("neighbor_id"),
@@ -670,16 +674,8 @@ def q_furthest(spark, sf_dir):
     """k FURTHEST neighbors (S2FurthestPointQuery semantics): the
     antipode reduction reuses the density-tiered kNN verbatim
     (knn.furthest_join); oracle = exhaustive scan ordered descending."""
-    queries = (
-        _t(spark, sf_dir, "nation")
-        .select(
-            F.col("n_nationkey").cast("long").alias("query_id"),
-            geo.lat_col(F.col("n_nationkey") * 31 + 7).alias("lat"),
-            geo.lon_col(F.col("n_nationkey") * 31 + 7).alias("lon"),
-        )
-    )
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
-    return knn_op.furthest_join(queries, pts, k=fx.KNN_K).select(
+    return knn_op.furthest_join(_nation_probes(spark, sf_dir), pts, k=fx.KNN_K).select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("point_id").alias("neighbor_id"),
@@ -1212,9 +1208,20 @@ def q_cap_covering(spark, sf_dir):
     lies inside it (UV test) or its min boundary-arc distance is within
     the cap radius (chord-squared comparison). Runs the real kernel
     coverer per cap in a distributed applyInPandas."""
-    nat = _t(spark, sf_dir, "nation")
+    return _cap_cells(
+        spark, sf_dir,
+        lambda cap, row: coverer.get_covering(
+            cap, max_cells=100000, min_level=_CAPC_LEVEL, max_level=_CAPC_LEVEL
+        ),
+    )
+
+
+def _cap_cells(spark, sf_dir, cover):
+    """(cap_id, face, iq, jq) of the level-_CAPC_LEVEL cells that
+    cover(cap, row) returns for each per-nation cap (a regions.Cap and its
+    (lat, lon, radius_deg) row), one applyInPandas group per cap."""
     n = F.col("n_nationkey").cast("long")
-    caps = nat.select(
+    caps = _t(spark, sf_dir, "nation").select(
         n.alias("cap_id"),
         geo.lat_col(n * 131 + 17).alias("lat"),
         geo.lon_col(n * 131 + 17).alias("lon"),
@@ -1222,17 +1229,11 @@ def q_cap_covering(spark, sf_dir):
     )
 
     def per_cap(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from s2geo_spark.kernel import coverer as _cov
-        from s2geo_spark.kernel import regions as _rg
-
         row = pdf.iloc[0]
-        cap = _rg.Cap.from_latlng_radius_degrees(
+        cap = regions.Cap.from_latlng_radius_degrees(
             row["lat"], row["lon"], row["radius_deg"]
         )
-        ids = _cov.get_covering(
-            cap, max_cells=100000,
-            min_level=_CAPC_LEVEL, max_level=_CAPC_LEVEL,
-        )
+        ids = cover(cap, row)
         f, i, j = v1.to_face_ij_orientation(np.asarray(ids, dtype=np.uint64))
         s = 30 - _CAPC_LEVEL
         return pd.DataFrame(
@@ -1362,39 +1363,11 @@ def q_simple_covering(spark, sf_dir):
     the priority-queue coverer finds — the oracle is the same geometric
     SQL as s2_cap_covering, but the Spark side exercises the neighbor
     walk (including cross-face seams) instead of the subdivision queue."""
-    nat = _t(spark, sf_dir, "nation")
-    n = F.col("n_nationkey").cast("long")
-    caps = nat.select(
-        n.alias("cap_id"),
-        geo.lat_col(n * 131 + 17).alias("lat"),
-        geo.lon_col(n * 131 + 17).alias("lon"),
-        (F.lit(2.0) + (n * 37 % 5).cast("double")).alias("radius_deg"),
-    )
-
-    def per_cap(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from s2geo_spark.kernel import coverer as _cov
-        from s2geo_spark.kernel import regions as _rg
-
-        row = pdf.iloc[0]
-        cap = _rg.Cap.from_latlng_radius_degrees(
-            row["lat"], row["lon"], row["radius_deg"]
-        )
-        ids = _cov.simple_covering(
+    return _cap_cells(
+        spark, sf_dir,
+        lambda cap, row: coverer.simple_covering(
             cap, float(row["lat"]), float(row["lon"]), _CAPC_LEVEL
-        )
-        f, i, j = v1.to_face_ij_orientation(np.asarray(ids, dtype=np.uint64))
-        s = 30 - _CAPC_LEVEL
-        return pd.DataFrame(
-            {
-                "cap_id": np.full(len(ids), key[0], dtype=np.int64),
-                "face": f.astype(np.int64),
-                "iq": (i >> s).astype(np.int64),
-                "jq": (j >> s).astype(np.int64),
-            }
-        )
-
-    return caps.groupBy("cap_id").applyInPandas(
-        per_cap, "cap_id long, face long, iq long, jq long"
+        ),
     )
 
 
@@ -1405,40 +1378,12 @@ def q_cap_interior(spark, sf_dir):
     quasi-convex along a cell's boundary arcs, so the max over the cell
     is attained at a corner: contained iff all four corner chord
     distances are within the cap radius."""
-    nat = _t(spark, sf_dir, "nation")
-    n = F.col("n_nationkey").cast("long")
-    caps = nat.select(
-        n.alias("cap_id"),
-        geo.lat_col(n * 131 + 17).alias("lat"),
-        geo.lon_col(n * 131 + 17).alias("lon"),
-        (F.lit(2.0) + (n * 37 % 5).cast("double")).alias("radius_deg"),
-    )
-
-    def per_cap(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from s2geo_spark.kernel import coverer as _cov
-        from s2geo_spark.kernel import regions as _rg
-
-        row = pdf.iloc[0]
-        cap = _rg.Cap.from_latlng_radius_degrees(
-            row["lat"], row["lon"], row["radius_deg"]
-        )
-        ids = _cov.get_covering(
-            cap, max_cells=100000,
-            min_level=_CAPC_LEVEL, max_level=_CAPC_LEVEL, interior=True,
-        )
-        f, i, j = v1.to_face_ij_orientation(np.asarray(ids, dtype=np.uint64))
-        s = 30 - _CAPC_LEVEL
-        return pd.DataFrame(
-            {
-                "cap_id": np.full(len(ids), key[0], dtype=np.int64),
-                "face": f.astype(np.int64),
-                "iq": (i >> s).astype(np.int64),
-                "jq": (j >> s).astype(np.int64),
-            }
-        )
-
-    return caps.groupBy("cap_id").applyInPandas(
-        per_cap, "cap_id long, face long, iq long, jq long"
+    return _cap_cells(
+        spark, sf_dir,
+        lambda cap, row: coverer.get_covering(
+            cap, max_cells=100000, min_level=_CAPC_LEVEL,
+            max_level=_CAPC_LEVEL, interior=True,
+        ),
     )
 
 
@@ -1540,12 +1485,7 @@ def q_closest_cell(spark, sf_dir):
         # would otherwise re-expand it per round (planner blowup)
         .localCheckpoint(eager=True)
     )
-    queries = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").cast("long").alias("query_id"),
-        geo.lat_col(F.col("n_nationkey") * 31 + 7).alias("lat"),
-        geo.lon_col(F.col("n_nationkey") * 31 + 7).alias("lon"),
-    )
-    res = knn_op.closest_cell_join(queries, cells, k=_CC_K)
+    res = knn_op.closest_cell_join(_nation_probes(spark, sf_dir), cells, k=_CC_K)
     return res.select(
         "query_id", F.col("rank").cast("long").alias("rank"), "label"
     )

@@ -1,5 +1,9 @@
 """DataFrame-level spatial functions: pandas UDFs + pure-Column expressions.
 
+The one owner of the spatial vocabulary the operators share: unit
+vectors (xyz_cols), squared chord distances (chord2), cell rings
+(s2_ring) and term-indexer keys (quad_key, quad_terms).
+
 Design split (SURVEY.md §4.2):
 
 * Everything expressible as int64 bit math (parents, range_min/max, tile
@@ -23,7 +27,7 @@ import pandas as pd
 from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType, StructField, DoubleType
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from s2geo_spark.kernel import cellid_v1 as _v1
 from s2geo_spark.kernel import cellid_v2 as _v2
@@ -34,9 +38,12 @@ __all__ = [
     "h3_kring",
     "h3_parent",
     "s2_cell_id",
-    "s2_cell_id_at",
+    "s2_ring",
     "s2_face_ij_attach",
     "quad_key",
+    "quad_terms",
+    "xyz_cols",
+    "chord2",
     "s2_v2_id",
     "s2_cell_center",
     "s2_parent",
@@ -103,9 +110,21 @@ def s2_cell_center(cell: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lat": lat, "lng": lng})
 
 
-def s2_cell_id_at(lat, lon, level: int) -> Column:
-    """Leaf encode then parent — the parent is pure column math."""
-    return s2_parent(s2_cell_id(lat, lon), level)
+@F.pandas_udf(ArrayType(LongType()))
+def _ring_udf(lat: pd.Series, lon: pd.Series, level: pd.Series) -> pd.Series:
+    leaf = _v1.from_latlng(lat.to_numpy(dtype=np.float64), lon.to_numpy(dtype=np.float64))
+    return pd.Series(list(_v1.ring_cells(leaf, level.to_numpy()).view(np.int64)))
+
+
+def s2_ring(lat, lon, level) -> Column:
+    """(lat, lon) degrees + per-row level -> the distinct cells of
+    cellid_v1.ring_cells: the point's ancestor at that level and its 8
+    neighbors (S2CellId::AppendAllNeighbors); level 0 gives the six face
+    cells, a ring that covers the sphere. Encode and ring run in ONE
+    Arrow round trip (a ring UDF over an encode UDF would not chain: two
+    arguments, two ArrowEvalPython operators). Callers drop null/NaN
+    lat or lon rows first."""
+    return F.array_distinct(_ring_udf(_col(lat), _col(lon), _col(level)))
 
 
 def h3_cell(lat, lon, res: int, layout: str = "face20") -> Column:
@@ -255,6 +274,26 @@ def tile_assign(cell, tile_level: int) -> Column:
     return s2_parent(cell, tile_level)
 
 
+def xyz_cols(df, lat="lat", lon="lon", names=("px", "py", "pz")):
+    """Attach the unit vector of (lat, lon) degrees as the three columns
+    `names` (S2LatLng::ToPoint, src/s2/s2latlng.cc:67-76): pure Catalyst trig,
+    no UDF."""
+    phi = F.radians(_col(lat))
+    theta = F.radians(_col(lon))
+    x, y, z = names
+    return df.withColumns(
+        {x: F.cos(theta) * F.cos(phi), y: F.sin(theta) * F.cos(phi), z: F.sin(phi)}
+    )
+
+
+def chord2(a, b) -> Column:
+    """Squared chord distance |a - b|^2 between two unit vectors, each an
+    (x, y, z) triple of columns: S1ChordAngle's length2, monotone in the
+    angle (src/s2/s1chord_angle.h)."""
+    (ax, ay, az), (bx, by, bz) = ([_col(c) for c in v] for v in (a, b))
+    return (ax - bx) ** 2 + (ay - by) ** 2 + (az - bz) ** 2
+
+
 def s2_face_ij_attach(df, lat, lon, face: str = "f", i: str = "i",
                       j: str = "j"):
     """Attach (face, i, j) leaf-coordinate columns as PURE Catalyst
@@ -272,16 +311,7 @@ def s2_face_ij_attach(df, lat, lon, face: str = "f", i: str = "i",
     referenced more than once un-inlined, so codegen computes each
     subtree once. A null or NaN lat/lon yields the valid-looking
     (2, 0, 0), so callers drop such rows first."""
-    la, lo = _col(lat), _col(lon)
-    phi = F.radians(la)
-    theta = F.radians(lo)
-    df = df.withColumns(
-        {
-            "__s2x": F.cos(theta) * F.cos(phi),
-            "__s2y": F.sin(theta) * F.cos(phi),
-            "__s2z": F.sin(phi),
-        }
-    )
+    df = xyz_cols(df, lat, lon, ("__s2x", "__s2y", "__s2z"))
     x, y, z = F.col("__s2x"), F.col("__s2y"), F.col("__s2z")
     ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
     axis = F.when(
@@ -369,3 +399,19 @@ def quad_key(face, i, j, level: int) -> Column:
     return memo(
         SparkContext._active_spark_context, ("quad", face, i, j, level), build
     )
+
+
+def quad_terms(df, lat, lon, levels):
+    """df + (f, i, j) + one row per point per level in `levels`, its quad
+    key at that level in column `term`: the term indexer's query terms
+    for a point (S2RegionTermIndexer, src/s2/s2region_term_indexer.cc:121-289),
+    equi-joined against spatial.cell_quads keys.
+
+    A null or NaN lat or lon gets no term, so its row drops. Not a
+    dropna: its filter is pushed below the projections and re-evaluates
+    lat/lon there (the flagship re-parses them from text)."""
+    pts = s2_face_ij_attach(df, lat, lon)
+    quads = F.array(*[quad_key("f", "i", "j", L) for L in levels])
+    la, lo = _col(lat), _col(lon)
+    valid = la.isNotNull() & lo.isNotNull() & ~F.isnan(la) & ~F.isnan(lo)
+    return pts.withColumn("term", F.explode(F.when(valid, quads)))

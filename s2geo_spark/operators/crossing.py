@@ -8,10 +8,10 @@ src/s2/s2edge_crossings.cc:360-420).
 Plan (the 100TB shape):
   1. each edge -> its adaptive-level ring covering (cell of endpoint A at
      the level whose kMinWidth >= edge length, + 8 neighbors): the ring
-     provably covers the edge; one pandas UDF encodes endpoint A and builds
-     its ring with cellid_v1.ring_cells, the ring kernel of the kNN and
-     distance joins; the level choice is pure Catalyst (log2 of the chord
-     angle);
+     provably covers the edge; functions.s2_ring encodes endpoint A and
+     builds its ring in one pandas UDF, the ring of the kNN and distance
+     joins too; the unit vectors, chord lengths and level choice are pure
+     Catalyst (functions.xyz_cols / chord2, log2 of the chord angle);
   2. candidate (a, b) pairs via the ancestor/covering term duality — two
      hash equi-joins (cellset.set_intersections), never a cartesian
      product;
@@ -28,35 +28,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql.types import ArrayType, LongType
-
+from s2geo_spark import functions as sf
 from s2geo_spark.operators import spatial
-from s2geo_spark.kernel import cellid_v1 as v1
 from s2geo_spark.kernel import metrics
 from s2geo_spark.memo import memo
 from s2geo_spark.operators.cellset import set_intersections
 
 # finest ring level: shorter edges get rings at this level too
 MAX_RING_LEVEL = 16
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def _edge_rings_udf(lat: pd.Series, lon: pd.Series, level: pd.Series) -> pd.Series:
-    """lat/lon + per-row level -> cellid_v1.ring_cells of the leaf, encode
-    and ring in ONE Arrow round trip (a ring UDF over an encode UDF would
-    not chain: two arguments, two ArrowEvalPython operators)."""
-    leaf = v1.from_latlng(lat.to_numpy(), lon.to_numpy())
-    return pd.Series(list(v1.ring_cells(leaf, level.to_numpy()).view(np.int64)))
-
-
-def _xyz(lat, lon, px, py, pz):
-    phi = F.radians(F.col(lat))
-    theta = F.radians(F.col(lon))
-    return {
-        px: F.cos(theta) * F.cos(phi),
-        py: F.sin(theta) * F.cos(phi),
-        pz: F.sin(phi),
-    }
 
 
 def _edge_level_from_chord2(chord2):
@@ -78,14 +57,9 @@ def _edge_level_from_chord2(chord2):
 
 def _with_edge_level(edges, lat1, lon1, lat2, lon2):
     """edges + an int `lvl` column: the ring level of each edge (JVM-only)."""
-    e = edges.withColumns(_xyz(lat1, lon1, "ax", "ay", "az"))
-    e = e.withColumns(_xyz(lat2, lon2, "bx", "by", "bz"))
-    chord2 = (
-        (F.col("ax") - F.col("bx")) ** 2
-        + (F.col("ay") - F.col("by")) ** 2
-        + (F.col("az") - F.col("bz")) ** 2
-    )
-    return e.withColumn("lvl", _edge_level_from_chord2(chord2))
+    a, b = ("ax", "ay", "az"), ("bx", "by", "bz")
+    e = sf.xyz_cols(sf.xyz_cols(edges, lat1, lon1, a), lat2, lon2, b)
+    return e.withColumn("lvl", _edge_level_from_chord2(sf.chord2(a, b)))
 
 
 def edge_levels(
@@ -111,7 +85,7 @@ def edge_levels(
     return memo(edges, ("edge_levels", lat1, lon1, lat2, lon2), probe)
 
 
-def edge_ring_cells(
+def edge_rings(
     edges: DataFrame,
     edge_id: str = "edge_id",
     lat1: str = "lat1",
@@ -129,9 +103,7 @@ def edge_ring_cells(
     ring = _with_edge_level(edges, lat1, lon1, lat2, lon2)
     return ring.select(
         edge_id,
-        F.explode(
-            F.array_distinct(_edge_rings_udf(F.col(lat1), F.col(lon1), F.col("lvl")))
-        ).alias("cell"),
+        F.explode(sf.s2_ring(lat1, lon1, "lvl")).alias("cell"),
     )
 
 
@@ -150,8 +122,8 @@ def crossing_join(
     iz) for proper crossings (null for touching pairs).
     include_touching adds sign-0 pairs (shared vertex / vertex-on-edge,
     EdgeOrVertexCrossing territory)."""
-    a_cells = edge_ring_cells(a_edges, edge_id=a_id).withColumnRenamed(a_id, "a_id_")
-    b_cells = edge_ring_cells(b_edges, edge_id=b_id).withColumnRenamed(b_id, "b_id_")
+    a_cells = edge_rings(a_edges, edge_id=a_id).withColumnRenamed(a_id, "a_id_")
+    b_cells = edge_rings(b_edges, edge_id=b_id).withColumnRenamed(b_id, "b_id_")
     # ring-cell levels == edge levels, probed JVM-only (no ring-UDF rerun);
     # set_intersections then explodes ancestors at just those levels.
     # Size-gated broadcast (guide §3.1): when one edge layer's tagged term
@@ -170,17 +142,13 @@ def crossing_join(
     )
 
     def with_mid(df, pfx):
-        e = df.withColumns(_xyz("lat1", "lon1", "x1", "y1", "z1"))
-        e = e.withColumns(_xyz("lat2", "lon2", "x2", "y2", "z2"))
+        p1, p2 = ("x1", "y1", "z1"), ("x2", "y2", "z2")
+        e = sf.xyz_cols(sf.xyz_cols(df, "lat1", "lon1", p1), "lat2", "lon2", p2)
         sx = F.col("x1") + F.col("x2")
         sy = F.col("y1") + F.col("y2")
         sz = F.col("z1") + F.col("z2")
         nrm = F.sqrt(sx * sx + sy * sy + sz * sz)
-        chord2 = (
-            (F.col("x1") - F.col("x2")) ** 2
-            + (F.col("y1") - F.col("y2")) ** 2
-            + (F.col("z1") - F.col("z2")) ** 2
-        )
+        chord2 = sf.chord2(p1, p2)
         # farthest Euclidean distance from the normalized arc midpoint to a
         # point of the arc = |mid - endpoint| = 2*sin(theta/4), derived
         # from chord = 2*sin(theta/2) without trig calls
@@ -216,11 +184,7 @@ def crossing_join(
     # crossing point lies on both arcs, so by the Euclidean triangle
     # inequality |mA - mB| <= rA + rB is NECESSARY for a crossing; the
     # ring-covering candidates over-include by ~an order of magnitude
-    mid_d2 = (
-        (F.col("amx") - F.col("bmx")) ** 2
-        + (F.col("amy") - F.col("bmy")) ** 2
-        + (F.col("amz") - F.col("bmz")) ** 2
-    )
+    mid_d2 = sf.chord2(("amx", "amy", "amz"), ("bmx", "bmy", "bmz"))
     pairs = pairs.filter(
         mid_d2 <= (F.col("ar") + F.col("br")) * (F.col("ar") + F.col("br"))
     ).drop("amx", "amy", "amz", "ar", "bmx", "bmy", "bmz", "br")

@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 
 from s2geo_spark import functions as sf
 from s2geo_spark.kernel import metrics
-from s2geo_spark.operators.knn import _ring_cells
-from s2geo_spark.operators.spatial import covering_join, xyz_cols
+from s2geo_spark.operators.spatial import covering_join
 
 
 def _ring_level_for_radius(radius_rad: float) -> int:
@@ -54,35 +53,27 @@ def distance_join(
 
     Both inputs need (id, lat, lon). Returns (left_id, right_id, dist2)
     with dist2 = squared chord distance. The candidate prefilter is one
-    equi-join on a ring of cells at a radius-derived level; the residual
-    is a JVM-side chord test (whole-stage codegen, no Python).
+    equi-join of each left row's functions.s2_ring at a radius-derived
+    level (one pandas UDF from lat/lon) with the right row's ancestor at
+    that level; the residual is a JVM-side chord test (whole-stage
+    codegen, no Python). Rows with a null or NaN lat or lon drop.
     """
     radius_rad = radius_m / metrics.EARTH_RADIUS_METERS
     lvl = _ring_level_for_radius(radius_rad)
     chord2 = float((2.0 * np.sin(0.5 * radius_rad)) ** 2)
 
-    l = xyz_cols(left).withColumn("lcell", sf.s2_cell_id("lat", "lon")).select(
+    l_xyz, r_xyz = ("lx", "ly", "lz"), ("px", "py", "pz")
+    l = sf.xyz_cols(left.dropna(subset=["lat", "lon"]), names=l_xyz).select(
         left_id,
-        F.col("px").alias("lx"),
-        F.col("py").alias("ly"),
-        F.col("pz").alias("lz"),
-        F.explode(F.array_distinct(_ring_cells("lcell", F.lit(lvl)))).alias("jcell"),
+        *l_xyz,
+        F.explode(sf.s2_ring("lat", "lon", F.lit(lvl))).alias("jcell"),
     )
-    r = xyz_cols(right).withColumn("rcell", sf.s2_cell_id("lat", "lon")).select(
-        right_id,
-        "px",
-        "py",
-        "pz",
-        sf.s2_parent("rcell", lvl).alias("jcell"),
-    )
-    dist2 = (
-        (F.col("px") - F.col("lx")) ** 2
-        + (F.col("py") - F.col("ly")) ** 2
-        + (F.col("pz") - F.col("lz")) ** 2
+    r = sf.xyz_cols(right).withColumn("rcell", sf.s2_cell_id("lat", "lon")).select(
+        right_id, *r_xyz, sf.s2_parent("rcell", lvl).alias("jcell"),
     )
     return (
         l.join(r, "jcell")
-        .withColumn("dist2", dist2)
+        .withColumn("dist2", sf.chord2(r_xyz, l_xyz))
         .filter(F.col("dist2") <= chord2)
         .select(left_id, right_id, "dist2")
     )

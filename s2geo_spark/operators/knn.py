@@ -4,9 +4,12 @@ Spark-native restatement of S2ClosestPointQuery
 (src/s2/s2closest_point_query_base.h:550-760): instead of a per-query
 priority queue over index cells, every round is one *batched* equi-join:
 
-  round r: ring = query cell at level L_r + its 8 neighbors; candidates =
-           points equi-joined on their level-L_r ancestor; top-k per query
-           by (chord2, point_id)  [deterministic ties]
+  round r: ring = query cell at level L_r + its 8 neighbors
+           (functions.s2_ring: one pandas UDF encodes the query's lat/lon
+           and builds the ring); candidates = points equi-joined on their
+           level-L_r ancestor; top-k per query by (chord2, point_id)
+           [deterministic ties]; unit vectors and chord2 are the Catalyst
+           functions.xyz_cols / chord2
 
 A query is RESOLVED when it has k candidates and the kth chord distance is
 within the ring's guaranteed radius (kMinWidth at L_r — any non-candidate
@@ -33,10 +36,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from s2geo_spark import functions as sf
-from s2geo_spark.kernel import cellid_v1 as v1
 from s2geo_spark.kernel import metrics
 from s2geo_spark.operators import spatial
 
@@ -52,13 +53,9 @@ N_TIERS = 4
 # with monkeypatch.setattr(knn, "BRUTE_MAX_PAIRS", 0)
 BRUTE_MAX_PAIRS = 50_000_000
 
-
-@F.pandas_udf(ArrayType(LongType()))
-def _ring_cells(cell: pd.Series, level: pd.Series) -> pd.Series:
-    """cellid_v1.ring_cells per row: the cell's ancestor at `level` + its
-    8 neighbors; level 0 gives the 6 face cells (sphere-covering ring)."""
-    ids = cell.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-    return pd.Series(list(v1.ring_cells(ids, level.to_numpy()).view(np.int64)))
+# unit-vector columns of the point and query sides (functions.xyz_cols)
+_P_XYZ = ("px", "py", "pz")
+_Q_XYZ = ("qx", "qy", "qz")
 
 
 def _safe_chord2(level: int) -> float:
@@ -72,22 +69,15 @@ def _safe_chord2(level: int) -> float:
     )
 
 
-def _chord2(ax, ay, az, bx, by, bz):
-    return (
-        (F.col(ax) - F.col(bx)) ** 2
-        + (F.col(ay) - F.col(by)) ** 2
-        + (F.col(az) - F.col(bz)) ** 2
-    )
-
-
 def _ring_rounds(remaining, start_levels, k, query_id, candidates, ties, held):
     """The resolve-or-widen round loop of knn_join and closest_cell_join.
 
-    remaining: (query_id, qcell, lvl, ...) with each lvl in start_levels.
-    Each round explodes the remaining queries to one row per ring cell
-    `rc` and asks candidates(ring, levels) (levels: the round's distinct
-    lvl values) for candidate rows with a dist2 column; it keeps the top
-    k per query by (dist2, *ties). A query resolves when it has k
+    remaining: (query_id, lat, lon, lvl, ...) with each lvl in
+    start_levels. Each round explodes the remaining queries to one row
+    per cell `rc` of their functions.s2_ring at lvl and asks
+    candidates(ring, levels) (levels: the round's distinct lvl values)
+    for candidate rows with a dist2 column; it keeps the top k per query
+    by (dist2, *ties). A query resolves when it has k
     candidates and the kth is within the ring's guaranteed radius at its
     level, or at level 0 (the face ring covers the sphere); the rest move
     2 levels coarser. Returns the resolved rows' (query_id, *ties, rank,
@@ -99,9 +89,7 @@ def _ring_rounds(remaining, start_levels, k, query_id, candidates, ties, held):
     results, cached = [], [held]
     for r in range(n_rounds):
         levels = sorted({max(L - 2 * r, 0) for L in start_levels})
-        ring = remaining.withColumn(
-            "rc", F.explode(F.array_distinct(_ring_cells("qcell", "lvl")))
-        )
+        ring = remaining.withColumn("rc", F.explode(sf.s2_ring("lat", "lon", "lvl")))
         topk = (
             candidates(ring, levels)
             .withColumn("rank", F.row_number().over(w))
@@ -168,15 +156,10 @@ def knn_join(
     |q| x |p| <= BRUTE_MAX_PAIRS; otherwise the density-tiered ring rounds
     run. Both counts come from one job.
     """
-    q = spatial.xyz_cols(queries.dropna(subset=["lat", "lon"])).select(
-        query_id,
-        "lat",
-        "lon",
-        F.col("px").alias("qx"),
-        F.col("py").alias("qy"),
-        F.col("pz").alias("qz"),
+    q = sf.xyz_cols(queries.dropna(subset=["lat", "lon"]), names=_Q_XYZ).select(
+        query_id, "lat", "lon", *_Q_XYZ
     )
-    p = spatial.xyz_cols(points.dropna(subset=["lat", "lon"]))
+    p = sf.xyz_cols(points.dropna(subset=["lat", "lon"]))
     n = dict(
         q.select(F.lit("q").alias("side"))
         .unionByName(p.select(F.lit("p").alias("side")))
@@ -197,7 +180,7 @@ def knn_join(
         if q.rdd.getNumPartitions() < par:
             q = q.repartition(par)
         cand = q.crossJoin(F.broadcast(p.select(point_id, "px", "py", "pz")))
-        cand = cand.withColumn("dist2", _chord2("px", "py", "pz", "qx", "qy", "qz"))
+        cand = cand.withColumn("dist2", sf.chord2(_P_XYZ, _Q_XYZ))
         if k == 1:
             # min(struct) = lexicographic (dist2, point_id) argmin: a
             # single hash aggregate, no per-query sort at all
@@ -217,7 +200,9 @@ def knn_join(
             .select(query_id, point_id, "rank", "dist2")
         )
 
-    q = q.withColumn("qcell", sf.s2_cell_id("lat", "lon")).drop("lat", "lon")
+    # the query's leaf cell feeds only the density probe; rings encode
+    # from lat/lon
+    q = q.withColumn("qcell", sf.s2_cell_id("lat", "lon"))
     p = p.withColumn("pcell", sf.s2_cell_id("lat", "lon")).select(
         point_id, "pcell", "px", "py", "pz"
     )
@@ -252,7 +237,7 @@ def knn_join(
         ).otherwise(tier)
     q = q.withColumn(
         "lvl", (F.lit(probe) + 2 * tier).cast("int")
-    ).drop("local_n")
+    ).drop("local_n", "qcell")
 
     def candidates(ring, levels):
         # point terms at every level of the round (cell ids encode their
@@ -261,7 +246,7 @@ def knn_join(
             "pc", F.explode(F.array(*[sf.s2_parent("pcell", L) for L in levels]))
         )
         return ring.join(pterm, F.col("rc") == F.col("pc"), "inner").withColumn(
-            "dist2", _chord2("px", "py", "pz", "qx", "qy", "qz")
+            "dist2", sf.chord2(_P_XYZ, _Q_XYZ)
         )
 
     return _ring_rounds(
@@ -316,11 +301,10 @@ def closest_cell_join(
     iterate with coarser rings exactly like knn_join; the residual
     distance is the EXACT point-to-cell chord distance
     (cells.distance2_to_points, s2cell.cc:369-430), not the center
-    approximation. Terminal round joins every cell (face-level ring)."""
-    q = spatial.xyz_cols(queries).select(
-        query_id,
-        sf.s2_cell_id("lat", "lon").alias("qcell"),
-        F.col("px").alias("qx"), F.col("py").alias("qy"), F.col("pz").alias("qz"),
+    approximation. Terminal round joins every cell (face-level ring).
+    Queries with a null or NaN lat or lon drop."""
+    q = sf.xyz_cols(queries.dropna(subset=["lat", "lon"]), names=_Q_XYZ).select(
+        query_id, "lat", "lon", *_Q_XYZ
     )
     c = cells.select(cell_label, F.col("cell").alias("tcell")).withColumn(
         "tlvl", sf.s2_level_expr("tcell")

@@ -201,16 +201,20 @@ def localize_index(spark: SparkSession, index_df: DataFrame) -> DataFrame:
     The table is persisted first, so _index_stats' one aggregate builds it
     once for both outcomes. Only when its detail estimate fits
     SPATIAL_BCAST_LIMIT is it collected; otherwise it stays persisted.
+    The collect and the re-creation go through Arrow, so (with
+    spark.sql.execution.arrow.pyspark.enabled) the result is a
+    LocalTableScan: reading it, including the slim and detail
+    broadcasts' collects, runs no Spark job.
     """
     was_cached = index_df.is_cached
     df = index_df.persist()
     stats = _index_stats(df)
     if stats[2] > SPATIAL_BCAST_LIMIT:  # the detail broadcast's estimate
         return df
-    rows = df.collect()
+    pdf = df.toPandas()
     if not was_cached:
         df.unpersist()
-    local = spark.createDataFrame(rows, df.schema)
+    local = spark.createDataFrame(pdf, df.schema)
     memo(local, "indexed_stats", lambda: stats)
     return local
 
@@ -295,15 +299,7 @@ def contains_join_indexed(
     # memoized on the index object: the flagship and every q_pip_* call
     # reuse one index table, so only its build pays the stats job
     levels, slim_est, detail_est = _index_stats(index_df)
-    # staged projections: small analyzer trees, trig computed once
-    pts = sf.s2_face_ij_attach(points, lat, lon)
-    quads = F.array(*[sf.quad_key("f", "i", "j", L) for L in levels])
-    # null/NaN coordinates (which the transform maps to (2, 0, 0)) get no
-    # terms. Not a dropna: its filter is pushed below the projections and
-    # re-evaluates lat/lon there (the flagship re-parses them from text)
-    la, lo = F.col(lat), F.col(lon)
-    valid = la.isNotNull() & lo.isNotNull() & ~F.isnan(la) & ~F.isnan(lo)
-    terms = pts.withColumn("term", F.explode(F.when(valid, quads)))
+    terms = sf.quad_terms(points, lat, lon, levels)
 
     slim = index_df.select("quad", "polygon_id", "cell", "is_interior")
     if slim_est <= SPATIAL_BCAST_LIMIT:
@@ -408,19 +404,6 @@ def contains_join_indexed(
 # candidates, then each caller's exact residual
 # ---------------------------------------------------------------------------
 
-def xyz_cols(df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
-    """Attach unit-vector columns (pure Catalyst trig — no UDF)."""
-    phi = F.radians(F.col(lat))
-    theta = F.radians(F.col(lon))
-    return df.withColumns(
-        {
-            "px": F.cos(theta) * F.cos(phi),
-            "py": F.sin(theta) * F.cos(phi),
-            "pz": F.sin(phi),
-        }
-    )
-
-
 def covering_join(
     points: DataFrame, cov: pd.DataFrame, lat: str = "lat", lon: str = "lon"
 ) -> DataFrame:
@@ -429,19 +412,16 @@ def covering_join(
 
     cov holds a `cell` column (int64 bits) plus payload columns. Its
     cells are packed as quad keys (cell_quads) and broadcast; the scan
-    side's (face,i,j) terms are exploded at only the covering's levels
-    (terms at absent levels can never match — VERDICT r1 fan-out note)
-    and equi-joined on the quad key. No UDF. Null/NaN lat or lon rows
-    drop.
+    side's functions.quad_terms are exploded at only the covering's
+    levels (terms at absent levels can never match — VERDICT r1 fan-out
+    note) and equi-joined on the quad key. No UDF. Null/NaN lat or lon
+    rows get no terms, so they drop.
     """
     quad, lvl = cell_quads(cov["cell"].to_numpy())
     cov_df = points.sparkSession.createDataFrame(
         cov.drop(columns="cell").assign(quad=quad)
     )
-    pts = sf.s2_face_ij_attach(points.dropna(subset=[lat, lon]), lat, lon)
-    levels = sorted(set(lvl.tolist()))
-    quads = F.array(*[sf.quad_key("f", "i", "j", L) for L in levels])
-    terms = pts.withColumn("term", F.explode(quads))
+    terms = sf.quad_terms(points, lat, lon, sorted(set(lvl.tolist())))
     return terms.join(
         F.broadcast(cov_df), terms["term"] == cov_df["quad"], "inner"
     ).drop("term", "quad", "f", "i", "j")
@@ -482,12 +462,8 @@ def cap_contains_join(
     cov_pdf = pd.DataFrame(
         rows, columns=["cap_id", "cell", "cx", "cy", "cz", "len2"]
     )
-    cand = covering_join(xyz_cols(points, lat, lon), cov_pdf, lat, lon)
-    chord2 = (
-        (F.col("px") - F.col("cx")) ** 2
-        + (F.col("py") - F.col("cy")) ** 2
-        + (F.col("pz") - F.col("cz")) ** 2
-    )
+    cand = covering_join(sf.xyz_cols(points, lat, lon), cov_pdf, lat, lon)
+    chord2 = sf.chord2(("px", "py", "pz"), ("cx", "cy", "cz"))
     return cand.filter(chord2 <= F.col("len2")).drop(
         "cx", "cy", "cz", "len2", "px", "py", "pz"
     )

@@ -34,10 +34,12 @@ def density_rollup(points: DataFrame, levels: list[int], cell_col: str = "cell")
     """Multi-level density tree as one DataFrame (level, cell, weight).
 
     Computed from the finest level's aggregate (small) rather than
-    re-scanning the input per level.
+    re-scanning the input per level: a lazy local checkpoint materializes
+    it once, in the result's own action, and leaves no cache entry
+    behind, so a long session calling it per input does not grow.
     """
     finest = max(levels)
-    base = cell_density(points, finest, cell_col).cache()
+    base = cell_density(points, finest, cell_col).localCheckpoint(eager=False)
     out = None
     for lv in sorted(levels):
         part = (

@@ -54,6 +54,19 @@ def sql_execs(spark):
     return SqlExecutions(spark)
 
 
+def _localized(index_df) -> bool:
+    """The index is driver-local rows: its executed plan is one
+    LocalTableScan, so reading it runs no Spark job and no applyInPandas
+    build is left to rerun."""
+    plan = index_df._jdf.queryExecution().executedPlan().toString()
+    return plan.startswith("LocalTableScan") and "+-" not in plan
+
+
+@pytest.fixture
+def localized():
+    return _localized
+
+
 @pytest.fixture
 def large_side(spark, monkeypatch):
     """Every byte gate on its large side: SPATIAL_BCAST_LIMIT at 0 and

@@ -200,6 +200,60 @@ def test_no_limit_default_arguments():
     assert found == [], "read limits when called: " + ", ".join(found)
 
 
+# the spatial vocabulary's primitives, owned by functions/ and kernel/:
+# Catalyst degrees -> radians (the unit-vector transform's first step)
+# and the ring-cell kernel
+VOCABULARY = {("pyspark.sql.functions", "radians"), ("s2geo_spark.kernel.cellid_v1", "ring_cells")}
+
+
+def _vocabulary_uses(tree):
+    """Names in VOCABULARY the code imports or reads as an attribute of a
+    module alias (`F.radians`, `v1.ring_cells`, `from ... import
+    radians`)."""
+    modules = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                modules[a.asname or a.name] = a.name
+        elif isinstance(node, ast.ImportFrom):
+            for a in node.names:
+                if (node.module, a.name) in VOCABULARY:
+                    yield a.name
+                modules[a.asname or a.name] = f"{node.module}.{a.name}"
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and (modules.get(node.value.id), node.attr) in VOCABULARY
+        ):
+            yield node.attr
+
+
+@pytest.mark.parametrize(
+    "src",
+    ["from pyspark.sql import functions as F\nF.radians(c)",
+     "import pyspark.sql.functions as G\nG.radians(c)",
+     "from pyspark.sql.functions import radians",
+     "from s2geo_spark.kernel import cellid_v1 as v1\nv1.ring_cells(a, b)",
+     "from s2geo_spark.kernel.cellid_v1 import ring_cells"],
+)
+def test_guard_catches_vocabulary(src):
+    assert list(_vocabulary_uses(ast.parse(src))) != []
+
+
+def test_vocabulary_lives_in_functions():
+    """Unit vectors and rings are built by functions.xyz_cols and
+    functions.s2_ring; operators call them instead of re-deriving them."""
+    pkg = pathlib.Path(s2geo_spark.__file__).parent
+    found = [
+        f"{path.relative_to(pkg)}:{name}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).parts[0] not in ("functions", "kernel")
+        for name in _vocabulary_uses(ast.parse(path.read_text()))
+    ]
+    assert found == [], "use functions.xyz_cols / s2_ring: " + ", ".join(found)
+
+
 def test_entry_runs(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

@@ -64,14 +64,6 @@ def _wide(spark, df):
     return wide
 
 
-def _localized(index_df):
-    """The index is driver-local rows (LocalTableScan or a parallelized
-    ExistingRDD) with no applyInPandas build left in its plan."""
-    plan = index_df._jdf.queryExecution().executedPlan().toString()
-    local = "LocalTableScan" in plan or "ExistingRDD" in plan
-    return local and "FlatMapGroupsInPandas" not in plan
-
-
 def _joins(df):
     """Join operators in df's executed plan, once it has run (AQE's
     initial plan, printed after the final one, is not counted)."""
@@ -355,14 +347,14 @@ class TestContainsJoinIndexed:
         assert (got["point_id"].to_numpy() == want["point_id"].to_numpy()).all()
         assert (got["polygon_id"].to_numpy() == want["polygon_id"].to_numpy()).all()
 
-    def test_wide_scan_feeds_residual_through_rebalance(self, spark, points_df):
+    def test_wide_scan_feeds_residual_through_rebalance(self, spark, points_df, localized):
         """However many splits the scan has, the Python residual reads
         ONE round-robin rebalance exchange, so AQE sizes its tasks by
         candidate bytes instead of running one Python task per split."""
         from s2geo_spark import contract
 
         index_df = contract._pip_index(spark)
-        assert _localized(index_df)
+        assert localized(index_df)
         joined = spatial.contains_join_indexed(_wide(spark, points_df), index_df)
         got = sorted((r["point_id"], r["polygon_id"]) for r in joined.collect())
         assert got == _join_rows(points_df, index_df) and len(got) > 0
@@ -426,7 +418,7 @@ class TestContainsParity:
     (PreparedLoop.contains_points) on every side of its two gates:
     {localized, persisted index} x {size-gated, forced-shuffle joins}."""
 
-    def test_random_loops_all_gate_sides(self, spark, monkeypatch):
+    def test_random_loops_all_gate_sides(self, spark, monkeypatch, localized):
         rng = np.random.default_rng(2024)
         polys, centers = {}, []
         for pid in range(1, 5):
@@ -484,9 +476,9 @@ class TestContainsParity:
 
         built = spatial.build_index_df(spatial.polygons_to_df(spark, polys))
         persisted = built.persist()
-        localized = spatial.localize_index(spark, built)
-        assert _localized(localized) and not _localized(persisted)
-        sides = {"localized": localized, "persisted": persisted}
+        local_idx = spatial.localize_index(spark, built)
+        assert localized(local_idx) and not localized(persisted)
+        sides = {"localized": local_idx, "persisted": persisted}
         for (name, idx), (shape, p) in itertools.product(sides.items(), inputs.items()):
             assert _join_rows(p, idx) == want, (name, shape)
         # forced shuffle: no hint, and no automatic broadcast either
@@ -503,7 +495,7 @@ class TestContainsParity:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
             persisted.unpersist()
 
-    def test_duplicate_keys_localize_like_persist(self, spark, points_df):
+    def test_duplicate_keys_localize_like_persist(self, spark, points_df, localized):
         from s2geo_spark.sources import fixtures as fx
 
         def build(polys):
@@ -515,16 +507,16 @@ class TestContainsParity:
         union = build(small).unionByName(build(big)).unionByName(build(small))
         keys = union.select("polygon_id", "cell")
         assert keys.distinct().count() < keys.count()
-        localized = spatial.localize_index(spark, union)
+        local_idx = spatial.localize_index(spark, union)
         reference = build(small).unionByName(build(big)).unionByName(build(small))
-        joined = spatial.contains_join_indexed(points_df, localized)
+        joined = spatial.contains_join_indexed(points_df, local_idx)
         got = sorted((r["point_id"], r["polygon_id"]) for r in joined.collect())
         assert got == _join_rows(points_df, reference) and len(got) > 0
         # the one-payload-per-key broadcast is skipped: the detail join ran
         assert len(_joins(joined)) == 2
         # the fixture layers behind the flagship and s2_pip_* still localize
         for layer in (fx.pip_loops(), fx.large_pip_loops()):
-            assert _localized(spatial.localize_index(spark, build(layer)))
+            assert localized(spatial.localize_index(spark, build(layer)))
 
 
 class TestKnnSkewed:
@@ -771,6 +763,31 @@ class TestFurthestAndClosestCell:
             want = order[:k].tolist()
             sub = got[got["query_id"] == qi]
             assert sub["label"].tolist() == want, (qi, sub["label"].tolist(), want)
+
+    def test_closest_cell_null_queries_drop(self, spark):
+        from s2geo_spark.kernel import cellid_v1 as v1
+
+        leaf = v1.from_latlng(np.array([47.0, 10.0, -30.0]), np.array([8.0, 20.0, 120.0]))
+        cdf = spark.createDataFrame(
+            pd.DataFrame({"label": [0, 1, 2], "cell": v1.parent(leaf, 8).view(np.int64)})
+        )
+        q = spark.createDataFrame(
+            [(0, 47.0, 8.0), (1, None, 8.0), (2, float("nan"), 8.0)],
+            "query_id long, lat double, lon double",
+        )
+        got = knn_op.closest_cell_join(q, cdf, k=2).orderBy("rank").collect()
+        assert [(r["query_id"], r["label"]) for r in got] == [(0, 0), (0, 1)]
+        assert got[0]["dist2"] == 0.0 and got[1]["dist2"] > 0.0
+
+    def test_distance_join_null_rows_drop(self, spark):
+        from s2geo_spark.operators import distance
+
+        rows = [(0, 47.0, 8.0), (1, None, 8.0), (2, float("nan"), 8.0), (3, 47.0, None)]
+        schema = "{} long, lat double, lon double"
+        left = spark.createDataFrame(rows, schema.format("left_id"))
+        right = spark.createDataFrame(rows, schema.format("right_id"))
+        got = distance.distance_join(left, right, 1000.0).collect()
+        assert [(r["left_id"], r["right_id"]) for r in got] == [(0, 0)]
 
 
 class TestIndexStatsMemo:

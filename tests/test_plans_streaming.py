@@ -50,6 +50,18 @@ class TestDensity:
         for lv in (2, 4, 6):
             assert roll[roll["level"] == lv]["weight"].sum() == len(pdf)
 
+    def test_rollup_leaves_no_cache_entry(self, spark, skewed_points):
+        # a long session calls the rollup on many inputs: none may stay
+        # registered in the cache manager once its result is read
+        df, pdf = skewed_points
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        for n in (500, 1000, 1500):
+            pts = df.limit(n)
+            roll = density.density_rollup(pts, [2, 4]).toPandas()
+            assert roll[roll["level"] == 2]["weight"].sum() == n
+            base = density.cell_density(pts, 4)
+            assert cache.lookupCachedData(base._jdf).isEmpty()
+
     def test_adaptive_partitioning_balances(self, spark, skewed_points):
         df, pdf = skewed_points
         parts = density.adaptive_partitioning(df, max_weight=2000, start_level=2, max_level=10)

@@ -43,28 +43,20 @@ def pts(spark):
     ).repartition(8)
 
 
-def _localized(index_df):
-    """Driver-local rows (LocalTableScan or a parallelized ExistingRDD)
-    with no applyInPandas build in the plan."""
-    plan = index_df._jdf.queryExecution().executedPlan().toString()
-    local = "LocalTableScan" in plan or "ExistingRDD" in plan
-    return local and "FlatMapGroupsInPandas" not in plan
-
-
 class TestLocalizedIndexParity:
     def _rows(self, df, emit_cell):
         cols = ["point_id", "polygon_id"] + (["cell"] if emit_cell else [])
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     @pytest.mark.parametrize("emit_cell", [False, True])
-    def test_local_matches_distributed(self, spark, pts, emit_cell):
+    def test_local_matches_distributed(self, spark, pts, emit_cell, localized):
         polys = spatial.polygons_to_df(spark, POLYGONS)
         dist_idx = spatial.build_index_df(polys).persist()
         dist_idx.count()
         local_idx = spatial.localize_index(
             spark, spatial.build_index_df(polys)
         )
-        assert _localized(local_idx)
+        assert localized(local_idx)
         a = self._rows(
             spatial.contains_join_indexed(pts, dist_idx, emit_cell=emit_cell),
             emit_cell,
@@ -77,7 +69,7 @@ class TestLocalizedIndexParity:
         assert a == b
         assert len(a) > 0
 
-    def test_local_survives_clearcache(self, spark, pts):
+    def test_local_survives_clearcache(self, spark, pts, localized):
         polys = spatial.polygons_to_df(spark, POLYGONS)
         local_idx = spatial.localize_index(
             spark, spatial.build_index_df(polys)
@@ -92,14 +84,14 @@ class TestLocalizedIndexParity:
         assert before == after
         # the localized index is driver-local data: no applyInPandas
         # build appears in its plan, so clearCache cannot trigger a rebuild
-        assert _localized(local_idx)
+        assert localized(local_idx)
 
-    def test_oversized_index_falls_back_to_persist(self, spark, pts):
+    def test_oversized_index_falls_back_to_persist(self, spark, pts, localized):
         polys = spatial.polygons_to_df(spark, POLYGONS)
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(spatial, "SPATIAL_BCAST_LIMIT", 1)
             fallback = spatial.localize_index(spark, spatial.build_index_df(polys))
-        assert not _localized(fallback)
+        assert not localized(fallback)
         a = self._rows(spatial.contains_join_indexed(pts, fallback), False)
         local_idx = spatial.localize_index(
             spark, spatial.build_index_df(polys)
@@ -107,6 +99,23 @@ class TestLocalizedIndexParity:
         b = self._rows(spatial.contains_join_indexed(pts, local_idx), False)
         fallback.unpersist()
         assert a == b
+
+    def test_local_index_reads_run_no_job(self, spark, pts):
+        """Collecting a localized index, and building a join's detail
+        broadcast from it, read driver-local rows: no Spark job runs."""
+        polys = spatial.polygons_to_df(spark, POLYGONS)
+        local_idx = spatial.localize_index(spark, spatial.build_index_df(polys))
+        sc_ = spark.sparkContext
+        group = "test-localized-index-reads"
+        sc_.setJobGroup(group, "localized index reads")
+        try:
+            rows = local_idx.collect()
+            spatial.contains_join_indexed(pts, local_idx)
+        finally:
+            sc_.setLocalProperty("spark.jobGroup.id", None)
+            sc_.setLocalProperty("spark.job.description", None)
+        assert len(rows) > 0
+        assert list(sc_.statusTracker().getJobIdsForGroup(group)) == []
 
     def test_persisted_index_ships_detail_once(self, spark, pts):
         """A small persisted index joins through the same one detail
