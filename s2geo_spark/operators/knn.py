@@ -179,7 +179,7 @@ def knn_join(
         par = q.sparkSession.sparkContext.defaultParallelism
         if q.rdd.getNumPartitions() < par:
             q = q.repartition(par)
-        cand = q.crossJoin(F.broadcast(p.select(point_id, "px", "py", "pz")))
+        cand = q.crossJoin(F.broadcast(p.select(point_id, *_P_XYZ)))
         cand = cand.withColumn("dist2", sf.chord2(_P_XYZ, _Q_XYZ))
         if k == 1:
             # min(struct) = lexicographic (dist2, point_id) argmin: a
@@ -204,7 +204,7 @@ def knn_join(
     # from lat/lon
     q = q.withColumn("qcell", sf.s2_cell_id("lat", "lon"))
     p = p.withColumn("pcell", sf.s2_cell_id("lat", "lon")).select(
-        point_id, "pcell", "px", "py", "pz"
+        point_id, "pcell", *_P_XYZ
     )
     p = p.cache()
     # coarse clamp from the GLOBAL count: for a sparse layer the probe
