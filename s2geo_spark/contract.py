@@ -383,8 +383,9 @@ def q_boolean_degenerate(spark, sf_dir):
     """Boolean ops on DEGENERATE inputs end-to-end (VERDICT r2 next-#1):
     two quads sharing a full border edge (the admin-boundary case) and two
     quads overlapping along a partial collinear equator run are combined
-    via boolean_join (kernel overlay path: exact shared-vertex /
-    vertex-on-edge resolution), the result loops become a polygon layer,
+    via boolean_join (the one boolean engine, kernel/overlay.py, resolves
+    shared vertices and vertex-on-edge contacts exactly, as it does
+    general-position input), the result loops become a polygon layer,
     and points are counted inside each result through the shape-indexed
     PIP join. The oracle re-derives every count from half-space logic;
     empty results (e.g. the intersection of border-sharing quads)

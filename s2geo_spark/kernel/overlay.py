@@ -1,11 +1,9 @@
-"""General-position-free boolean overlay for spherical polygon regions.
-
-The Weiler-Atherton path in kernel/booleanop.py requires general position
-(it raises on shared vertices / touching edges). This module is the
-degeneracy-tolerant engine the reference gets from its S2Builder +
-S2BooleanOperation pipeline (src/s2/s2builder.cc snap sites + edge
-splitting, src/s2/s2boolean_operation.cc:16-40 layer assembly): a
-boundary-graph overlay —
+"""The polygon boolean engine: a boundary-graph overlay for spherical
+polygon regions, the role the reference's S2Builder + S2BooleanOperation
+pipeline plays (src/s2/s2builder.cc snap sites + edge splitting,
+src/s2/s2boolean_operation.cc:16-40 layer assembly). It is the only
+boolean in the kernel: general-position and degenerate inputs (shared
+vertices, vertex-on-edge contacts, shared edges) take the same path —
 
   1. orient each region's loops as BOUNDARY loops (interior on the left:
      XOR-nested CCW input, odd-depth holes traversed reversed);
@@ -39,14 +37,15 @@ each crossing); use snap_round_region() first to coarsen such inputs onto
 a shared grid, which is the reference's snap-rounding story
 (s2builderutil_snap_functions.h S2CellIdSnapFunction).
 
-Output convention matches region_boolean: ALL result loops CCW, XOR
-nesting (holes at odd depth).
+Output convention: ALL result loops CCW, XOR nesting (holes at odd
+depth) — what booleanop.region_contains_points and region_area read.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from . import booleanop as bo
 from . import edges as ek
 from . import loops as lps
 from . import predicates as pred
@@ -71,33 +70,6 @@ def _on_edge_interior(p, u, v) -> bool:
     return float(np.dot(np.cross(u, p), n)) > 0.0 and (
         float(np.dot(np.cross(p, v), n)) > 0.0
     )
-
-
-def has_degenerate_incidence(a_loops, b_loops) -> bool:
-    """True when the two regions share a vertex bitwise or a vertex of one
-    lies exactly on an edge of the other — the inputs the general-position
-    fast path must not see. Vectorized triage (|det| window + bitwise
-    vertex-set intersection); only triage survivors pay the exact test."""
-    av = np.concatenate([np.asarray(l, dtype=np.float64) for l in a_loops])
-    bv = np.concatenate([np.asarray(l, dtype=np.float64) for l in b_loops])
-    a_keys = {v.tobytes() for v in av}
-    if any(v.tobytes() in a_keys for v in bv):
-        return True
-
-    def vertex_on_any_edge(verts, edge_loops):
-        for l in edge_loops:
-            l = np.asarray(l, dtype=np.float64)
-            u = l
-            w = np.roll(l, -1, axis=0)
-            n = np.cross(u, w)  # (E, 3)
-            det = verts @ n.T  # (V, E) triple products det(u, w, p)
-            vi, ei = np.nonzero(np.abs(det) <= _TRIAGE_EPS)
-            for i, e in zip(vi, ei):
-                if _on_edge_interior(verts[i], u[e], w[e]):
-                    return True
-        return False
-
-    return vertex_on_any_edge(bv, a_loops) or vertex_on_any_edge(av, b_loops)
 
 
 # ---------------------------------------------------------------------------
@@ -290,8 +262,8 @@ def _in_region(preps, pts):
 def overlay_boolean(a_loops, b_loops, op: str):
     """Boolean combination of two XOR-nested multi-loop regions with full
     degeneracy support (shared vertices / edges, vertex-on-edge). Returns
-    CCW result loops under XOR nesting — same contract as
-    booleanop.region_boolean, which routes degenerate inputs here."""
+    CCW result loops under XOR nesting; when the loops' small forms XOR
+    to the complement of the result, one loop keeps its big form."""
     if op not in ("intersection", "union", "difference"):
         raise ValueError(op)
     a_bnd, lp_a = _boundary_oriented(a_loops)
@@ -429,7 +401,6 @@ def snap_round_region(loops_list, level: int, extra_sites=None):
     extra_sites: additional (n,3) snap sites to splice (pass the OTHER
     layer's snapped vertices so a cross-layer boolean shares one site set,
     as S2Builder does per operation — see region_boolean_snapped)."""
-    from . import booleanop as bo
     from . import metrics
 
     snap_radius2 = (
@@ -486,8 +457,6 @@ def region_boolean_snapped(a_loops, b_loops, op: str, level: int):
     become bitwise-identical chains before the exact overlay runs. This is
     the reference's per-operation S2Builder pipeline
     (s2boolean_operation.cc snap_function_ + s2builder.cc edge snapping)."""
-    from . import booleanop as bo
-
     sa0 = [bo.clean_chain(bo.snap_to_cell_centers(np.asarray(l), level))
            for l in a_loops]
     sb0 = [bo.clean_chain(bo.snap_to_cell_centers(np.asarray(l), level))

@@ -2,12 +2,13 @@
 (S2BooleanOperation, src/s2/s2boolean_operation.h:16-40).
 
 boolean_join: for candidate (a, b) polygon pairs, compute the exact
-boolean result loops with the kernel (kernel/booleanop.py) in a cogrouped
-applyInPandas — per-pair work distributes across executors, the driver
+boolean result loops with the kernel's one boolean engine, the
+boundary-graph overlay (kernel/overlay.overlay_boolean), in a
+mapInPandas — per-pair work distributes across executors, the driver
 never loops polygons. Candidates default to covering-intersection pairs
-(ancestor-term duality) so disjoint pairs never ship to Python for
-`intersection`; for `union`/`difference` all pairs are processed (the
-no-crossing fast path in the kernel is O(1) containment tests).
+(ancestor-term duality) so disjoint pairs never ship to Python.
+buffer_polygons and winding_regions map one region per row the same way;
+all three emit (ids..., n_loops, area, loops) rows through _map_regions.
 """
 
 from __future__ import annotations
@@ -16,6 +17,37 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _map_regions(df, id_cols, loop_cols, fn):
+    """df.mapInPandas over one region result per row: each of loop_cols
+    (flattened (m*3) loops) reaches fn as a list of (m, 3) arrays, and
+    fn's result loops (XOR-nested CCW) come back as
+    (id_cols..., n_loops, area, loops) with the ids as longs."""
+    cols = [*id_cols, "n_loops", "area", "loops"]
+    schema = "".join(f"{c} long, " for c in id_cols) + (
+        "n_loops int, area double, loops array<array<double>>"
+    )
+
+    def run(batches):
+        from s2geo_spark.kernel import booleanop as bo
+
+        for pdf in batches:
+            rows = []
+            for _, r in pdf.iterrows():
+                res = fn(*(
+                    [np.asarray(l, dtype=np.float64).reshape(-1, 3) for l in r[c]]
+                    for c in loop_cols
+                ))
+                rows.append([
+                    *(r[c] for c in id_cols),
+                    len(res),
+                    bo.region_area(res),
+                    [l.ravel().tolist() for l in res],
+                ])
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def region_covering_df(
@@ -73,8 +105,9 @@ def boolean_join(
 ) -> DataFrame:
     """a_polys/b_polys: (id, loops array<array<double>>) rows — one or
     more XOR-nested CCW loops per polygon (holes at odd depth). Returns
-    (a_id, b_id, n_loops, area, loops array<array<double>>) — result
-    loops under the same XOR nesting (booleanop.region_* helpers).
+    (a_id, b_id, n_loops, area, loops array<array<double>>) — the
+    result loops of overlay.overlay_boolean under the same XOR nesting
+    (booleanop.region_contains_points and region_area read them).
 
     With pairs=None the candidate set defaults to covering-intersection
     pairs (distributed per-polygon coverings -> cellset.set_intersections
@@ -117,45 +150,15 @@ def boolean_join(
         F.col("polygon_id").alias(b_id), F.col("loops").alias("b_loops")
     )
     joined = pairs.join(a, a_id).join(b, b_id)
-    schema = (
-        f"{a_id} long, {b_id} long, n_loops int, area double, "
-        "loops array<array<double>>"
-    )
 
-    def run(batches):
-        from s2geo_spark.kernel import booleanop as bo
+    def combine(av, bv):
         from s2geo_spark.kernel import overlay as ov
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                av = [
-                    np.asarray(l, dtype=np.float64).reshape(-1, 3)
-                    for l in r["a_loops"]
-                ]
-                bv = [
-                    np.asarray(l, dtype=np.float64).reshape(-1, 3)
-                    for l in r["b_loops"]
-                ]
-                if snap_level is not None:
-                    res = ov.region_boolean_snapped(av, bv, op, snap_level)
-                else:
-                    res = bo.region_boolean(av, bv, op)
-                rows.append(
-                    {
-                        a_id: r[a_id],
-                        b_id: r[b_id],
-                        "n_loops": len(res),
-                        "area": bo.region_area(res),
-                        "loops": [l.ravel().tolist() for l in res],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[a_id, b_id, "n_loops", "area", "loops"],
-            )
+        if snap_level is not None:
+            return ov.region_boolean_snapped(av, bv, op, snap_level)
+        return ov.overlay_boolean(av, bv, op)
 
-    return joined.mapInPandas(run, schema=schema)
+    return _map_regions(joined, [a_id, b_id], ["a_loops", "b_loops"], combine)
 
 
 def buffer_polygons(
@@ -174,50 +177,29 @@ def buffer_polygons(
     Input (id, loops) rows like boolean_join; output (id, n_loops, area,
     loops) under the XOR convention. Per-polygon work distributes in one
     mapInPandas; no driver loop."""
-    schema = f"{id_col} long, n_loops int, area double, loops array<array<double>>"
 
-    def run(batches):
-        from s2geo_spark.kernel import booleanop as bo
+    def buffer(arrs):
         from s2geo_spark.kernel import loops as lps
         from s2geo_spark.kernel import polyline as pl
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                arrs = [
-                    np.asarray(l, dtype=np.float64).reshape(-1, 3)
-                    for l in r["loops"]
-                ]
-                preps = [lps.PreparedLoop(l) for l in arrs]
-                out_loops = []
-                for i, verts in enumerate(arrs):
-                    depth = sum(
-                        1
-                        for j, p in enumerate(preps)
-                        if j != i and bool(p.contains_points(verts[:1])[0])
-                    )
-                    radius = radius_rad if depth % 2 == 0 else -radius_rad
-                    try:
-                        out_loops.extend(
-                            pl.buffer_loop_exact(verts, radius, max_error)
-                        )
-                    except ValueError:
-                        if depth % 2 == 0:
-                            raise
-                        # hole annihilated by the shrink: drop it
-                rows.append(
-                    {
-                        id_col: r[id_col],
-                        "n_loops": len(out_loops),
-                        "area": bo.region_area(out_loops) if out_loops else 0.0,
-                        "loops": [l.ravel().tolist() for l in out_loops],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_loops", "area", "loops"]
+        preps = [lps.PreparedLoop(l) for l in arrs]
+        out_loops = []
+        for i, verts in enumerate(arrs):
+            depth = sum(
+                1
+                for j, p in enumerate(preps)
+                if j != i and bool(p.contains_points(verts[:1])[0])
             )
+            radius = radius_rad if depth % 2 == 0 else -radius_rad
+            try:
+                out_loops.extend(pl.buffer_loop_exact(verts, radius, max_error))
+            except ValueError:
+                if depth % 2 == 0:
+                    raise
+                # hole annihilated by the shrink: drop it
+        return out_loops
 
-    return polys.mapInPandas(run, schema=schema)
+    return _map_regions(polys, [id_col], ["loops"], buffer)
 
 
 def winding_regions(
@@ -231,30 +213,10 @@ def winding_regions(
     `rule` (positive/negative/non_zero/odd) comes back as XOR-nested CCW
     loops. Per-region work distributes in one mapInPandas
     (kernel/overlay.winding_operation, s2winding_operation.cc:560)."""
-    schema = f"{id_col} long, n_loops int, area double, loops array<array<double>>"
 
-    def run(batches):
-        from s2geo_spark.kernel import booleanop as bo
+    def wind(arrs):
         from s2geo_spark.kernel import overlay as ov
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                arrs = [
-                    np.asarray(l, dtype=np.float64).reshape(-1, 3)
-                    for l in r["loops"]
-                ]
-                res = ov.winding_operation(arrs, rule)
-                rows.append(
-                    {
-                        id_col: r[id_col],
-                        "n_loops": len(res),
-                        "area": bo.region_area(res) if res else 0.0,
-                        "loops": [l.ravel().tolist() for l in res],
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_loops", "area", "loops"]
-            )
+        return ov.winding_operation(arrs, rule)
 
-    return loops_df.mapInPandas(run, schema=schema)
+    return _map_regions(loops_df, [id_col], ["loops"], wind)

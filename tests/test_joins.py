@@ -637,12 +637,13 @@ class TestBooleanOps:
     def test_inclusion_exclusion_and_pip(self):
         from s2geo_spark.kernel import booleanop as bo
         from s2geo_spark.kernel import measures as m
+        from s2geo_spark.kernel import overlay
 
         A = loops.make_regular_loop(0.0, 0.0, 20.0, 128)
         B = loops.make_regular_loop(0.0, 15.0, 20.0, 128)
-        ai = bo.region_area(bo.loop_boolean(A, B, "intersection"))
-        au = bo.region_area(bo.loop_boolean(A, B, "union"))
-        ad = bo.region_area(bo.loop_boolean(A, B, "difference"))
+        ai = bo.region_area(overlay.overlay_boolean([A], [B], "intersection"))
+        au = bo.region_area(overlay.overlay_boolean([A], [B], "union"))
+        ad = bo.region_area(overlay.overlay_boolean([A], [B], "difference"))
         assert abs(au + ai - m.loop_area(A) - m.loop_area(B)) < 1e-9
         assert abs(ad - (m.loop_area(A) - ai)) < 1e-9
         rng = np.random.default_rng(5)
@@ -655,32 +656,35 @@ class TestBooleanOps:
             ("union", inA | inB),
             ("difference", inA & ~inB),
         ]:
-            got = bo.region_contains_points(bo.loop_boolean(A, B, op), v)
+            got = bo.region_contains_points(
+                overlay.overlay_boolean([A], [B], op), v
+            )
             assert (got == want).all(), op
 
     def test_no_crossing_cases(self):
         from s2geo_spark.kernel import booleanop as bo
         from s2geo_spark.kernel import measures as m
+        from s2geo_spark.kernel import overlay
 
         A = loops.make_regular_loop(0.0, 0.0, 20.0, 64)
         far = loops.make_regular_loop(60.0, 120.0, 5.0, 64)
         inner = loops.make_regular_loop(0.0, 0.0, 5.0, 64)
-        assert bo.loop_boolean(A, far, "intersection") == []
-        assert len(bo.loop_boolean(A, far, "union")) == 2
-        hole = bo.loop_boolean(A, inner, "difference")
+        assert overlay.overlay_boolean([A], [far], "intersection") == []
+        assert len(overlay.overlay_boolean([A], [far], "union")) == 2
+        hole = overlay.overlay_boolean([A], [inner], "difference")
         assert abs(
             bo.region_area(hole) - (m.loop_area(A) - m.loop_area(inner))
         ) < 1e-12
 
     def test_degenerate_resolves(self):
-        # round 3: shared-edge pairs route to the exact overlay instead of
-        # raising (kernel/overlay.py; full coverage in test_overlay.py)
-        from s2geo_spark.kernel import booleanop as bo
+        # shared-edge pairs resolve exactly instead of raising (full
+        # coverage in test_overlay.py)
+        from s2geo_spark.kernel import overlay
 
         A = loops.parse_loop_text("0:0, 0:10, 10:10, 10:0")
         B = loops.parse_loop_text("0:10, 0:20, 10:20, 10:10")  # shares an edge
-        assert bo.loop_boolean(A, B, "intersection") == []
-        assert len(bo.loop_boolean(A, B, "union")) == 1
+        assert overlay.overlay_boolean([A], [B], "intersection") == []
+        assert len(overlay.overlay_boolean([A], [B], "union")) == 1
 
 
 class TestFurthestAndClosestCell:

@@ -9,6 +9,7 @@ from s2geo_spark.kernel import (
     booleanop as bo,
     edges as ek,
     loops as lps,
+    overlay,
     polyline as pl,
     s2coords as sc,
 )
@@ -207,7 +208,7 @@ class TestWinding:
         assert ((w >= 2) == (inA & inB)).all()
         assert (bo.winding_contains_points([A, B], v, "odd") == (inA ^ inB)).all()
         # and against the stitched boolean results
-        uni = bo.loop_boolean(A, B, "union")
+        uni = overlay.overlay_boolean([A], [B], "union")
         assert (bo.region_contains_points(uni, v) == (w > 0)).all()
 
     def test_cw_hole_cancels(self):
@@ -256,13 +257,13 @@ class TestSnapRounding:
         assert not bo.loop_is_simple(bowtie)
 
     def test_degenerate_pair_resolves_exactly(self):
-        # loops sharing a border edge used to raise (round 2); they now
-        # route to the exact boundary-graph overlay (kernel/overlay.py)
+        # loops sharing a border edge used to raise (round 2); the
+        # boundary-graph overlay (kernel/overlay.py) resolves them exactly
         A = lps.parse_loop_text("0:0, 0:10, 10:10, 10:0")
         B = lps.parse_loop_text("0:10, 0:20, 10:20, 10:10")
         from s2geo_spark.kernel import measures as _m
 
-        u = bo.loop_boolean(A, B, "union")
+        u = overlay.overlay_boolean([A], [B], "union")
         assert len(u) == 1
         assert abs(
             bo.region_area(u) - _m.loop_area(A) - _m.loop_area(B)
@@ -295,7 +296,7 @@ class TestRegionBoolean:
             ("union", inA | inB),
             ("difference", inA & ~inB),
         ]:
-            res = bo.region_boolean([shell, hole], [B], op)
+            res = overlay.overlay_boolean([shell, hole], [B], op)
             assert (bo.region_contains_points(res, v) == want).all(), op
 
     def test_island_in_hole_and_two_sided(self):
@@ -321,7 +322,7 @@ class TestRegionBoolean:
                 ("union", ia | ib),
                 ("difference", ia & ~ib),
             ]:
-                res = bo.region_boolean(a_l, b_l, op)
+                res = overlay.overlay_boolean(a_l, b_l, op)
                 assert (bo.region_contains_points(res, v) == want).all(), op
 
 
