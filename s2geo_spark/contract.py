@@ -1481,10 +1481,6 @@ def q_closest_cell(spark, sf_dir):
         .filter(F.col("face") == 2)
         .select("label", "cell")
         .distinct()
-        # materialize the small index: the cell column's Catalyst tree is
-        # the whole encode expression, and the join's iterative rounds
-        # would otherwise re-expand it per round (planner blowup)
-        .localCheckpoint(eager=True)
     )
     res = knn_op.closest_cell_join(_nation_probes(spark, sf_dir), cells, k=_CC_K)
     return res.select(

@@ -132,17 +132,13 @@ def boolean_join(
         else:
             from s2geo_spark.operators import cellset
 
-            # cache the covering UDF outputs: set_intersections probes
-            # their distinct levels, and an uncached coverer would rerun
-            # per probe. The pair ids are tiny — eagerly checkpoint them
-            # and drop the covering cache right away (no session leak).
-            cov_a = region_covering_df(a_polys, a_id).cache()
-            cov_b = region_covering_df(b_polys, b_id).cache()
-            pairs = cellset.set_intersections(
-                cov_a, cov_b, a_id, b_id
-            ).localCheckpoint(eager=True)
-            cov_a.unpersist()
-            cov_b.unpersist()
+            # lazy checkpoints of the covering UDF outputs: set_intersections
+            # probes their distinct levels, and the first probe stores each
+            # covering once for the probe and the join that follow. No
+            # cache entry is taken; the blocks go with the result.
+            cov_a = region_covering_df(a_polys, a_id).localCheckpoint(eager=False)
+            cov_b = region_covering_df(b_polys, b_id).localCheckpoint(eager=False)
+            pairs = cellset.set_intersections(cov_a, cov_b, a_id, b_id)
     a = a_polys.select(
         F.col("polygon_id").alias(a_id), F.col("loops").alias("a_loops")
     )

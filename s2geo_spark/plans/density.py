@@ -86,9 +86,10 @@ def adaptive_partitioning(
     if not levels or levels[-1] != max_level:
         levels.append(max_level)
 
-    # the only frame derived from the (big) input — persist so the
-    # per-level branches below re-aggregate it, not the raw points
-    base = cell_density(points, max_level, cell_col).persist()
+    # the only frame derived from the (big) input — a lazy checkpoint, so
+    # the per-level branches below re-aggregate it, not the raw points,
+    # and no cache entry outlives the call
+    base = cell_density(points, max_level, cell_col).localCheckpoint(eager=False)
     aggs = {max_level: base}
     cur = base
     for lv in reversed(levels[:-1]):
@@ -124,9 +125,7 @@ def adaptive_partitioning(
             hot = agg_lv.filter(F.col("weight") > max_weight)
             hot_level = lv
 
-    pdf = out.toPandas()
-    base.unpersist()
-    return pdf
+    return out.toPandas()
 
 
 def salted_join(

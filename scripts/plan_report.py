@@ -2,7 +2,10 @@
 """Physical-plan audit: one row per contract query with the plan facts
 that matter at 100 TB — exchange count, join strategies, whether any
 parquet scan got pushed filters, and whether Python appears in the plan
-(ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas).
+(ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas), plus the
+number of Spark jobs that ran while the query was being constructed
+(eager work: checkpoints, collected gate inputs, isEmpty probes), which
+the final plan does not show.
 
 Writes PLANS.md at the repo root.  Streaming queries (which execute on
 construction) and the two queries that materialize indexes still report
@@ -30,11 +33,17 @@ def main():
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .getOrCreate()
     )
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    bus = sc._jsc.sc().listenerBus()
     rows = []
     for name, fn in entry.queries().items():
         try:
+            # each query's construction jobs carry its name as job group
+            sc.setJobGroup(name, name)
             df = fn(spark, sf_dir)
+            bus.waitUntilEmpty()
+            eager = len(sc.statusTracker().getJobIdsForGroup(name))
             plan = df._jdf.queryExecution().executedPlan().toString()
             pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
             py = sum(
@@ -57,6 +66,7 @@ def main():
                     "cart": plan.count("CartesianProduct"),
                     "pushed": pushed,
                     "python": py,
+                    "eager": eager,
                 }
             )
             print(f"{name}: ok", flush=True)
@@ -77,19 +87,22 @@ def main():
             " bounded/broadcast brute-force paths (knn fast path,"
             " embedding_topk's intentional BNLJ over 10 broadcast"
             " queries, single-row aggregate cross joins, bounded"
-            " polygon-pair enumeration).\n\n"
+            " polygon-pair enumeration).  Eager jobs: Spark jobs run while"
+            " the query was constructed (read from the status tracker by"
+            " job group).  Work behind a lazy checkpoint runs in the"
+            " action, and no column counts it.\n\n"
             "| query | exchanges | BHJ | SMJ | BNLJ | Cart | pushed-filter"
-            " scans | python stages |\n"
-            "|---|---|---|---|---|---|---|---|\n"
+            " scans | python stages | eager jobs |\n"
+            "|---|---|---|---|---|---|---|---|---|\n"
         )
         for r in rows:
             if "err" in r:
-                f.write(f"| {r['query']} | ERROR {r['err']} ||||||||\n")
+                f.write(f"| {r['query']} | ERROR {r['err']} |||||||||\n")
             else:
                 f.write(
                     f"| {r['query']} | {r['exchanges']} | {r['bhj']} |"
                     f" {r['smj']} | {r['bnlj']} | {r['cart']} |"
-                    f" {r['pushed']} | {r['python']} |\n"
+                    f" {r['pushed']} | {r['python']} | {r['eager']} |\n"
                 )
     bad = [r for r in rows if "err" in r]
     print(f"wrote PLANS.md ({len(rows)} queries, {len(bad)} errors)")

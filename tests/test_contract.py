@@ -100,8 +100,10 @@ def test_query_matches_oracle(spark, ddb, name):
     _assert_matches_oracle(spark, ddb, name)
 
 
-# the contract queries whose physical path turns on SPATIAL_BCAST_LIMIT,
-# and those of them that join a fixture layer's shape index
+# the contract queries whose physical path turns on SPATIAL_BCAST_LIMIT
+# (the kNN family's brute pass broadcasts its points, so at 0 it takes
+# the ring rounds), and those of them that join a fixture layer's shape
+# index
 BYTE_GATED = [
     "dedup_clusters",
     "dedup_jaccard_pairs",
@@ -109,13 +111,19 @@ BYTE_GATED = [
     "s2_boolean_degenerate",
     "s2_buffer_contains",
     "s2_edge_crossings",
+    "s2_furthest",
+    "s2_hausdorff",
+    "s2_knn",
     "s2_pip_counts",
     "s2_pip_join",
     "s2_pip_large",
     "s2_stream_tiles",
     "s2_winding_counts",
 ]
-INDEXED = set(BYTE_GATED) - {"dedup_clusters", "dedup_jaccard_pairs", "s2_edge_crossings"}
+INDEXED = set(BYTE_GATED) - {
+    "dedup_clusters", "dedup_jaccard_pairs", "s2_edge_crossings",
+    "s2_furthest", "s2_hausdorff", "s2_knn",
+}
 BROADCAST_OP = re.compile(r"Broadcast(Exchange|HashJoin|NestedLoopJoin)")
 
 

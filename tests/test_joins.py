@@ -783,6 +783,20 @@ class TestFurthestAndClosestCell:
         assert [(r["query_id"], r["label"]) for r in got] == [(0, 0), (0, 1)]
         assert got[0]["dist2"] == 0.0 and got[1]["dist2"] > 0.0
 
+    def test_closest_cell_empty_index(self, spark):
+        # like knn_join on no points: no rows, the same output schema
+        from s2geo_spark.kernel import cellid_v1 as v1
+
+        leaf = v1.from_latlng(np.array([47.0]), np.array([8.0]))
+        cells = spark.createDataFrame(
+            pd.DataFrame({"label": [0], "cell": v1.parent(leaf, 8).view(np.int64)})
+        )
+        q = spark.createDataFrame([(0, 47.0, 8.0)], "query_id long, lat double, lon double")
+        want = knn_op.closest_cell_join(q, cells, k=2)
+        got = knn_op.closest_cell_join(q, cells.limit(0), k=2)
+        assert got.schema == want.schema
+        assert got.collect() == []
+
     def test_distance_join_null_rows_drop(self, spark):
         from s2geo_spark.operators import distance
 
