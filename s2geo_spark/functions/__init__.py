@@ -2,7 +2,8 @@
 
 The one owner of the spatial vocabulary the operators share: unit
 vectors (xyz_cols), squared chord distances (chord2), cell rings
-(s2_ring) and term-indexer keys (quad_key, quad_terms).
+(s2_ring), term-indexer keys (quad_key, quad_terms) and ancestor terms
+(s2_ancestors).
 
 Design split (SURVEY.md §4.2):
 
@@ -47,6 +48,7 @@ __all__ = [
     "s2_v2_id",
     "s2_cell_center",
     "s2_parent",
+    "s2_ancestors",
     "s2_level_expr",
     "s2_range_min",
     "s2_range_max",
@@ -213,6 +215,25 @@ def s2_parent(cell, level: int) -> Column:
     new_lsb = 1 << (2 * (MAX_LEVEL - level))
     c = _col(cell)
     return (c.bitwiseAND(F.lit(-new_lsb))).bitwiseOR(F.lit(new_lsb))
+
+
+def s2_ancestors(cell, levels, strict: bool = False) -> Column:
+    """The cell's ancestors at each of `levels` no finer than the cell
+    (strictly coarser with `strict`), coarsest first: the ancestor terms
+    of S2RegionTermIndexer (src/s2/s2region_term_indexer.cc:121-289).
+
+    A null cell, and the id 0 that s2_cell_id gives a null or NaN
+    coordinate, have no level (log2 of a zero lsb is null), so they get
+    no terms."""
+    c = _col(cell)
+    lv = s2_level_expr(c)
+    return F.filter(
+        F.array(*[
+            F.when((F.lit(L) < lv) if strict else (F.lit(L) <= lv), s2_parent(c, L))
+            for L in sorted(levels)
+        ]),
+        lambda t: t.isNotNull(),
+    )
 
 
 def _lsb_expr(cell) -> Column:

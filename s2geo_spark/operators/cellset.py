@@ -2,20 +2,21 @@
 region×region term-indexer join (§2.4).
 
 A "cell set" relation is (set_id, cell) with cells forming a normalized
-union per set_id. All operations are joins/aggregations on the Hilbert
-ranges [range_min, range_max] (s2cell_id_v1.h:629-647) using the unsigned
-sort key — Catalyst-only, no Python:
+union per set_id. A cell lies inside a cell at level L iff its ancestor
+at L is that cell, so every containment test is a hash equi-join on
+ancestor terms (functions.s2_ancestors) — Catalyst-only, no Python, no
+range join:
 
-  * cells_contain_points  — points covered by a set (range join)
-  * set_contains_set      — A ⊇ B per (a, b) pair
-  * set_intersections     — all (a, b) pairs whose unions intersect, via
-    the reference's ancestor/covering term duality
+  * term_join             — the reference's index/query term duality
     (S2RegionTermIndexer GetIndexTerms/GetQueryTerms,
-    src/s2/s2region_term_indexer.cc:121-289): intersects(A, B) <=>
-    (covering(A) ∩ ancestors(B)) ∪ (ancestors(A) ∩ covering(B)) != ∅ —
-    ONE union of two hash equi-joins, no range join.
-  * set_union / set_intersection / set_difference — cell-level set algebra
-    (exploded; results re-normalized per set with the kernel)
+    src/s2/s2region_term_indexer.cc:121-289) as ONE equi-join that
+    matches every nested pair of cells once; set_intersections,
+    set_intersection_cells and knn.closest_cell_join's candidates are
+    thin calls on it
+  * cells_contain_points  — points covered by a set
+  * set_contains_set      — A ⊇ B per (a, b) pair
+  * set_union / set_difference — cell-level set algebra (exploded;
+    results re-normalized per set with the kernel)
 """
 
 from __future__ import annotations
@@ -28,45 +29,64 @@ from pyspark.sql import functions as F
 from s2geo_spark import functions as sf
 from s2geo_spark.memo import memo
 
-_SIGN = -(1 << 63)
-
 
 def cells_contain_points(cellsets: DataFrame, points: DataFrame,
                          set_id: str = "set_id", point_id: str = "point_id") -> DataFrame:
     """(set_id, point_id) pairs where the set's union covers the point's
-    leaf cell. Equi-join on the quantized ancestor when the set's levels
-    are few; generic range-join fallback kept simple here via ancestors."""
-    levels = _levels_of(cellsets)
+    leaf cell: one equi-join of the leaf's ancestors at the sets' levels
+    against the set cells. A point with a null or NaN lat or lon (leaf
+    id 0) has no ancestors, so it is inside no set."""
     pts = points.withColumn("leaf", sf.s2_cell_id("lat", "lon"))
-    anc = F.array(*[sf.s2_parent("leaf", L) for L in sorted(levels)])
-    terms = pts.withColumn("term", F.explode(anc))
-    cs = cellsets.withColumnRenamed("cell", "set_cell")
-    return (
-        terms.join(cs, terms["term"] == cs["set_cell"])
-        .select(set_id, point_id)
-        .distinct()
+    terms = pts.select(
+        point_id, F.explode(sf.s2_ancestors("leaf", _levels_of(cellsets))).alias("cell")
     )
+    return terms.join(cellsets, "cell").select(set_id, point_id).distinct()
 
 
-def _tagged_terms(df: DataFrame, id_col: str, anc_levels: list) -> DataFrame:
-    """One exploded table per side: the cell itself tagged cov=true plus
-    its ancestors at `anc_levels` tagged cov=false — a single pass over
-    the (possibly expensive, e.g. ring-UDF) input subtree."""
-    lv = sf.s2_level_expr("cell")
-    items = [
-        F.struct(F.col("cell").alias("term"), F.lit(True).alias("cov"))
-    ] + [
-        F.when(
-            F.lit(L) <= lv,
-            F.struct(sf.s2_parent("cell", L).alias("term"),
-                     F.lit(False).alias("cov")),
-        )
-        for L in sorted(anc_levels)
-    ]
-    arr = F.filter(F.array(*items), lambda c: c.isNotNull())
-    return df.select(id_col, F.explode(arr).alias("t")).select(
-        id_col, F.col("t.term").alias("term"), F.col("t.cov").alias("cov")
+def term_join(
+    a: DataFrame, b: DataFrame, levels_a: list | None = None,
+    levels_b: list | None = None, broadcast_side: str | None = None,
+) -> DataFrame:
+    """Every pair of an a row and a b row whose cells are nested, as ONE
+    hash equi-join: the reference's index/query term duality made
+    relational (two cells intersect iff one contains the other).
+
+    a and b each carry a `cell` column; their other columns are distinct
+    and pass through, and the two cells come out as `a_cell` and
+    `b_cell`. Each side is one pass over its (often an uncached UDF
+    output) input: posexplode of [cell] ++ functions.s2_ancestors(cell,
+    the other side's levels), position 0 being the covering term — an
+    ancestor term can only equi-match a cell at that cell's own level,
+    so the explode factor is the other side's distinct level count. A
+    term matches when exactly one of the two is a covering term. a's
+    ancestors include its own level and b's are strictly coarser, so a
+    nested pair matches exactly once and equal cells match once.
+
+    levels_a/levels_b default to a probe of the side (_levels_of); a
+    caller that already knows them (crossing_join's ring levels come
+    from a pure-JVM expression) passes them. broadcast_side ("a"/"b")
+    lets a caller that KNOWS one side is small (size-gated upstream)
+    ship that side's terms to every task, so the big side's exploded
+    terms never shuffle."""
+    lv_a = _levels_of(a) if levels_a is None else levels_a
+    lv_b = _levels_of(b) if levels_b is None else levels_b
+
+    def terms(df, side, levels, strict):
+        arr = F.concat(F.array("cell"), sf.s2_ancestors("cell", levels, strict))
+        return df.select(
+            "*", F.posexplode(arr).alias(f"{side}_pos", f"{side}_term")
+        ).withColumnRenamed("cell", f"{side}_cell")
+
+    at = terms(a, "a", lv_b, strict=False)
+    bt = terms(b, "b", lv_a, strict=True)
+    if broadcast_side == "a":
+        at = F.broadcast(at)
+    elif broadcast_side == "b":
+        bt = F.broadcast(bt)
+    cond = (F.col("a_term") == F.col("b_term")) & (
+        (F.col("a_pos") == 0) != (F.col("b_pos") == 0)
     )
+    return at.join(bt, cond).drop("a_pos", "a_term", "b_pos", "b_term")
 
 
 def set_intersections(
@@ -74,54 +94,28 @@ def set_intersections(
     levels_a: list | None = None, levels_b: list | None = None,
     broadcast_side: str | None = None,
 ) -> DataFrame:
-    """All (a_id, b_id) pairs whose cell unions intersect.
-
-    Two unions intersect iff some cell of one contains a cell of the other
-    — i.e. covering(A) matches an ancestor-term of B or vice versa (the
-    reference's index/query term duality made relational). Both match
-    directions run as ONE hash equi-join on the term with a cov(A) !=
-    cov(B) residual over tagged term tables, so each side's input subtree
-    (often an uncached UDF output) is computed once, not twice, and the
-    plan has a single join instead of two joins + union.
-
-    A side's ancestor terms are generated only at the levels actually
-    present on the OTHER side (a term can only equi-match a cell at that
-    cell's own level), so the explode factor is the other side's distinct
-    level count, not the span of levels. Callers that
-    already know their level sets (e.g. crossing_join, whose ring levels
-    come from a pure-JVM expression) pass levels_a/levels_b to skip the
-    probe. broadcast_side ("a"/"b") lets a caller that KNOWS one layer is
-    small (size-gated upstream) ship that side's terms to every task —
-    the big side's exploded terms then never shuffle."""
-    lv_a = levels_a if levels_a is not None else _levels_of(a)
-    lv_b = levels_b if levels_b is not None else _levels_of(b)
-    at = _tagged_terms(a, a_id, lv_b)
-    bt = _tagged_terms(b, b_id, lv_a)
-    if broadcast_side == "a":
-        at = F.broadcast(at)
-    elif broadcast_side == "b":
-        bt = F.broadcast(bt)
-    cond = (at["term"] == bt["term"]) & (at["cov"] != bt["cov"])
-    return at.join(bt, cond).select(a_id, b_id).distinct()
+    """All (a_id, b_id) pairs whose cell unions intersect: some cell of
+    one contains a cell of the other (term_join; the level and broadcast
+    arguments are its)."""
+    return (
+        term_join(a, b, levels_a, levels_b, broadcast_side)
+        .select(a_id, b_id)
+        .distinct()
+    )
 
 
 def set_contains_set(
     a: DataFrame, b: DataFrame, a_id: str = "a_id", b_id: str = "b_id"
 ) -> DataFrame:
     """(a_id, b_id) pairs where union A fully contains union B: every cell
-    of B must fall inside some cell of A. Anti-join of the uncovered-cell
-    set against all candidate pairs."""
+    of B must fall inside some cell of A. Each B cell's ancestors at A's
+    levels are equi-joined against A's cells, and a pair qualifies when
+    its covered B cells number all of B's."""
     b_sizes = b.groupBy(b_id).agg(F.count("*").alias("n_b"))
-    # covered (a, b_cell) pairs via ancestor equi-join on A's levels
-    levels = _levels_of(a)
-    anc = F.filter(
-        F.array(*[
-            F.when(F.lit(L) <= sf.s2_level_expr("cell"), sf.s2_parent("cell", L))
-            for L in sorted(levels)
-        ]),
-        lambda c: c.isNotNull(),
+    b_terms = b.select(
+        b_id, F.col("cell").alias("b_cell"),
+        F.explode(sf.s2_ancestors("cell", _levels_of(a))).alias("term"),
     )
-    b_terms = b.select(b_id, F.col("cell").alias("b_cell"), F.explode(anc).alias("term"))
     a_cov = a.select(F.col(a_id), F.col("cell").alias("term"))
     covered = (
         b_terms.join(a_cov, "term")
@@ -179,40 +173,14 @@ def set_intersection_cells(
     """Cell-level intersection of each (a, b) pair: the finer cell survives
     where one side's cell contains the other's (s2cell_union.cc:351-418).
 
-    Relational plan: hash equi-joins on quantized ancestors — a cell of A
-    lies inside a cell of B iff A's ancestor at B's level equals B's cell.
-    Two equi-joins (a-inside-b at levels(B), strictly-b-inside-a at
-    levels(A)), no cartesian product; the strict second branch keeps the
-    equal-cell case single-counted. Shuffles scale with |A|·levels(B), not
-    |A|·|B|."""
-    lv_a = sf.s2_level_expr("cell")
-
-    def anc_terms(df, keep_id, other_levels, strict):
-        arr = F.filter(
-            F.array(*[
-                F.when(
-                    (F.lit(L) < lv_a) if strict else (F.lit(L) <= lv_a),
-                    sf.s2_parent("cell", L),
-                )
-                for L in other_levels
-            ]),
-            lambda c: c.isNotNull(),
-        )
-        return df.select(
-            F.col(keep_id), F.col("cell"), F.explode(arr).alias("term")
-        )
-
-    levels_b = _levels_of(b)
-    levels_a = _levels_of(a)
-    # branch 1: a_cell inside (or equal to) some b_cell
-    a_terms = anc_terms(a, a_id, levels_b, strict=False)
-    b_side = b.select(F.col(b_id), F.col("cell").alias("term"))
-    p1 = a_terms.join(b_side, "term").select(a_id, b_id, "cell")
-    # branch 2: b_cell STRICTLY inside some a_cell (equality handled above)
-    b_terms = anc_terms(b, b_id, levels_a, strict=True)
-    a_side = a.select(F.col(a_id), F.col("cell").alias("term"))
-    p2 = b_terms.join(a_side, "term").select(a_id, b_id, "cell")
-    return p1.unionByName(p2)
+    One term_join, no cartesian product and no union of two joins: each
+    nested pair of cells matches once, so normalized inputs give no
+    duplicate rows. Shuffles scale with |A|·levels(B) + |B|·levels(A),
+    not |A|·|B|."""
+    finer = F.when(
+        sf.s2_level_expr("a_cell") >= sf.s2_level_expr("b_cell"), F.col("a_cell")
+    ).otherwise(F.col("b_cell"))
+    return term_join(a, b).select(a_id, b_id, finer.alias("cell"))
 
 
 def set_difference(

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from s2geo_spark import functions as sf
 from s2geo_spark.kernel import metrics
-from s2geo_spark.operators import spatial
+from s2geo_spark.operators import cellset, spatial
 
 # density tiers of the ring path: points are counted per PROBE_LEVEL cell;
 # N_TIERS start levels 2 apart (16x density); a query moves one tier finer
@@ -79,7 +79,7 @@ def _ring_rounds(remaining, start_levels, k, query_id, candidates, ties):
 
     remaining: (query_id, lat, lon, lvl, ...) with each lvl in
     start_levels. Each round explodes the remaining queries to one row
-    per cell `rc` of their functions.s2_ring at lvl and asks
+    per cell `cell` of their functions.s2_ring at lvl and asks
     candidates(ring, levels) (levels: the round's distinct lvl values)
     for candidate rows with a dist2 column; it keeps the top k per query
     by (dist2, *ties). A query resolves when it has k candidates and the
@@ -97,7 +97,7 @@ def _ring_rounds(remaining, start_levels, k, query_id, candidates, ties):
     results = []
     for r in range(n_rounds):
         levels = sorted({max(L - 2 * r, 0) for L in start_levels})
-        ring = remaining.withColumn("rc", F.explode(sf.s2_ring("lat", "lon", "lvl")))
+        ring = remaining.withColumn("cell", F.explode(sf.s2_ring("lat", "lon", "lvl")))
         # per-level resolution bound as a column expression
         bound = F.lit(_safe_chord2(levels[-1]))
         for L in levels[:-1]:
@@ -241,10 +241,8 @@ def knn_join(
     def candidates(ring, levels):
         # point terms at every level of the round (cell ids encode their
         # level, so cross-level matches are impossible)
-        pterm = p.withColumn(
-            "pc", F.explode(F.array(*[sf.s2_parent("pcell", L) for L in levels]))
-        )
-        return ring.join(pterm, F.col("rc") == F.col("pc"), "inner").withColumn(
+        pterm = p.withColumn("pc", F.explode(sf.s2_ancestors("pcell", levels)))
+        return ring.join(pterm, F.col("cell") == F.col("pc"), "inner").withColumn(
             "dist2", sf.chord2(_P_XYZ, _Q_XYZ)
         )
 
@@ -295,34 +293,30 @@ def closest_cell_join(
     s2closest_cell_query.cc:117): cells is (label, cell) — an S2CellIndex
     relation, mixed levels allowed.
 
-    Plan: per-cell catchment = the cell's own ring at its own level
-    (equi-join key: query ancestor at that level); unresolved queries
-    iterate with coarser rings exactly like knn_join; the residual
-    distance is the EXACT point-to-cell chord distance
-    (cells.distance2_to_points, s2cell.cc:369-430), not the center
-    approximation. Terminal round joins every cell (face-level ring).
-    Queries with a null or NaN lat or lon drop."""
+    Plan: each query's first ring (functions.s2_ring) is at the index's
+    finest level (cellset._levels_of); its candidates are the index
+    cells nested with a ring cell, one cellset.term_join of the index
+    against the ring. Unresolved queries iterate with coarser rings
+    exactly like knn_join; the residual distance is the EXACT
+    point-to-cell chord distance (cells.distance2_to_points,
+    s2cell.cc:369-430), not the center approximation. The terminal
+    round's face-level ring nests with every cell. Queries with a null
+    or NaN lat or lon drop."""
     q = sf.xyz_cols(queries.dropna(subset=["lat", "lon"]), names=_Q_XYZ).select(
         query_id, "lat", "lon", *_Q_XYZ
     )
     # a lazy checkpoint: the level probe and every round read one copy
     # of the index, and a caller's cell expression is planned once
-    c = (
-        cells.select(cell_label, F.col("cell").alias("tcell"))
-        .withColumn("tlvl", sf.s2_level_expr("tcell"))
-        .localCheckpoint(eager=False)
-    )
-    levels = sorted(
-        int(r["tlvl"]) for r in c.select("tlvl").distinct().collect()
-    )
+    c = cells.select(cell_label, "cell").localCheckpoint(eager=False)
+    levels = cellset._levels_of(c)
     # an empty index runs one face-level round with no candidates
     top = max(levels, default=0)
 
     @F.pandas_udf("double")
-    def cell_dist2(tcell: pd.Series, qx: pd.Series, qy: pd.Series, qz: pd.Series) -> pd.Series:
+    def cell_dist2(cell: pd.Series, qx: pd.Series, qy: pd.Series, qz: pd.Series) -> pd.Series:
         from s2geo_spark.kernel import cells as _cl
 
-        ids = tcell.to_numpy(dtype=np.int64).view(np.uint64)
+        ids = cell.to_numpy(dtype=np.int64).view(np.uint64)
         return pd.Series(
             _cl.distance2_to_points(
                 ids, qx.to_numpy(), qy.to_numpy(), qz.to_numpy()
@@ -330,34 +324,18 @@ def closest_cell_join(
         )
 
     def candidates(ring, round_levels):
-        (lvl,) = round_levels  # every query starts at, and moves with, top
-        # two-sided term duality (cells intersect iff one contains the
-        # other): ring side emits rc + rc's ancestors at coarser TARGET
-        # levels; target side emits tcell + its ancestors at the ring
-        # level. Spurious equal-ancestor matches are harmless — the exact
-        # distance residual filters them.
-        qterms = F.array_distinct(
-            F.array("rc", *[sf.s2_parent("rc", tl) for tl in levels if tl < lvl])
-        )
-        tterms = F.array_distinct(
-            F.filter(
-                F.array(
-                    F.col("tcell"),
-                    F.when(F.lit(lvl) <= F.col("tlvl"), sf.s2_parent("tcell", lvl)),
-                ),
-                lambda x: x.isNotNull(),
-            )
-        )
-        qt = ring.withColumn("qt", F.explode(qterms)).drop("rc")
-        tt = c.withColumn("tt", F.explode(tterms))
+        # the index cells nested with a ring cell (cells intersect iff one
+        # contains the other): the index side is term_join's a, the ring
+        # its b. An index cell nested with several of a query's ring
+        # cells matches once per ring cell, so the pairs are deduplicated
+        # before the exact distance UDF runs on them.
         return (
-            qt.join(tt, F.col("qt") == F.col("tt"), "inner")
-            .drop("qt", "tt")
-            .withColumn("dist2", cell_dist2("tcell", "qx", "qy", "qz"))
-            .dropDuplicates([query_id, cell_label, "tcell"])
+            cellset.term_join(c, ring, levels, round_levels)
+            .dropDuplicates([query_id, cell_label, "a_cell"])
+            .withColumn("dist2", cell_dist2("a_cell", "qx", "qy", "qz"))
         )
 
     return _ring_rounds(
         q.withColumn("lvl", F.lit(top)), [top], k, query_id,
-        candidates, [cell_label, "tcell"],
-    ).withColumnRenamed("tcell", "cell")
+        candidates, [cell_label, "a_cell"],
+    ).withColumnRenamed("a_cell", "cell")

@@ -5,7 +5,11 @@ parquet scan got pushed filters, and whether Python appears in the plan
 (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas), plus the
 number of Spark jobs that ran while the query was being constructed
 (eager work: checkpoints, collected gate inputs, isEmpty probes), which
-the final plan does not show.
+the final plan does not show.  Each local checkpoint taken while the
+query is constructed, eager or lazy, registers a SQL execution whose
+plan is the checkpointed subtree; the final plan reads it as an RDD
+scan, so its operators are read from the status store's plan graph
+(final plan only, each operator once) and added to the row.
 
 Writes PLANS.md at the repo root.  Streaming queries (which execute on
 construction) and the two queries that materialize indexes still report
@@ -18,6 +22,40 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+# the call site of a SQL execution registered by Dataset.localCheckpoint
+CHECKPOINT_SITE = "org.apache.spark.sql.classic.Dataset.localCheckpoint("
+PYTHON_OPS = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython")
+
+
+def plan_counts(plan: str) -> dict:
+    """Operator counts of one plan's text."""
+    return {
+        "exchanges": plan.count("Exchange hashpartitioning")
+        + plan.count("Exchange rangepartitioning"),
+        "bhj": plan.count("BroadcastHashJoin"),
+        "smj": plan.count("SortMergeJoin"),
+        "bnlj": plan.count("BroadcastNestedLoopJoin"),
+        "cart": plan.count("CartesianProduct"),
+        "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
+        "python": sum(plan.count(t) for t in PYTHON_OPS),
+    }
+
+
+def checkpoint_plans(store, mark: int) -> list:
+    """The plan of every local checkpoint registered after execution
+    `mark`, one line per operator of its plan graph (for an adaptive plan
+    the graph holds the current plan only, so no operator is listed
+    twice)."""
+    execs, plans = store.executionsList(), []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= mark:
+            break
+        if e.details().startswith(CHECKPOINT_SITE):
+            nodes = store.planGraph(e.executionId()).allNodes()
+            plans.append("\n".join(nodes.apply(j).desc() for j in range(nodes.size())))
+    return plans
 
 
 def main():
@@ -36,38 +74,25 @@ def main():
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
     rows = []
     for name, fn in entry.queries().items():
         try:
+            bus.waitUntilEmpty()
+            execs = store.executionsList()
+            mark = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
             # each query's construction jobs carry its name as job group
             sc.setJobGroup(name, name)
             df = fn(spark, sf_dir)
             bus.waitUntilEmpty()
             eager = len(sc.statusTracker().getJobIdsForGroup(name))
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            pushed = len(re.findall(r"PushedFilters: \[[^\]]", plan))
-            py = sum(
-                plan.count(t)
-                for t in (
-                    "ArrowEvalPython",
-                    "MapInPandas",
-                    "FlatMapGroupsInPandas",
-                    "BatchEvalPython",
-                )
-            )
+            checkpoints = checkpoint_plans(store, mark)
+            row = plan_counts(df._jdf.queryExecution().executedPlan().toString())
+            for plan in checkpoints:
+                for key, n in plan_counts(plan).items():
+                    row[key] += n
             rows.append(
-                {
-                    "query": name,
-                    "exchanges": plan.count("Exchange hashpartitioning")
-                    + plan.count("Exchange rangepartitioning"),
-                    "bhj": plan.count("BroadcastHashJoin"),
-                    "smj": plan.count("SortMergeJoin"),
-                    "bnlj": plan.count("BroadcastNestedLoopJoin"),
-                    "cart": plan.count("CartesianProduct"),
-                    "pushed": pushed,
-                    "python": py,
-                    "eager": eager,
-                }
+                dict(row, query=name, eager=eager, checkpoints=len(checkpoints))
             )
             print(f"{name}: ok", flush=True)
         except Exception as ex:  # noqa: BLE001 — audit must report all
@@ -89,20 +114,26 @@ def main():
             " queries, single-row aggregate cross joins, bounded"
             " polygon-pair enumeration).  Eager jobs: Spark jobs run while"
             " the query was constructed (read from the status tracker by"
-            " job group).  Work behind a lazy checkpoint runs in the"
-            " action, and no column counts it.\n\n"
+            " job group).  Checkpoints: local checkpoints, eager or"
+            " lazy, taken while the query was constructed.  Each one"
+            " registers a SQL execution whose plan is the checkpointed"
+            " subtree, which the final plan reads as an RDD scan; the"
+            " operator columns add the operators of those plans (the"
+            " final plan of each, every operator once) to the final"
+            " plan's.\n\n"
             "| query | exchanges | BHJ | SMJ | BNLJ | Cart | pushed-filter"
-            " scans | python stages | eager jobs |\n"
-            "|---|---|---|---|---|---|---|---|---|\n"
+            " scans | python stages | eager jobs | checkpoints |\n"
+            "|---|---|---|---|---|---|---|---|---|---|\n"
         )
         for r in rows:
             if "err" in r:
-                f.write(f"| {r['query']} | ERROR {r['err']} |||||||||\n")
+                f.write(f"| {r['query']} | ERROR {r['err']} ||||||||||\n")
             else:
                 f.write(
                     f"| {r['query']} | {r['exchanges']} | {r['bhj']} |"
                     f" {r['smj']} | {r['bnlj']} | {r['cart']} |"
-                    f" {r['pushed']} | {r['python']} | {r['eager']} |\n"
+                    f" {r['pushed']} | {r['python']} | {r['eager']} |"
+                    f" {r['checkpoints']} |\n"
                 )
     bad = [r for r in rows if "err" in r]
     print(f"wrote PLANS.md ({len(rows)} queries, {len(bad)} errors)")

@@ -212,12 +212,14 @@ def test_no_limit_default_arguments():
 # Catalyst degrees -> radians (the unit-vector transform's first step)
 # and the ring-cell kernel
 VOCABULARY = {("pyspark.sql.functions", "radians"), ("s2geo_spark.kernel.cellid_v1", "ring_cells")}
+_COMPREHENSIONS = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
 
 
 def _vocabulary_uses(tree):
     """Names in VOCABULARY the code imports or reads as an attribute of a
     module alias (`F.radians`, `v1.ring_cells`, `from ... import
-    radians`)."""
+    radians`), and s2_parent called in a comprehension: an ancestor-term
+    array, which functions.s2_ancestors builds."""
     modules = {}
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
@@ -235,6 +237,12 @@ def _vocabulary_uses(tree):
             and (modules.get(node.value.id), node.attr) in VOCABULARY
         ):
             yield node.attr
+        elif isinstance(node, _COMPREHENSIONS):
+            for call in ast.walk(node):
+                if isinstance(call, ast.Call) and "s2_parent" in (
+                    getattr(call.func, "attr", None), getattr(call.func, "id", None)
+                ):
+                    yield "s2_parent"
 
 
 @pytest.mark.parametrize(
@@ -243,15 +251,18 @@ def _vocabulary_uses(tree):
      "import pyspark.sql.functions as G\nG.radians(c)",
      "from pyspark.sql.functions import radians",
      "from s2geo_spark.kernel import cellid_v1 as v1\nv1.ring_cells(a, b)",
-     "from s2geo_spark.kernel.cellid_v1 import ring_cells"],
+     "from s2geo_spark.kernel.cellid_v1 import ring_cells",
+     "F.array(*[sf.s2_parent('cell', L) for L in levels])",
+     "F.array(*(s2_parent(c, L) for L in levels))"],
 )
 def test_guard_catches_vocabulary(src):
     assert list(_vocabulary_uses(ast.parse(src))) != []
 
 
 def test_vocabulary_lives_in_functions():
-    """Unit vectors and rings are built by functions.xyz_cols and
-    functions.s2_ring; operators call them instead of re-deriving them."""
+    """Unit vectors, rings and ancestor terms are built by
+    functions.xyz_cols, functions.s2_ring and functions.s2_ancestors;
+    operators call them instead of re-deriving them."""
     pkg = pathlib.Path(s2geo_spark.__file__).parent
     found = [
         f"{path.relative_to(pkg)}:{name}"
@@ -259,7 +270,7 @@ def test_vocabulary_lives_in_functions():
         if path.relative_to(pkg).parts[0] not in ("functions", "kernel")
         for name in _vocabulary_uses(ast.parse(path.read_text()))
     ]
-    assert found == [], "use functions.xyz_cols / s2_ring: " + ", ".join(found)
+    assert found == [], "use functions.xyz_cols / s2_ring / s2_ancestors: " + ", ".join(found)
 
 
 def test_entry_runs(spark):
